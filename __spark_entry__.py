@@ -766,8 +766,9 @@ _add(
 # --------------------------------------------------------------------------
 
 def _q_doc_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring containment via sampled grams + suffix-array verify —
-    finds exactly the true containments, so the O(n^2) SQL oracle matches."""
+    """Substring containment via sampled grams + JVM instr verify (tiny
+    docs: in-kernel verify) — finds exactly the true containments, so the
+    O(n^2) SQL oracle matches."""
     from pyspark.sql import functions as F
 
     from transcript_dedup.config import DedupConfig
@@ -1643,23 +1644,29 @@ def _transcript_decisions_es_oracle() -> str:
 """
 
 
+# the DedupConfig fields oracle.build_records reads to produce the exported
+# columns (minhash, simhash, n_shingles); the path hashes only these plus the
+# kernel version, so adding or removing any other config field leaves the
+# path — and the transcript_decisions oracle SQL that embeds it — unchanged
+_SIG_EXPORT_FIELDS = ("shingle_k", "num_perm", "minhash_seed", "minhash_width")
+
+
 def _sigs_parquet_path() -> str:
-    """Signature-export path keyed by a fingerprint of the FULL config plus
-    a kernel version tag, so no signature-relevant change (num_perm, width,
-    shingle_k, minhash_seed, or the kernel itself) can ever pair a stale
-    export with a fresh engine run."""
+    """Signature-export path keyed by a fingerprint of the signature
+    fields of the config plus a kernel version tag, so no
+    signature-relevant change (num_perm, width, shingle_k, minhash_seed,
+    or the kernel itself) can ever pair a stale export with a fresh engine
+    run."""
     import hashlib
     import json
-    from dataclasses import asdict
 
     from transcript_dedup.config import DedupConfig
     from transcript_dedup.signatures import KERNEL_VERSION
 
     cfg = DedupConfig()
+    sig = {f: getattr(cfg, f) for f in _SIG_EXPORT_FIELDS}
     fp = hashlib.sha256(
-        json.dumps(
-            {"cfg": asdict(cfg), "kernel": KERNEL_VERSION}, sort_keys=True, default=str
-        ).encode()
+        json.dumps({"cfg": sig, "kernel": KERNEL_VERSION}, sort_keys=True).encode()
     ).hexdigest()[:12]
     return f"/tmp/transcript_dedup_sigs_seed42_n200_{fp}.parquet"
 

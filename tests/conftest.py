@@ -1,10 +1,18 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from transcript_dedup.config import DedupConfig
 from transcript_dedup.generate import generate_corpus
 from transcript_dedup.session import get_spark
+
+# the local-mode driver JVM hosts every executor thread; the fixtures are at
+# most a few thousand conversations, so cap its heap well below the
+# library's cluster-sized default (a 32g heap on a 16 GB machine grows until
+# the machine runs out of memory). Subprocess tests inherit the setting.
+os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
 
 
 @pytest.fixture(scope="session")

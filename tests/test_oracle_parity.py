@@ -82,3 +82,30 @@ def test_components_sql_oracle_parity(spark):
     )
     want = {tuple(r) for r in con.execute(E._COMPONENTS_ORACLE).fetchall()}
     assert got == want
+
+
+def test_sig_export_path_keys_on_signature_fields_only(monkeypatch):
+    """The transcript_decisions oracle SQL embeds the signature-export path,
+    so a config field the export does not depend on (added, removed or
+    re-defaulted) must not move it; a signature field or the kernel version
+    must."""
+    import dataclasses
+    import functools
+
+    import __spark_entry__ as E
+    from transcript_dedup import config, signatures
+
+    base = E._sigs_parquet_path()
+    cls = config.DedupConfig
+    extra = dataclasses.make_dataclass(
+        "ExtraConfig", [("future_knob", int, 7)], bases=(cls,), frozen=True
+    )
+    for variant in (extra, functools.partial(cls, jaccard_threshold=0.9, cc_max_iters=3)):
+        monkeypatch.setattr(config, "DedupConfig", variant)
+        assert E._sigs_parquet_path() == base
+    for field, value in (("shingle_k", 4), ("minhash_seed", 1), ("minhash_width", 32)):
+        monkeypatch.setattr(config, "DedupConfig", functools.partial(cls, **{field: value}))
+        assert E._sigs_parquet_path() != base, field
+    monkeypatch.setattr(config, "DedupConfig", cls)
+    monkeypatch.setattr(signatures, "KERNEL_VERSION", "other-kernel")
+    assert E._sigs_parquet_path() != base

@@ -1,21 +1,19 @@
 """Physical-execution config knobs must never change results.
 
-`hydration_join` picks the verify-stage join strategy and `lsh_cache_keys`
-persists the band-key frame — both are plan-level choices; the emitted
+`pair_gen_partitions` only places the LSH pair explosion; the emitted
 candidate pairs, scores, and decisions must be bit-identical across every
-combination (the round-3 bench claims rest on this invariance).
+setting. The plan-shape gates render the pairs stage exactly as every
+pipeline path composes it (pipeline.detect_pairs).
 """
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import functions as F
 
-from transcript_dedup.detectors import (
-    exact_candidates,
-    lsh_candidates,
-    substring_candidates,
-    verify_candidates,
-)
+from transcript_dedup.detectors import exact_candidates, verify_candidates
+from transcript_dedup.pipeline import detect_pairs
 from transcript_dedup.reconstruct import reconstruct_conversations
 from transcript_dedup.signatures import add_signatures
 
@@ -23,27 +21,19 @@ from transcript_dedup.signatures import add_signatures
 def _pairs_fingerprint(spark, turns, cfg):
     conv = add_signatures(reconstruct_conversations(turns), cfg).persist()
     conv.count()
-    cand = (
-        exact_candidates(conv)
-        .unionByName(lsh_candidates(conv, cfg, None))
-        .unionByName(substring_candidates(conv, cfg, None, verify_mode="instr"))
-    )
-    pairs = verify_candidates(cand, conv, cfg)
-    row = pairs.agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("is_match").cast("long")).alias("m"),
-        F.expr("bit_xor(xxhash64(conv_a, conv_b, confidence, suggested_keep))").alias("h"),
-    ).collect()[0]
+    with detect_pairs(conv, cfg) as pairs:
+        row = pairs.agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("is_match").cast("long")).alias("m"),
+            F.expr("bit_xor(xxhash64(conv_a, conv_b, confidence, suggested_keep))").alias("h"),
+        ).collect()[0]
     conv.unpersist()
     return (int(row["n"]), int(row["m"]), int(row["h"]))
 
 
-def test_hydration_and_keycache_variants_identical(spark, turns200, cfg):
+def test_pair_gen_partitions_variants_identical(spark, turns200, cfg):
     variants = [
-        cfg.with_(hydration_join="auto", lsh_cache_keys=False),
-        cfg.with_(hydration_join="shuffle_hash", lsh_cache_keys=False),
-        cfg.with_(hydration_join="auto", lsh_cache_keys=True),
-        cfg.with_(hydration_join="shuffle_hash", lsh_cache_keys=True),
+        cfg,
         # pair_gen_partitions inserts a round-robin exchange before the LSH
         # pair explosion — placement only, the pair set must not move
         # (-1 auto is the default; 0 is the fused pre-round-6 plan)
@@ -53,38 +43,6 @@ def test_hydration_and_keycache_variants_identical(spark, turns200, cfg):
     ]
     fps = {_pairs_fingerprint(spark, turns200, c) for c in variants}
     assert len(fps) == 1, f"physical config changed results: {fps}"
-
-
-def test_split_hydration_bit_identical(spark, turns200, cfg):
-    """cfg.split_hydration routes content-equal pairs through a light
-    (array-free) hydration sub-path — the 100 TB posture where degenerate
-    exact-dup cliques dominate the pair mass. Every emitted value
-    (est_jaccard, hamming, confidence, match_reasons, suggested_keep) must
-    be bit-identical to the single-pass plan."""
-    conv = add_signatures(reconstruct_conversations(turns200), cfg).persist()
-    conv.count()
-
-    def rows(c):
-        cand = (
-            exact_candidates(conv)
-            .unionByName(lsh_candidates(conv, c, None))
-            .unionByName(substring_candidates(conv, c, None, verify_mode="instr"))
-        )
-        out = verify_candidates(cand, conv, c)
-        return {
-            (
-                r["conv_a"], r["conv_b"], r["is_match"], r["confidence"],
-                round(r["est_jaccard"], 9), r["hamming"],
-                tuple(r["match_reasons"]), r["suggested_keep"],
-            )
-            for r in out.collect()
-        }
-
-    base = rows(cfg.with_(split_hydration=False))
-    split = rows(cfg.with_(split_hydration=True))
-    conv.unpersist()
-    assert base, "vacuous: no candidate pairs"
-    assert base == split
 
 
 def test_pipeline_plan_shape_gate(spark, turns200, cfg):
@@ -99,20 +57,17 @@ def test_pipeline_plan_shape_gate(spark, turns200, cfg):
     in BENCH/PLANS.md by tools/explain_plans.py."""
     # assert under BOTH AQE settings: the library session default runs AQE
     # on; the local-mode bench pipeline runs AQE off (round-7, measured
-    # stage-wave latency). The 100 TB-audit properties must hold in both.
+    # stage-wave latency). The 100 TB-audit properties must hold in both,
+    # with the LSH hot-key pre-pass on (corpus size unknown, or above
+    # cfg.band_hot_prepass_min_rows) and off (the pipeline's known n_conv).
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
     try:
-        for aqe in ("true", "false"):
+        for aqe, n_conv in itertools.product(("true", "false"), (None, 200)):
             spark.conf.set("spark.sql.adaptive.enabled", aqe)
             conv = add_signatures(reconstruct_conversations(turns200), cfg)
-            cand = (
-                exact_candidates(conv)
-                .unionByName(lsh_candidates(conv, cfg, None))
-                .unionByName(substring_candidates(conv, cfg, None, verify_mode="instr"))
-            )
-            pairs = verify_candidates(cand, conv, cfg)
-            plan = pairs._jdf.queryExecution().executedPlan().toString()
-            ctx = f" (aqe={aqe})"
+            with detect_pairs(conv, cfg, n_conv=n_conv) as pairs:
+                plan = pairs._jdf.queryExecution().executedPlan().toString()
+            ctx = f" (aqe={aqe}, n_conv={n_conv})"
             assert "CartesianProduct" not in plan, "cartesian join regressed" + ctx
             assert "BroadcastNestedLoopJoin" not in plan, "BNLJ regressed" + ctx
             assert "ShuffledHashJoin" in plan, "hydration lost shuffle_hash pin" + ctx
@@ -124,7 +79,7 @@ def test_pipeline_plan_shape_gate(spark, turns200, cfg):
 def test_shuffle_hash_join_in_plan(spark, turns200, cfg):
     conv = add_signatures(reconstruct_conversations(turns200), cfg)
     cand = exact_candidates(conv)
-    pairs = verify_candidates(cand, conv, cfg.with_(hydration_join="shuffle_hash"))
+    pairs = verify_candidates(cand, conv, cfg)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin" in plan
     assert "BroadcastHashJoin" not in plan

@@ -9,8 +9,8 @@ import pandas as pd
 import pytest
 
 from transcript_dedup.config import DedupConfig
-from transcript_dedup.detectors import exact_candidates, lsh_candidates
-from transcript_dedup.detectors.verify import verify_candidates
+from transcript_dedup.detectors import lsh_candidates
+from transcript_dedup.pipeline import detect_pairs
 from transcript_dedup.reconstruct import reconstruct_conversations
 from transcript_dedup.signatures import add_signatures
 
@@ -63,8 +63,9 @@ def test_skew_counters_and_bounded_candidates(spark, skewed_conv):
 
 def test_skew_no_false_merges(spark, skewed_conv):
     conv, cfg = skewed_conv
-    cand = exact_candidates(conv).unionByName(lsh_candidates(conv, cfg))
-    pairs = verify_candidates(cand, conv, cfg).filter("is_match")
+    with detect_pairs(conv, cfg) as pairs:
+        pairs = pairs.filter("is_match").persist()
+        pairs.count()
     bad = pairs.filter(
         "(conv_a LIKE 't%' AND conv_b LIKE 't%')"
     ).count()
@@ -78,6 +79,7 @@ def test_skew_no_false_merges(spark, skewed_conv):
     assert s_bad == 0
     # the mega exact cluster must survive mitigation via the exact detector
     mega = pairs.filter("conv_a LIKE 'm%' AND conv_b LIKE 'm%'").count()
+    pairs.unpersist()
     assert mega >= 99  # star edges connect all 100 copies
     assert bad >= 0  # documented: template-dominant docs are true near-dups
 

@@ -52,23 +52,13 @@ def test_incremental_equals_batch(spark, cfg, split_corpus, tmp_path):
         reconstruct_conversations(corpus_to_spark(spark, turns_pdf)), cfg
     )
     from transcript_dedup.cluster import connected_components
-    from transcript_dedup.detectors import (
-        exact_candidates,
-        lsh_candidates,
-        substring_candidates,
-    )
-    from transcript_dedup.detectors.verify import verify_candidates
+    from transcript_dedup.pipeline import detect_pairs
 
-    cand = (
-        exact_candidates(conv)
-        .unionByName(lsh_candidates(conv, cfg))
-        .unionByName(substring_candidates(conv, cfg, verify_mode="instr"))
-    )
-    pairs = verify_candidates(cand, conv, cfg)
-    want = {
-        r["conv_id"]: r["component_id"]
-        for r in connected_components(pairs.filter("is_match"), cfg).collect()
-    }
+    with detect_pairs(conv, cfg) as pairs:
+        want = {
+            r["conv_id"]: r["component_id"]
+            for r in connected_components(pairs.filter("is_match"), cfg).collect()
+        }
     assert got == want
 
 
@@ -104,12 +94,7 @@ def test_redelivery_and_compaction(spark, cfg, split_corpus, tmp_path):
     import pandas as pd
 
     from transcript_dedup.cluster import connected_components
-    from transcript_dedup.detectors import (
-        exact_candidates,
-        lsh_candidates,
-        substring_candidates,
-    )
-    from transcript_dedup.detectors.verify import verify_candidates
+    from transcript_dedup.pipeline import detect_pairs
 
     _, turns_pdf, _ = split_corpus
     # batch 0: full corpus; batch 1: re-deliver 10 conversations with edited
@@ -137,26 +122,21 @@ def test_redelivery_and_compaction(spark, cfg, split_corpus, tmp_path):
     conv = add_signatures(
         reconstruct_conversations(corpus_to_spark(spark, final_pdf)), cfg
     )
-    cand = (
-        exact_candidates(conv)
-        .unionByName(lsh_candidates(conv, cfg))
-        .unionByName(substring_candidates(conv, cfg, verify_mode="instr"))
-    )
-    pairs = verify_candidates(cand, conv, cfg)
-    want = {
-        r["conv_id"]: r["component_id"]
-        for r in connected_components(pairs.filter("is_match"), cfg).collect()
-    }
-    assert got == want
     # decisions state matches the batch pipeline's decision KEY set
     from transcript_dedup.decide import find_conflicts, make_decisions
 
-    want_dec = {
-        (r["group_id"], ",".join(r["keep"]), ",".join(r["delete"]), r["rule_applied"])
-        for r in make_decisions(
-            connected_components(pairs.filter("is_match"), cfg), conv, pairs, cfg
-        ).collect()
-    }
+    with detect_pairs(conv, cfg) as pairs:
+        want = {
+            r["conv_id"]: r["component_id"]
+            for r in connected_components(pairs.filter("is_match"), cfg).collect()
+        }
+        want_dec = {
+            (r["group_id"], ",".join(r["keep"]), ",".join(r["delete"]), r["rule_applied"])
+            for r in make_decisions(
+                connected_components(pairs.filter("is_match"), cfg), conv, pairs, cfg
+            ).collect()
+        }
+    assert got == want
     got_dec = {
         (r["group_id"], ",".join(r["keep"]), ",".join(r["delete"]), r["rule_applied"])
         for r in sd.stored_decisions().collect()

@@ -45,25 +45,21 @@ def main():
     conv = signed_records(docs, DedupConfig())
     sections.append(("LSH banded candidate join", fmt(lsh_candidates(conv, DedupConfig()))))
 
-    from transcript_dedup.detectors import exact_candidates, substring_candidates
+    from transcript_dedup.detectors import exact_candidates
     from transcript_dedup.detectors.verify import verify_candidates
 
     pairs = verify_candidates(exact_candidates(conv), conv, DedupConfig())
     sections.append(("verify stage (pair hydration + est-Jaccard + Hamming)", fmt(pairs)))
 
-    # the full pairs stage exactly as the pipeline runs it: all three
-    # detector arms unioned, then hydrated + verified — the plan the
+    # the full pairs stage exactly as the pipeline runs it (detect_pairs —
+    # the one composition every pipeline path uses): all three detector
+    # arms unioned, then hydrated + verified — the plan the
     # no-cartesian/no-BNLJ audit (and tests/test_physical_config.py's
     # plan-shape gate) cares about, with the cid-keyed exchanges visible
-    cfg = DedupConfig()
-    cand3 = (
-        exact_candidates(conv)
-        .unionByName(lsh_candidates(conv, cfg, None))
-        .unionByName(substring_candidates(conv, cfg, None, verify_mode="instr"))
-    )
-    sections.append(
-        ("full pairs stage (exact ∪ LSH ∪ substring -> verify)", fmt(verify_candidates(cand3, conv, cfg)))
-    )
+    from transcript_dedup.pipeline import detect_pairs
+
+    with detect_pairs(conv, DedupConfig()) as pairs3:
+        sections.append(("full pairs stage (exact ∪ LSH ∪ substring -> verify)", fmt(pairs3)))
 
     # embeddings sign-LSH: ONE ArrowEvalPython pass computes every table's
     # bucket (no per-table unions / re-scans of the input, no plan-literal

@@ -25,7 +25,6 @@ def main(argv: list[str] | None = None) -> int:
     runp.add_argument("--out", required=True, help="state/output directory")
     runp.add_argument("--no-resume", action="store_true")
     runp.add_argument("--master", default=None)
-    runp.add_argument("--substring-verify", default="instr", choices=["instr", "suffix_array"])
 
     stp = sub.add_parser("stream", help="incremental streaming dedup")
     stp.add_argument("--input", required=True, help="directory watched for turn parquet files")
@@ -51,12 +50,7 @@ def main(argv: list[str] | None = None) -> int:
 
         pipe = DedupPipeline(spark, a.out, cfg)
         turns = spark.read.parquet(a.input)
-        res = pipe.run(
-            turns,
-            input_fingerprint=a.input,
-            resume=not a.no_resume,
-            substring_verify_mode=a.substring_verify,
-        )
+        res = pipe.run(turns, input_fingerprint=a.input, resume=not a.no_resume)
         summary = {
             "conversations": res["conversations"].count(),
             "matched_pairs": res["candidate_pairs"].filter("is_match").count(),

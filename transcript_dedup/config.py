@@ -32,7 +32,7 @@ class DedupConfig:
     # — the band-key explode shrinks 24% and the minhash arrays through the
     # verify hydration shuffle shrink 24%), with planted-truth recall
     # measured at 0.9954 vs 0.9892 at 2k convs (near-family 0.985 vs 0.965,
-    # zero spurious merges both ways — tools/check_numperm_recall.py).
+    # zero spurious merges both ways — NOTES.md "Round-4 measurements").
     shingle_k: int = 5                  # tokens per shingle
     num_perm: int = 96                  # MinHash permutations
     lsh_bands: int = 32                 # bands (lsh_bands * lsh_rows == num_perm)
@@ -139,28 +139,6 @@ class DedupConfig:
     cid_seed: int = 0
 
     # --- physical execution ---------------------------------------------------
-    # verify-stage hydration join strategy. "shuffle_hash" forces a shuffled
-    # hash join of pairs against the conversation feature table — the only
-    # plan that exists at 10^12-turn scale (the conv side cannot be
-    # broadcast), and at bench scale it removes ~12 s of driver-serial
-    # BroadcastExchange collect per side that AQE's auto-broadcast would pay.
-    # "auto" leaves the choice to Catalyst/AQE (used by the A/B ablation).
-    hydration_join: str = "shuffle_hash"
-    # split the verify hydration into a light (array-free) pass for
-    # content-equal pairs plus a full-array pass for the rest — the web-
-    # scale posture when degenerate exact-duplicate cliques dominate the
-    # candidate mass (their est-Jaccard is exactly 1.0 by signature
-    # identity, so the num_perm*8-byte minhash payload never ships for
-    # them). Bit-identical output either way (test_split_hydration_bit_
-    # identical); default off — at bench scale eq pairs are only ~4% of
-    # candidates and the extra join stages cost more than the bytes save.
-    split_hydration: bool = False
-    # persist the exploded band-key frame for the duration of the LSH pairs
-    # job: the hot-key pre-pass otherwise recomputes the 42-term band-hash
-    # explode (rows x bands) once per broadcast subtree (~3 passes total).
-    # Costs O(rows x bands) executor storage (spills to disk past memory);
-    # disable to trade compute for memory on storage-tight clusters.
-    lsh_cache_keys: bool = True
     # round-robin repartition of the multi-member band buckets (a small
     # fraction of group rows) between the band groupBy and the m^2 pair
     # explosion. Without it the explosion fuses into the groupBy reducer

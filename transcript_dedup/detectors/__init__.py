@@ -9,7 +9,7 @@ Three detectors (north rule), each emitting candidate edges
                 salting (filename-fuzzy analogue at scale,
                 /root/reference/src/duplicates.ts:110-140)
   substring.py  exact-substring containment via content-defined sampled
-                k-grams + suffix-array verification kernel
+                k-grams + JVM instr verification
 
 verify.py scores the unioned candidates (compareFiles analogue,
 /root/reference/src/duplicates.ts:44-83) into the candidate_pairs table.

@@ -43,23 +43,12 @@ from pyspark.sql import functions as F
 
 from ..config import DedupConfig
 
-# default registry for band-key frames persisted by lsh_candidates, alive
-# until the pairs output materializes; callers release them via
-# release_key_caches() once the pairs job commits. Callers that may run
-# concurrently in one driver (or that must guarantee release on failure)
-# pass their OWN list via cache_registry= and release exactly that list —
-# two pipelines sharing the process-wide default would unpersist each
-# other's live caches.
-_KEY_CACHES: list[DataFrame] = []
-
-
-def release_key_caches(registry: list[DataFrame] | None = None) -> None:
-    """Unpersist every band-key frame in ``registry`` (default: the
-    process-wide list). Safe to call any time after the pairs output is
-    materialized; idempotent."""
-    reg = _KEY_CACHES if registry is None else registry
-    while reg:
-        reg.pop().unpersist()
+def release_key_caches(registry: list[DataFrame]) -> None:
+    """Unpersist every frame a detector registered in ``registry`` (the
+    caller-owned list passed as ``cache_registry=``). Safe to call any time
+    after the pairs output is materialized; idempotent."""
+    while registry:
+        registry.pop().unpersist()
 
 
 def band_keys(conv: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -154,6 +143,11 @@ def lsh_candidates(
     assert). At or below cfg.band_hot_prepass_min_rows the hot-key
     pre-pass is skipped — see the config field's rationale; the pair set
     is identical either way, only the aggregation memory bound changes.
+
+    ``cache_registry`` (optional): a caller-owned list; when given, the
+    band-key frame the pre-pass reads three times is persisted and appended
+    to it, and the caller releases it (release_key_caches). Without one,
+    nothing is cached.
     """
     if (
         n_conv is not None
@@ -162,18 +156,18 @@ def lsh_candidates(
     ):
         cfg = cfg.with_(band_hot_sample_mod=0)
     keys = band_keys(conv, cfg)
-    if cfg.lsh_cache_keys and cfg.band_hot_sample_mod > 0:
+    if cache_registry is not None and cfg.band_hot_sample_mod > 0:
         # the hot-key pre-pass reads the band-key frame three times (sample
         # aggregation, exact-count aggregation, main grouping); without a
         # cache each read recomputes the rows x bands explode from conv.
         # MEMORY_AND_DISK: at cluster scale this frame is rows x bands wide
         # and must be allowed to spill rather than evict the conv cache.
-        # Registered in _KEY_CACHES; the pipeline unpersists it via
-        # release_key_caches() once the pairs output materializes.
+        # Cached only into the caller's registry, which releases it once the
+        # pairs output materializes (pipeline.detect_pairs).
         from pyspark import StorageLevel
 
         keys = keys.persist(StorageLevel.MEMORY_AND_DISK)
-        (_KEY_CACHES if cache_registry is None else cache_registry).append(keys)
+        cache_registry.append(keys)
     on = ["band_id", "band_hash"]
 
     if cfg.band_hot_sample_mod > 0:

@@ -20,11 +20,12 @@ Design (scales because every stage is a key join, never all-pairs):
      Arrow pass over the corpus matches all patterns at once (see
      _tiny_pairs). Count hard-capped + logged; sub-gram-length docs use a
      broadcast contains-join (cheap: needles shorter than one gram).
-  4. **Verify** — candidates grouped by outer doc; a numpy suffix array is
-     built once per outer text and every inner candidate binary-searched
-     (``applyInPandas``, Arrow-batched). A pure-JVM ``instr`` variant exists
-     for cross-checking (`verify_mode="instr"`); both produce identical
-     results by construction and a test asserts it.
+  4. **Verify** — gram-path candidates are hydrated with both texts and
+     checked with the JVM ``instr`` (inner strictly shorter and contained
+     in outer); tiny-path pairs are verified inside the probe kernel. The
+     numpy suffix array (suffix_array.py) is the test-side reference:
+     tests/test_substring_verify.py checks the emitted pairs against
+     brute-force containment with ``sa_contains``.
 
 Only pairs with len(inner) < len(outer) are emitted — equal-text pairs are
 the exact detector's job.
@@ -32,15 +33,26 @@ the exact detector's job.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
 
 
+def _cached(df: DataFrame, cache_registry: list[DataFrame] | None) -> DataFrame:
+    """Persist ``df`` into the caller's registry; no registry, no cache."""
+    if cache_registry is None:
+        return df
+    df = df.persist()
+    cache_registry.append(df)
+    return df
+
+
 def _gram_pairs(
-    conv: DataFrame, cfg: DedupConfig, counters: dict | None
+    conv: DataFrame,
+    cfg: DedupConfig,
+    counters: dict | None,
+    cache_registry: list[DataFrame] | None,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (candidate pairs from rare-gram collisions, ids of docs whose
     sampled grams were ALL stopped — they need the exhaustive tiny path).
@@ -62,11 +74,12 @@ def _gram_pairs(
             F.sum((F.col("df") > cfg.substring_gram_maxdf).cast("long")).alias("stop_grams")
         ).collect()[0]
         counters["substring_stop_grams"] = int(stats["stop_grams"] or 0)
-    # persisted: the tiny-path pattern collection (a driver take() in
-    # _tiny_pairs) materializes this subtree before the main pairs job; the
-    # caches make that barrier double as the subtree's materialization
-    # instead of costing a second full explode+df pipeline run
-    joined = grams.join(sizes, "gram", "inner").persist()
+    # persisted (when the caller owns a cache registry): the tiny-path
+    # pattern collection (a driver take() in _tiny_pairs) materializes this
+    # subtree before the main pairs job; the caches make that barrier double
+    # as the subtree's materialization instead of costing a second full
+    # explode+df pipeline run
+    joined = _cached(grams.join(sizes, "gram", "inner"), cache_registry)
     # membership side of the blocking join: stop-listed grams dropped
     kept = joined.filter(F.col("df") <= cfg.substring_gram_maxdf)
     # rarest-gram blocking: containment means the outer doc contains EVERY
@@ -89,13 +102,16 @@ def _gram_pairs(
     packed = F.expr(
         f"cast(df as decimal(38,0)) * {_TWO64} + (cast(gram as decimal(38,0)) + {_BIAS})"
     )
-    rarest = joined.groupBy("cid").agg(
-        F.min(packed).alias("p")
-    ).select(
-        "cid",
-        F.expr(f"cast((p - (p % {_TWO64})) / {_TWO64} as long)").alias("min_df"),
-        F.expr(f"cast(p % {_TWO64} - {_BIAS} as long)").alias("gram"),
-    ).persist()
+    rarest = _cached(
+        joined.groupBy("cid")
+        .agg(F.min(packed).alias("p"))
+        .select(
+            "cid",
+            F.expr(f"cast((p - (p % {_TWO64})) / {_TWO64} as long)").alias("min_df"),
+            F.expr(f"cast(p % {_TWO64} - {_BIAS} as long)").alias("gram"),
+        ),
+        cache_registry,
+    )
     inner_keys = rarest.filter(F.col("min_df") <= cfg.substring_gram_maxdf)
     # docs whose grams were ALL stop-listed: min_df over every gram > maxdf
     all_stopped = rarest.filter(F.col("min_df") > cfg.substring_gram_maxdf).select(
@@ -264,7 +280,7 @@ def _tiny_pairs(
         )
 
         def probe(batches):
-            import pandas as pd  # noqa: F811 (worker-side import)
+            import pandas as pd  # worker-side import
 
             from ..signatures import probe_gram_matches_best
 
@@ -371,59 +387,31 @@ def _tiny_pairs(
     return out
 
 
-def _verify_instr(cand: DataFrame) -> DataFrame:
-    """Pure-JVM verification: inner text occurs in outer text."""
-    return cand.filter(
-        (F.col("len_in") < F.col("len_out"))
-        & (F.expr("instr(text_out, text_in) > 0"))
-    )
-
-
-def _verify_suffix_array(cand: DataFrame) -> DataFrame:
-    """Suffix-array verification kernel, one SA per outer doc group."""
-    from ..suffix_array import build_suffix_array, sa_contains
-
-    schema = "out_id long, in_id long"
-
-    def verify_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        data = pdf["text_out"].iloc[0].encode("utf-8")
-        sa = build_suffix_array(data)
-        hits = [
-            iid
-            for iid, t in zip(pdf["in_id"], pdf["text_in"])
-            if len(t) < len(pdf["text_out"].iloc[0])
-            and sa_contains(data, sa, t.encode("utf-8"))
-        ]
-        return pd.DataFrame({"out_id": pdf["out_id"].iloc[0], "in_id": hits})
-
-    hits = cand.select("out_id", "in_id", "text_out", "text_in").groupBy(
-        "out_id"
-    ).applyInPandas(verify_group, schema=schema)
-    # shuffle_hash: the no-hint plan is a SortMergeJoin that SORTS the
-    # text-laden hydrated candidate stream just to semi-join the (small)
-    # verified id pairs — same rationale as the hydration joins
-    return cand.join(hits.hint("shuffle_hash"), ["out_id", "in_id"], "left_semi")
-
-
 def substring_candidates(
     conv: DataFrame,
     cfg: DedupConfig,
     counters: dict | None = None,
-    verify_mode: str = "suffix_array",
+    verify_mode: str = "instr",
+    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """conversations -> (conv_a, conv_b, src='substring') containment edges,
     cid-keyed (pairs canonically oriented by cid; consumers of the bare
-    output map back via verify.resolve_pair_ids)."""
-    gram_pairs, all_stopped = _gram_pairs(conv, cfg, counters)
+    output map back via verify.resolve_pair_ids).
+
+    ``verify_mode`` accepts only ``"instr"`` (the one verifier). With a
+    ``cache_registry`` list, the two frames the tiny-path barrier
+    materializes are persisted into it for the caller to release
+    (lsh.release_key_caches); without one, nothing is cached."""
+    if verify_mode != "instr":
+        raise ValueError(f"unknown substring verify_mode {verify_mode!r}; only 'instr'")
+    gram_pairs, all_stopped = _gram_pairs(conv, cfg, counters, cache_registry)
     # gram-path candidates hydrate + verify; tiny-path pairs arrive ALREADY
     # verified in the probe kernel (see _tiny_pairs) and must not re-enter
     # the hydration join. The two verified sets are disjoint by the inner
     # doc's class — a pair's inner (strictly shorter) doc either has a rare
     # sampled gram (gram path) or is tiny (tiny path), never both — so the
     # union needs no distinct to stay duplicate-free.
-    verified = hydrate_and_verify(
-        gram_pairs, conv, verify_mode, join_hint=cfg.hydration_join
-    ).select("conv_a", "conv_b")
+    verified = hydrate_and_verify(gram_pairs, conv).select("conv_a", "conv_b")
     tiny_verified = _tiny_pairs(conv, all_stopped, cfg, counters)
     # no materialization barrier anywhere in this detector: the single
     # downstream consumer (verify stage) triggers the whole dataflow in one
@@ -433,29 +421,23 @@ def substring_candidates(
     )
 
 
-def hydrate_and_verify(
-    raw: DataFrame,
-    conv: DataFrame,
-    verify_mode: str = "suffix_array",
-    join_hint: str = "shuffle_hash",
-) -> DataFrame:
+def hydrate_and_verify(raw: DataFrame, conv: DataFrame) -> DataFrame:
     """Candidate (conv_a, conv_b) cid pairs -> containment-verified pairs.
 
     Hydrates both texts (by cid), orients inner = shorter / outer = longer
-    (equal lengths are the exact detector's job), and verifies with the
-    suffix-array kernel or the pure-JVM ``instr`` twin. Shared by the batch
+    (equal lengths are the exact detector's job), and keeps the pairs whose
+    inner text occurs in the outer one (JVM ``instr``). Shared by the batch
     detector above and the streaming incremental arm
     (streaming._incremental_substring).
 
-    ``join_hint="shuffle_hash"`` (default — same rationale as
-    config.hydration_join): the texts side is the whole corpus, so this is
-    a shuffled key-equality join at any scale; without the hint Catalyst
-    plans it as SortMergeJoin, which SORTS the full norm_text corpus twice
-    (once per hydration side) plus the pair side — pure wasted work for an
-    equality join. "auto" restores planner choice."""
-    texts = conv.select("cid", "norm_text", F.length("norm_text").alias("len"))
-    if join_hint == "shuffle_hash":
-        texts = texts.hint("shuffle_hash")
+    The texts side is hinted ``shuffle_hash``: it is the whole corpus, so
+    this is a shuffled key-equality join at any scale; without the hint
+    Catalyst plans it as SortMergeJoin, which SORTS the full norm_text
+    corpus twice (once per hydration side) plus the pair side — pure wasted
+    work for an equality join."""
+    texts = conv.select(
+        "cid", "norm_text", F.length("norm_text").alias("len")
+    ).hint("shuffle_hash")
     hyd = (
         raw.join(
             texts.select(
@@ -478,12 +460,6 @@ def hydrate_and_verify(
         .select(
             "conv_a",
             "conv_b",
-            F.when(F.col("len_a") < F.col("len_b"), F.col("conv_a"))
-            .otherwise(F.col("conv_b"))
-            .alias("in_id"),
-            F.when(F.col("len_a") < F.col("len_b"), F.col("conv_b"))
-            .otherwise(F.col("conv_a"))
-            .alias("out_id"),
             F.when(F.col("len_a") < F.col("len_b"), F.col("text_a"))
             .otherwise(F.col("text_b"))
             .alias("text_in"),
@@ -494,5 +470,7 @@ def hydrate_and_verify(
             F.greatest("len_a", "len_b").alias("len_out"),
         )
     )
-
-    return _verify_suffix_array(hyd) if verify_mode == "suffix_array" else _verify_instr(hyd)
+    return hyd.filter(
+        (F.col("len_in") < F.col("len_out"))
+        & (F.expr("instr(text_out, text_in) > 0"))
+    )

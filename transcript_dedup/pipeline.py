@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import hashlib
 import json
+from collections.abc import Iterator
+from contextlib import ExitStack, contextmanager
 from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +45,42 @@ from .signatures import KERNEL_VERSION, add_signatures, assert_cid_unique
 
 def _fp(*parts) -> str:
     return hashlib.sha256("|".join(str(p) for p in parts).encode()).hexdigest()[:16]
+
+
+@contextmanager
+def detect_pairs(
+    conv: DataFrame,
+    cfg: DedupConfig,
+    counters: dict | None = None,
+    n_conv: int | None = None,
+) -> Iterator[DataFrame]:
+    """The pairs stage: exact ∪ LSH ∪ substring candidates -> verified,
+    scored candidate_pairs (lazy). Every caller composes it here.
+
+    Owns the stage's cache registry: the frames the detectors persist (LSH
+    band keys when the hot-key pre-pass runs, the substring gram join and
+    rarest-gram argmin) live until the ``with`` block exits, then are
+    released whether the block succeeded or raised. Materialize (or write)
+    the pairs inside the block::
+
+        with detect_pairs(conv, cfg, counters, n_conv=n) as pairs:
+            pairs = pairs.persist()
+            pairs.count()
+
+    ``n_conv`` is the corpus row count when the caller knows it (see
+    lsh_candidates)."""
+    caches: list[DataFrame] = []
+    try:
+        cand = (
+            exact_candidates(conv)
+            .unionByName(
+                lsh_candidates(conv, cfg, counters, cache_registry=caches, n_conv=n_conv)
+            )
+            .unionByName(substring_candidates(conv, cfg, counters, cache_registry=caches))
+        )
+        yield verify_candidates(cand, conv, cfg)
+    finally:
+        release_key_caches(caches)
 
 
 class DedupPipeline:
@@ -98,7 +136,6 @@ class DedupPipeline:
         turns: DataFrame,
         input_fingerprint: str = "adhoc",
         resume: bool = True,
-        substring_verify_mode: str = "instr",
     ) -> dict:
         """Run (or resume) the full pipeline; returns dict of DataFrames."""
         cfg = self.cfg
@@ -115,44 +152,24 @@ class DedupPipeline:
         # conv row count comes from the committed snapshot manifest — no job
         n_conv = self.io.current_snapshot("conversations")["rows"]
 
-        # per-run cache registry: concurrent pipelines in one driver must not
-        # release each other's live band-key caches, and a failed run must
-        # not leak its own (finally below)
-        key_caches: list[DataFrame] = []
-
-        def build_pairs(counters):
-            # id contract first: every detector keys on cid, so a (loud)
-            # birthday collision must abort before any pair is emitted. Runs
-            # only when the stage builds — a fully-resumed run stays scanless.
-            counters["n_conv_cid_checked"] = assert_cid_unique(conv)
-            cand = (
-                exact_candidates(conv)
-                .unionByName(
-                    lsh_candidates(
-                        conv,
-                        cfg,
-                        counters,
-                        cache_registry=key_caches,
-                        n_conv=counters["n_conv_cid_checked"],
-                    )
-                )
-                .unionByName(
-                    substring_candidates(
-                        conv, cfg, counters, verify_mode=substring_verify_mode
-                    )
-                )
-            )
-            return verify_candidates(cand, conv, cfg)
-
         fp_pairs = _fp("candidate_pairs", fp_conv, snap_conv)
-        try:
+        # the detector caches live until the pairs snapshot is committed (or
+        # the stage failed): cache_scope closes right after the stage
+        with ExitStack() as cache_scope:
+
+            def build_pairs(counters):
+                # id contract first: every detector keys on cid, so a (loud)
+                # birthday collision must abort before any pair is emitted.
+                # Runs only when the stage builds — a fully-resumed run
+                # stays scanless.
+                n = counters["n_conv_cid_checked"] = assert_cid_unique(conv)
+                return cache_scope.enter_context(
+                    detect_pairs(conv, cfg, counters, n_conv=n)
+                )
+
             pairs, snap_pairs = self._stage(
                 "candidate_pairs", fp_pairs, build_pairs, n_conv, resume
             )
-        finally:
-            # the pairs snapshot is committed (or the stage failed) — this
-            # run's LSH band-key cache is dead either way
-            release_key_caches(key_caches)
 
         fp_comp = _fp("components", fp_pairs, snap_pairs)
         comps, snap_comp = self._stage(
@@ -191,8 +208,6 @@ class DedupPipeline:
 def run_dedup_dataframes(
     conv: DataFrame,
     cfg: DedupConfig | None = None,
-    substring_verify_mode: str = "instr",
-    counters: dict | None = None,
 ) -> dict:
     """Pure-DataFrame composition of the detect->verify->cluster->decide
     stages (no TableIO, no metrics) — for embedding the engine in other
@@ -215,52 +230,16 @@ def run_dedup_dataframes(
     # The action doubles as the cid-injectivity guard (loud abort on an
     # xxhash64 birthday collision — remediation: bump cfg.cid_seed).
     n_conv = assert_cid_unique(conv)
-    key_caches: list = []
-    cand = exact_candidates(conv).unionByName(
-        lsh_candidates(conv, cfg, counters, cache_registry=key_caches, n_conv=n_conv)
-    )
-    # overlap the LSH band-key cache population with the substring
-    # detector's serial take-chain (below): the hot-key pre-pass's first
-    # broadcast subtree otherwise pays the rows x bands explode on the
-    # pairs job's critical path (~3.6 s of driver-blocking broadcast
-    # collect at pinned 4 cores / 240k convs). Placement-only — the warm
-    # count just populates the same persisted frame the pre-pass reads;
-    # conv is already materialized, so there is no cache-population race.
-    # TD_KEYS_WARM=0 disables the overlap (A/B hook; also the escape hatch
-    # for drivers that must not run concurrent jobs). Same-JVM interleaved
-    # A/B at pinned 4 cores / 240k convs: 46.0/38.0 s (warm) vs 47.2/40.9
-    # (without) — decisions identical.
-    warm_thread = None
-    import os as _os
-    if key_caches and _os.environ.get("TD_KEYS_WARM", "1") == "1":
-        import threading
-
-        def _warm_keys(df=key_caches[0]):
-            try:
-                df.count()
-            except Exception:  # cache warming only; real errors resurface
-                pass  # in the pairs job, which recomputes independently
-
-        warm_thread = threading.Thread(target=_warm_keys, daemon=True)
-        warm_thread.start()
-    cand = cand.unionByName(
-        substring_candidates(conv, cfg, counters, verify_mode=substring_verify_mode)
-    )
     # verified pairs feed three consumers (CC edges, decision confidence,
     # caller) — persist so the detector cascade runs exactly once; the
     # eager count materializes the cache (same AQE-race rationale as conv)
-    # and lets the LSH band-key cache be released immediately after
-    pairs = verify_candidates(cand, conv, cfg).persist()
-    try:
+    # and lets the detector caches be released as the block exits
+    with detect_pairs(conv, cfg, n_conv=n_conv) as pairs:
+        pairs = pairs.persist()
         pairs.count()
-    finally:
-        if warm_thread is not None:
-            # never unpersist the band-key frame under the warming job
-            warm_thread.join()
-        release_key_caches(key_caches)
-    comps = connected_components(pairs.filter("is_match"), cfg, counters)
+    comps = connected_components(pairs.filter("is_match"), cfg)
     decisions = make_decisions(comps, conv, pairs, cfg)
-    # n_conv rides along so callers (bench_pipeline, profilers) don't pay a
+    # n_conv rides along so callers (e.g. tools/bench_pipeline.py) don't pay a
     # second full-corpus count job for a number this run already computed;
     # conversations is the PERSISTED conv — callers joining against it
     # reuse the populated cache instead of recomputing the kernel

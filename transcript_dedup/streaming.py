@@ -155,7 +155,7 @@ def _incremental_substring(new: DataFrame, all_: DataFrame, cfg: DedupConfig) ->
     )
     raw = p_new_inner.unionByName(p_new_outer).unionByName(tiny_new).distinct()
     return (
-        hydrate_and_verify(raw, all_, verify_mode="instr")
+        hydrate_and_verify(raw, all_)
         .select("conv_a", "conv_b")
         .withColumn("src", F.lit("substring"))
     )

@@ -2,12 +2,12 @@
 
 Prefix-doubling construction (Manber-Myers), fully vectorized: O(n log^2 n)
 via repeated stable argsorts over (rank, rank+k) key pairs packed into one
-int64 key. Used as the verification kernel of the substring detector
-(detectors/substring.py): candidates are grouped by container document, one
-suffix array per container, each contained candidate binary-searched in
-O(m log n).
+int64 key. The test-side containment reference for the substring detector
+(detectors/substring.py verifies with the JVM ``instr``):
+tests/test_substring_verify.py builds one suffix array per container
+document and binary-searches every candidate in O(m log n).
 
-No Spark imports here — this is a pure kernel, also used by tests directly.
+No Spark imports here — this is a pure kernel.
 """
 
 from __future__ import annotations
