@@ -772,10 +772,11 @@ def _q_doc_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from transcript_dedup.config import DedupConfig
-    from transcript_dedup.detectors.substring import substring_candidates
+    from transcript_dedup.detectors import release_key_caches, substring_candidates
     from transcript_dedup.detectors.verify import resolve_pair_ids
     from transcript_dedup.documents import signed_records
 
+    cfg = DedupConfig()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # persist ONCE: the substring detector references conv ~6x (gram
     # explode, tiny take, probe scan, two hydration sides, id resolution) —
@@ -784,10 +785,20 @@ def _q_doc_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conv subtree is already cached (e.g. doc_dedup_components ran first
     # in the same session), CacheManager dedups this persist onto the
     # existing entry, so the suite path keeps its free reuse.
-    conv = signed_records(docs, DedupConfig()).persist()
-    # detectors emit cid-keyed pairs; map back to the zero-padded doc ids
+    conv = signed_records(docs, cfg).persist()
+    # the substring arm alone, no verify: its gram join and rarest-gram
+    # argmin are cached in a registry the tiny-path take() materializes and
+    # the pairs job reuses, then released once the pairs are materialized.
+    # Detectors emit cid-keyed pairs; map back to the zero-padded doc ids
     # (string order == numeric order, matching the oracle's least/greatest)
-    pairs = resolve_pair_ids(substring_candidates(conv, DedupConfig()), conv)
+    caches: list[DataFrame] = []
+    try:
+        pairs = resolve_pair_ids(
+            substring_candidates(conv, cfg, cache_registry=caches), conv
+        ).persist()
+        pairs.count()
+    finally:
+        release_key_caches(caches)
     return pairs.select(
         F.col("conv_a").cast("bigint").alias("doc_a"),
         F.col("conv_b").cast("bigint").alias("doc_b"),
@@ -870,6 +881,12 @@ def _q_transcript_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     slices), est-Jaccard (position-equality fraction), the SimHash Hamming
     ball (bit_count(xor)), the exact/substring arms, connected components
     (recursive CTE) and the rule cascade."""
+    return _transcript_decision_rows(spark, ("exact", "lsh", "substring"))
+
+
+def _transcript_decision_rows(spark: SparkSession, detectors: tuple[str, ...]) -> DataFrame:
+    """run_dedup_dataframes over the exported seed-42 corpus with the given
+    detector arms; decisions as the flat rows the oracles produce."""
     from pyspark.sql import functions as F
 
     from transcript_dedup.config import DedupConfig
@@ -877,22 +894,19 @@ def _q_transcript_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from transcript_dedup.reconstruct import reconstruct_conversations
     from transcript_dedup.signatures import add_signatures
 
+    cfg = DedupConfig()
     turns = spark.read.parquet(_ensure_corpus_export())
-    conv = add_signatures(reconstruct_conversations(turns), DedupConfig())
-    res = run_dedup_dataframes(conv)
-    return (
-        res["decisions"]
-        .select(
-            "group_id",
-            F.concat_ws(",", "keep").alias("keep"),
-            F.concat_ws(",", "delete").alias("delete"),
-            "rule_applied",
-            "decision_type",
-            F.col("min_confidence").cast("long").alias("min_confidence"),
-            F.col("size").cast("long").alias("size"),
-        )
-        .orderBy("group_id")
-    )
+    conv = add_signatures(reconstruct_conversations(turns), cfg)
+    dec = run_dedup_dataframes(conv, cfg, detectors=detectors)["decisions"]
+    return dec.select(
+        "group_id",
+        F.concat_ws(",", "keep").alias("keep"),
+        F.concat_ws(",", "delete").alias("delete"),
+        "rule_applied",
+        "decision_type",
+        F.col("min_confidence").cast("long").alias("min_confidence"),
+        F.col("size").cast("long").alias("size"),
+    ).orderBy("group_id")
 
 
 def _q_region_broadcast_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1510,39 +1524,7 @@ def _q_transcript_decisions_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization, star edges, containment, connected components, the rule
     cascade, confidence — is reproduced by the DuckDB oracle over the same
     exported corpus parquet alone."""
-    from pyspark.sql import functions as F
-
-    from transcript_dedup.config import DedupConfig
-    from transcript_dedup.cluster import connected_components
-    from transcript_dedup.decide import make_decisions
-    from transcript_dedup.detectors import (
-        exact_candidates,
-        substring_candidates,
-        verify_candidates,
-    )
-    from transcript_dedup.reconstruct import reconstruct_conversations
-    from transcript_dedup.signatures import add_signatures
-
-    cfg = DedupConfig()
-    turns = spark.read.parquet(_ensure_corpus_export())
-    conv = add_signatures(reconstruct_conversations(turns), cfg).persist()
-    conv.count()
-    cand = exact_candidates(conv).unionByName(substring_candidates(conv, cfg))
-    pairs = verify_candidates(cand, conv, cfg)
-    comps = connected_components(pairs.filter("is_match"), cfg)
-    dec = make_decisions(comps, conv, pairs, cfg)
-    return (
-        dec.select(
-            "group_id",
-            F.concat_ws(",", "keep").alias("keep"),
-            F.concat_ws(",", "delete").alias("delete"),
-            "rule_applied",
-            "decision_type",
-            F.col("min_confidence").cast("long").alias("min_confidence"),
-            F.col("size").cast("long").alias("size"),
-        )
-        .orderBy("group_id")
-    )
+    return _transcript_decision_rows(spark, ("exact", "substring"))
 
 
 def _transcript_decisions_es_oracle() -> str:

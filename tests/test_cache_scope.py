@@ -1,7 +1,9 @@
 """Detector cache scope: every frame the detectors persist for the pairs
 stage (LSH band keys, the substring gram join and rarest-gram argmin) is
-released once the pairs are materialized — after a successful run and
-after a failed one. Checked against Spark's CacheManager itself.
+released once the pairs are materialized — after a successful run, after
+a failed one and in the driver queries that run the detectors; connected
+components releases its adjacency even when it fails. Checked against
+Spark's CacheManager itself.
 
 The LSH hot-key pre-pass (and so the band-key cache) only runs above
 ``band_hot_prepass_min_rows``; the floor is lowered to 0 here so that
@@ -10,13 +12,19 @@ every detector cache is exercised on the 200-conv fixture.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark import StorageLevel
 
 from transcript_dedup import pipeline
 from transcript_dedup.pipeline import DedupPipeline, run_dedup_dataframes
+from transcript_dedup.detectors import substring
 from transcript_dedup.reconstruct import reconstruct_conversations
 from transcript_dedup.signatures import add_signatures
+
+
+SF_0001 = "/root/testdata/sf0.001"
 
 
 def _cache_is_empty(spark) -> bool:
@@ -41,7 +49,7 @@ def persisted(spark, turns200, monkeypatch):
     return calls
 
 
-@pytest.mark.parametrize("outcome", ["success", "failure"])
+@pytest.mark.parametrize("outcome", ["success", "failure", "cc_failure"])
 def test_pipeline_run_releases_detector_caches(
     spark, cfg, turns200, tmp_path, monkeypatch, persisted, outcome
 ):
@@ -50,6 +58,14 @@ def test_pipeline_run_releases_detector_caches(
     if outcome == "success":
         res = run(turns200, input_fingerprint="cache-scope")
         assert res["decisions"].count() > 0
+    elif outcome == "cc_failure":
+        # distributed CC that cannot converge in one round: its persisted
+        # adjacency must be released too
+        run = DedupPipeline(
+            spark, str(tmp_path / "out"), cfg.with_(cc_driver_threshold=0, cc_max_iters=1)
+        ).run
+        with pytest.raises(RuntimeError, match="did not converge"):
+            run(turns200, input_fingerprint="cache-scope")
     else:
 
         def boom(*args, **kwargs):
@@ -72,6 +88,44 @@ def test_run_dedup_dataframes_keeps_only_its_outputs_cached(spark, cfg, turns200
     assert len(persisted) >= 5
     kept = (res["conversations"], res["candidate_pairs"])
     assert all(df.storageLevel != StorageLevel.NONE for df in kept)
+    for df in kept:
+        df.unpersist()
+    assert _cache_is_empty(spark)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "transcript_decisions_es",
+        pytest.param(
+            "doc_substring_pairs",
+            marks=pytest.mark.skipif(
+                not os.path.isdir(SF_0001), reason="driver testdata absent"
+            ),
+        ),
+    ],
+)
+def test_driver_query_releases_detector_caches(spark, monkeypatch, persisted, name):
+    """Once a driver query's result is collected, no detector frame stays
+    cached: only the query's own conv and pairs persists, which its result
+    reads, remain."""
+    import __spark_entry__ as E
+
+    detector_frames: list = []
+    real = substring._cached
+
+    def recording(df, registry):
+        out = real(df, registry)
+        detector_frames.append(out)
+        return out
+
+    monkeypatch.setattr(substring, "_cached", recording)
+    assert E.queries()[name](spark, SF_0001).collect()
+    # gram join + rarest-gram argmin
+    assert len(detector_frames) >= 2
+    assert all(df.storageLevel == StorageLevel.NONE for df in detector_frames)
+    kept = [df for df in persisted if df.storageLevel != StorageLevel.NONE]
+    assert len(kept) == len(persisted) - len(detector_frames) == 2
     for df in kept:
         df.unpersist()
     assert _cache_is_empty(spark)

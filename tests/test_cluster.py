@@ -4,6 +4,7 @@ convergence counters."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from transcript_dedup.cluster import connected_components
 from transcript_dedup.config import DedupConfig
@@ -59,3 +60,13 @@ def test_long_path_converges(spark):
     got, counters = _cc(spark, edges, driver_path=False)
     assert set(got.values()) == {"p00"}
     assert 1 <= counters["cc_iterations"] <= DedupConfig().cc_max_iters
+
+
+def test_unconverged_labels_raise(spark):
+    # one round cannot settle a 33-node path: returning its labels would
+    # split the component silently
+    edges = [(f"p{i:02d}", f"p{i+1:02d}") for i in range(32)]
+    df = spark.createDataFrame(pd.DataFrame(edges, columns=["conv_a", "conv_b"]))
+    cfg = DedupConfig().with_(cc_driver_threshold=0, cc_max_iters=1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, cfg)

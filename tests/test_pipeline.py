@@ -16,7 +16,12 @@ from transcript_dedup.oracle import (
     recall,
     transitive_closure,
 )
-from transcript_dedup.pipeline import DedupPipeline, closure_pairs
+from transcript_dedup.pipeline import (
+    DedupPipeline,
+    closure_pairs,
+    detect_pairs,
+    run_dedup_dataframes,
+)
 
 
 @pytest.fixture(scope="module")
@@ -158,3 +163,40 @@ def test_determinism_under_repartition(spark, cfg, corpus200, tmp_path):
         for r in res0["decisions"].collect()
     }
     assert dec2 == dec0
+
+
+def test_sinks_agree(run200, spark, cfg, turns200):
+    """The TableIO sink (DedupPipeline.run) and the in-memory sink
+    (run_dedup_dataframes) run the same stages: same matched pairs,
+    components and decisions."""
+    from transcript_dedup.reconstruct import reconstruct_conversations
+    from transcript_dedup.signatures import add_signatures
+
+    _, res = run200
+    mem = run_dedup_dataframes(add_signatures(reconstruct_conversations(turns200), cfg), cfg)
+
+    def rows(df, cols):
+        return sorted(tuple(map(str, r)) for r in df.select(*cols).collect())
+
+    pair_cols = ("conv_a", "conv_b", "confidence")
+    dec_cols = ("group_id", "keep", "delete", "rule_applied", "decision_type", "min_confidence", "size")
+    for name, cols, keep in (
+        ("candidate_pairs", pair_cols, "is_match"),
+        ("components", ("conv_id", "component_id"), None),
+        ("decisions", dec_cols, None),
+    ):
+        a, b = res[name], mem[name]
+        if keep:
+            a, b = a.filter(keep), b.filter(keep)
+        got = rows(a, cols)
+        assert got and got == rows(b, cols), name
+    assert mem["n_conv"] == res["conversations"].count()
+    for name in ("conversations", "candidate_pairs"):
+        mem[name].unpersist()
+
+
+def test_detectors_reject_unknown_names(cfg):
+    for bad in (("exact", "minhash"), (), "exact"):
+        with pytest.raises(ValueError, match="detectors"):
+            with detect_pairs(None, cfg, detectors=bad):
+                pass

@@ -90,3 +90,11 @@ def test_substring_matches_brute_force_containment(spark, cfg, turns200, corpus)
 def test_substring_rejects_other_verify_modes(cfg):
     with pytest.raises(ValueError, match="instr"):
         substring_candidates(None, cfg, verify_mode="suffix_array")
+
+
+def test_tiny_cap_fits_the_probe_pattern_index(cfg):
+    # the probe holds up to two anchor patterns per tiny doc and indexes
+    # them in 24 bits: a cap whose patterns would not fit is refused
+    cfg.with_(substring_tiny_cap=(1 << 23) - 1)
+    with pytest.raises(ValueError, match="substring_tiny_cap"):
+        cfg.with_(substring_tiny_cap=1 << 23)

@@ -106,60 +106,67 @@ def connected_components(
     sym = e.unionByName(
         e.select(F.col("conv_b").alias("conv_a"), F.col("conv_a").alias("conv_b"))
     )
-    # adjacency is reused every iteration — persist once, repartitioned by src
+    # adjacency is reused every iteration — persist once, repartitioned by
+    # src; released however the loop ends
     sym = sym.repartition("conv_a").persist()
-
-    labels = (
-        sym.select(F.col("conv_a").alias("conv_id"))
-        .distinct()
-        .withColumn("label", F.col("conv_id"))
-        .localCheckpoint()
-    )
-
-    iters = 0
-    for it in range(cfg.cc_max_iters):
-        iters = it + 1
-        msgs = (
-            sym.join(labels, sym.conv_b == labels.conv_id, "inner")
-            .select(F.col("conv_a").alias("conv_id"), "label")
+    try:
+        labels = (
+            sym.select(F.col("conv_a").alias("conv_id"))
+            .distinct()
+            .withColumn("label", F.col("conv_id"))
+            .localCheckpoint()
         )
-        new_labels = (
-            msgs.unionByName(labels)
-            .groupBy("conv_id")
-            .agg(F.min("label").alias("label"))
-        )
-        # pointer jumping (path halving): also take the label of my label —
-        # halves the rounds needed for deep components
-        jumped = (
-            new_labels.alias("n")
-            .join(
-                new_labels.select(
-                    F.col("conv_id").alias("label"), F.col("label").alias("label2")
-                ).alias("p"),
-                "label",
-                "left",
+
+        iters = 0
+        for it in range(cfg.cc_max_iters):
+            iters = it + 1
+            msgs = (
+                sym.join(labels, sym.conv_b == labels.conv_id, "inner")
+                .select(F.col("conv_a").alias("conv_id"), "label")
             )
-            .select("conv_id", F.least("label", "label2").alias("label"))
-        )
-        # lazy lineage truncation: the convergence count below materializes it
-        new_labels = jumped.localCheckpoint(eager=False)
-        # convergence check every other round (each check is a full job; a
-        # wasted extra round is cheaper than a check per round)
-        if it % 2 == 1 or it == cfg.cc_max_iters - 1:
-            changed = (
+            new_labels = (
+                msgs.unionByName(labels)
+                .groupBy("conv_id")
+                .agg(F.min("label").alias("label"))
+            )
+            # pointer jumping (path halving): also take the label of my label —
+            # halves the rounds needed for deep components
+            jumped = (
                 new_labels.alias("n")
-                .join(labels.alias("o"), "conv_id")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .count()
+                .join(
+                    new_labels.select(
+                        F.col("conv_id").alias("label"), F.col("label").alias("label2")
+                    ).alias("p"),
+                    "label",
+                    "left",
+                )
+                .select("conv_id", F.least("label", "label2").alias("label"))
             )
-            if counters is not None:
-                counters[f"cc_changed_iter_{iters}"] = changed
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            labels = new_labels
-    if counters is not None:
-        counters["cc_iterations"] = iters
-    sym.unpersist()
+            # lazy lineage truncation: the convergence count below materializes it
+            new_labels = jumped.localCheckpoint(eager=False)
+            # convergence check every other round (each check is a full job; a
+            # wasted extra round is cheaper than a check per round)
+            if it % 2 == 1 or it == cfg.cc_max_iters - 1:
+                changed = (
+                    new_labels.alias("n")
+                    .join(labels.alias("o"), "conv_id")
+                    .filter(F.col("n.label") != F.col("o.label"))
+                    .count()
+                )
+                if counters is not None:
+                    counters[f"cc_changed_iter_{iters}"] = changed
+                labels = new_labels
+                if changed == 0:
+                    break
+            else:
+                labels = new_labels
+        else:  # the last round is always checked: labels were still changing
+            raise RuntimeError(
+                f"connected components did not converge in cc_max_iters="
+                f"{cfg.cc_max_iters} rounds ({changed} labels still changing)"
+            )
+        if counters is not None:
+            counters["cc_iterations"] = iters
+    finally:
+        sym.unpersist()
     return labels.select("conv_id", F.col("label").alias("component_id"))

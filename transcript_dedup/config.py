@@ -58,7 +58,6 @@ class DedupConfig:
     jaccard_threshold: float = 0.35
     # SimHash Hamming-ball radius (graft analogue of Levenshtein sim >= 0.9,
     # /root/reference/src/duplicates.ts:130-139)
-    simhash_bits: int = 64
     hamming_radius: int = 6
     # length-band tolerance, analogue of duration +/- 5 s
     # (/root/reference/src/duplicates.ts:85-95, config.json:93)
@@ -90,8 +89,9 @@ class DedupConfig:
     substring_gram_maxdf: int = 300
     # hard cap on the tiny-path (exhaustive broadcast) fallback doc count —
     # a boilerplate-degenerate corpus would otherwise route unbounded work
-    # into the corpus-scan nested-loop join. Overflow fails loud when the
-    # pipeline runs with counters (the production path).
+    # into the corpus-scan nested-loop join. Overflow always fails loud.
+    # The probe packs pattern indices into 24 bits and holds at most two
+    # anchor patterns per tiny doc, so 2 * cap must stay below 2^24.
     substring_tiny_cap: int = 10_000
 
     # --- skew handling ------------------------------------------------------
@@ -155,7 +155,6 @@ class DedupConfig:
 
     # --- clustering ----------------------------------------------------------
     cc_max_iters: int = 50
-    cc_checkpoint_every: int = 1        # localCheckpoint cadence (iterations)
     # below this many edges, connected components runs as driver-side
     # union-find (the graph after dedup is tiny relative to the corpus;
     # collect cost ~ O(edges)); above it, the distributed hash-to-min loop
@@ -171,6 +170,9 @@ class DedupConfig:
                 f"lsh_bands*lsh_rows ({self.lsh_bands}*{self.lsh_rows}) "
                 f"must equal num_perm ({self.num_perm})"
             )
+        if 2 * self.substring_tiny_cap >= 1 << 24:
+            raise ValueError(
+                f"substring_tiny_cap ({self.substring_tiny_cap}) must be below "
+                "2^23: the tiny-path probe indexes patterns in 24 bits"
+            )
 
-
-DEFAULT_CONFIG = DedupConfig()

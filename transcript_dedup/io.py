@@ -14,8 +14,8 @@ on a parquet directory + JSON manifest (SURVEY.md section 7 step 0):
     Iceberg append-manifest analogue;
   - readers always see the manifest's current snapshot (atomic rename of the
     manifest file = the commit point);
-  - ``compact()`` rewrites an append chain into a single data path (the
-    Iceberg rewrite_data_files analogue) — streaming calls it periodically;
+  - compaction (streaming.StreamingDedup.compact) rewrites an append chain
+    as one overwrite snapshot — the Iceberg rewrite_data_files analogue;
   - resume (pipeline.py) = "skip the stage if a committed snapshot exists
     whose input fingerprint matches" — the Iceberg analogue of the
     reference's anti-join resume (/root/reference/src/index.ts:186).
@@ -104,14 +104,6 @@ class TableIO:
         snap_id = snapshot or t["current"]
         snap = next(s for s in t["snapshots"] if s["id"] == snap_id)
         return spark.read.parquet(*_snap_paths(snap))
-
-    def compact(self, spark: SparkSession, table: str) -> int:
-        """Rewrite the current snapshot's append chain into one data path."""
-        snap = self.current_snapshot(table)
-        if snap is None or len(_snap_paths(snap)) <= 1:
-            return snap["id"] if snap else 0
-        df = spark.read.parquet(*_snap_paths(snap))
-        return self.write(df, table, fingerprint=snap.get("fingerprint"), mode="overwrite")
 
     def current_snapshot(self, table: str) -> dict | None:
         man = self._load()

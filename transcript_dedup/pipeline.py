@@ -1,29 +1,42 @@
-"""End-to-end pipeline orchestration with checkpoint/resume.
+"""End-to-end pipeline: one stage sequence, two sinks.
 
-Stage graph (each stage commits one TableIO snapshot + one metrics row,
-so a killed run resumes from the last committed stage — the scaled-out
-version of the reference's scan-state resume,
-/root/reference/src/index.ts:140-160, :186):
+Every batch caller runs the same four stages in order (``run_stages``):
 
   turns --reconstruct+signatures--> conversations
         --exact+lsh+substring-----> candidate_pairs (verified + scored)
         --connected components----> components
-        --rule cascade------------> decisions  (+ conflict invariant check)
+        --rule cascade------------> decisions
+
+Each stage's output goes to the caller's sink, ``sink(name, build)``:
+
+  TableIO sink (DedupPipeline.run): each stage commits one TableIO snapshot
+      + one metrics row, so a killed run resumes from the last committed
+      stage (the scaled-out version of the reference's scan-state resume,
+      /root/reference/src/index.ts:140-160, :186); the keep/delete
+      conflict invariant is checked after decisions.
+  in-memory sink (run_dedup_dataframes): conversations and candidate_pairs
+      are persisted, components and decisions stay lazy — for embedding
+      the engine in other dataflows (e.g. the driver's queries).
+
+A stage's cache scope closes as soon as its sink returns, so the detector
+caches live exactly until the pairs are committed.
 
 Resume semantics: a stage is skipped iff its table's current snapshot was
-committed with the same fingerprint = hash(input fingerprint, config,
-upstream snapshot ids). Changing the config or the input invalidates
-downstream stages automatically.
+committed with the same fingerprint = hash(stage, upstream fingerprint,
+upstream snapshot id), rooted at the input fingerprint and the config.
+Changing the config or the input invalidates downstream stages.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import ExitStack, contextmanager
 from dataclasses import asdict
+from functools import reduce
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,6 +55,13 @@ from .metrics import MetricsLog, StageTimer, partition_counts
 from .reconstruct import reconstruct_conversations
 from .signatures import KERNEL_VERSION, add_signatures, assert_cid_unique
 
+STAGES = ("conversations", "candidate_pairs", "components", "decisions")
+DETECTORS = ("exact", "lsh", "substring")
+
+# sink(stage name, build) -> the stage's committed frame; build(counters)
+# constructs the stage, counters=None meaning "collect no counters"
+Sink = Callable[[str, Callable[[dict | None], DataFrame]], DataFrame]
+
 
 def _fp(*parts) -> str:
     return hashlib.sha256("|".join(str(p) for p in parts).encode()).hexdigest()[:16]
@@ -53,9 +73,11 @@ def detect_pairs(
     cfg: DedupConfig,
     counters: dict | None = None,
     n_conv: int | None = None,
+    detectors: tuple[str, ...] = DETECTORS,
 ) -> Iterator[DataFrame]:
     """The pairs stage: exact ∪ LSH ∪ substring candidates -> verified,
-    scored candidate_pairs (lazy). Every caller composes it here.
+    scored candidate_pairs (lazy). Every caller composes it here;
+    ``detectors`` picks a non-empty subset of ``DETECTORS``.
 
     Owns the stage's cache registry: the frames the detectors persist (LSH
     band keys when the hot-key pre-pass runs, the substring gram join and
@@ -69,18 +91,60 @@ def detect_pairs(
 
     ``n_conv`` is the corpus row count when the caller knows it (see
     lsh_candidates)."""
+    if not detectors or set(detectors) - set(DETECTORS):
+        raise ValueError(f"detectors must be a non-empty subset of {DETECTORS}: {detectors!r}")
     caches: list[DataFrame] = []
+    arms = {
+        "exact": lambda: exact_candidates(conv),
+        "lsh": lambda: lsh_candidates(conv, cfg, counters, cache_registry=caches, n_conv=n_conv),
+        "substring": lambda: substring_candidates(conv, cfg, counters, cache_registry=caches),
+    }
     try:
-        cand = (
-            exact_candidates(conv)
-            .unionByName(
-                lsh_candidates(conv, cfg, counters, cache_registry=caches, n_conv=n_conv)
-            )
-            .unionByName(substring_candidates(conv, cfg, counters, cache_registry=caches))
-        )
+        cand = reduce(DataFrame.unionByName, [arms[d]() for d in DETECTORS if d in detectors])
         yield verify_candidates(cand, conv, cfg)
     finally:
         release_key_caches(caches)
+
+
+def run_stages(
+    frames: dict, cfg: DedupConfig, sink: Sink, detectors: tuple[str, ...] = DETECTORS
+) -> dict:
+    """Run the four stages in order, each through ``sink``. ``frames``
+    holds the input — ``turns``, or ``conversations`` already built — and
+    gains every stage's committed frame, plus ``n_conv`` if pairs built."""
+
+    def conversations(counters, scope):
+        if "conversations" in frames:
+            return frames["conversations"]
+        return add_signatures(reconstruct_conversations(frames["turns"]), cfg)
+
+    def candidate_pairs(counters, scope):
+        conv = frames["conversations"]
+        # id contract first: every detector keys on cid, so a (loud) xxhash64
+        # birthday collision aborts before any pair is emitted (remediation:
+        # bump cfg.cid_seed). Runs only when the stage builds. It also
+        # materializes a persisted conv before the pairs job races many AQE
+        # query-stages past an unpopulated cache (each recomputes the kernel)
+        n = frames["n_conv"] = assert_cid_unique(conv)
+        if counters is not None:
+            counters["n_conv_cid_checked"] = n
+        return scope.enter_context(
+            detect_pairs(conv, cfg, counters, n_conv=n, detectors=detectors)
+        )
+
+    def components(counters, scope):
+        return connected_components(frames["candidate_pairs"].filter("is_match"), cfg, counters)
+
+    def decisions(counters, scope):
+        return make_decisions(
+            frames["components"], frames["conversations"], frames["candidate_pairs"], cfg
+        )
+
+    for name, build in zip(STAGES, (conversations, candidate_pairs, components, decisions)):
+        # the stage's cache scope closes once the sink has committed it
+        with ExitStack() as scope:
+            frames[name] = sink(name, lambda counters: build(counters, scope))
+    return frames
 
 
 class DedupPipeline:
@@ -104,152 +168,88 @@ class DedupPipeline:
         )
 
     # ------------------------------------------------------------------
-    def _stage(self, name: str, fingerprint: str, build, rows_in, resume: bool):
-        """Run one stage with resume + metrics; returns (df, snapshot_id).
+    def _table_sink(self, turns: DataFrame, input_fingerprint: str, resume: bool) -> Sink:
+        """The TableIO sink: resume a stage whose current snapshot carries
+        its fingerprint, else build it, commit a snapshot and log its
+        metrics row. A stage's ``rows_in`` is the previous stage's committed
+        rows; ``turns.count()`` runs only if conversations builds, so a
+        fully-resumed ``run()`` stays scanless."""
+        upstream, rows = (input_fingerprint, self.cfg_fp), None
 
-        ``rows_in`` may be an int or a zero-arg callable — the callable is
-        only invoked when the stage actually builds, so a fully-resumed
-        ``run()`` never launches the input-count job (a full input scan at
-        10^12 turns just to re-log a metrics field)."""
-        if resume and self.io.has_fingerprint(name, fingerprint):
-            snap = self.io.current_snapshot(name)
-            return self.io.read(self.spark, name), snap["id"]
-        t = StageTimer()
-        counters: dict = {}
-        df = build(counters)
-        snap_id = self.io.write(df, name, fingerprint=fingerprint)
-        out = self.io.read(self.spark, name)
-        self.metrics.log_stage(
-            name,
-            snap_id,
-            rows_in() if callable(rows_in) else rows_in,
-            self.io.current_snapshot(name)["rows"],
-            t.ms(),
-            counters=counters,
-            partitions=partition_counts(out),
-        )
-        return out, snap_id
+        def commit(name, build):
+            nonlocal upstream, rows
+            fp = _fp(name, *upstream)
+            if resume and self.io.has_fingerprint(name, fp):
+                snap_id = self.io.current_snapshot(name)["id"]
+                out = self.io.read(self.spark, name)
+            else:
+                t = StageTimer()
+                counters: dict = {}
+                df = build(counters)
+                snap_id = self.io.write(df, name, fingerprint=fp)
+                out = self.io.read(self.spark, name)
+                self.metrics.log_stage(
+                    name,
+                    snap_id,
+                    turns.count() if rows is None else rows,
+                    self.io.current_snapshot(name)["rows"],
+                    t.ms(),
+                    counters=counters,
+                    partitions=partition_counts(out),
+                )
+            upstream, rows = (fp, snap_id), self.io.current_snapshot(name)["rows"]
+            return out
+
+        return commit
 
     # ------------------------------------------------------------------
-    def run(
-        self,
-        turns: DataFrame,
-        input_fingerprint: str = "adhoc",
-        resume: bool = True,
-    ) -> dict:
+    def run(self, turns: DataFrame, input_fingerprint: str = "adhoc", resume: bool = True) -> dict:
         """Run (or resume) the full pipeline; returns dict of DataFrames."""
-        cfg = self.cfg
-
-        fp_conv = _fp("conversations", input_fingerprint, self.cfg_fp)
-        conv, snap_conv = self._stage(
-            "conversations",
-            fp_conv,
-            lambda c: add_signatures(reconstruct_conversations(turns), cfg),
-            lambda: turns.count(),  # only counted when the stage builds
-            resume,
+        frames = run_stages(
+            {"turns": turns}, self.cfg, self._table_sink(turns, input_fingerprint, resume)
         )
-
-        # conv row count comes from the committed snapshot manifest — no job
-        n_conv = self.io.current_snapshot("conversations")["rows"]
-
-        fp_pairs = _fp("candidate_pairs", fp_conv, snap_conv)
-        # the detector caches live until the pairs snapshot is committed (or
-        # the stage failed): cache_scope closes right after the stage
-        with ExitStack() as cache_scope:
-
-            def build_pairs(counters):
-                # id contract first: every detector keys on cid, so a (loud)
-                # birthday collision must abort before any pair is emitted.
-                # Runs only when the stage builds — a fully-resumed run
-                # stays scanless.
-                n = counters["n_conv_cid_checked"] = assert_cid_unique(conv)
-                return cache_scope.enter_context(
-                    detect_pairs(conv, cfg, counters, n_conv=n)
-                )
-
-            pairs, snap_pairs = self._stage(
-                "candidate_pairs", fp_pairs, build_pairs, n_conv, resume
-            )
-
-        fp_comp = _fp("components", fp_pairs, snap_pairs)
-        comps, snap_comp = self._stage(
-            "components",
-            fp_comp,
-            lambda c: connected_components(pairs.filter("is_match"), cfg, c),
-            self.io.current_snapshot("candidate_pairs")["rows"],
-            resume,
-        )
-
-        fp_dec = _fp("decisions", fp_comp, snap_comp)
-        decisions, _ = self._stage(
-            "decisions",
-            fp_dec,
-            lambda c: make_decisions(comps, conv, pairs, cfg),
-            self.io.current_snapshot("components")["rows"],
-            resume,
-        )
-
-        conflicts = find_conflicts(decisions)
-        n_conflicts = conflicts.count()
+        n_conflicts = find_conflicts(frames["decisions"]).count()
         if n_conflicts:
             raise AssertionError(
                 f"keep/delete conflict invariant violated: {n_conflicts} files"
             )
-
         self.metrics.flush(self.spark)
-        return {
-            "conversations": conv,
-            "candidate_pairs": pairs,
-            "components": comps,
-            "decisions": decisions,
-        }
+        return {name: frames[name] for name in STAGES}
+
+
+def _in_memory(name: str, build) -> DataFrame:
+    """The sink of run_dedup_dataframes: no TableIO, no metrics, no
+    counters."""
+    df = build(None)
+    if name == "conversations" and df.storageLevel == StorageLevel.NONE:
+        # persist, not localCheckpoint: a round-8 A/B measured the pinned
+        # 240k pairs job consistently SLOWER with the lineage-truncating
+        # checkpoint (21.2/27.1 -> 23.3/32.5 s main-count job at T4) — the
+        # columnar cache out-reads the row-object RDD across the pairs job's
+        # 6-8 full conv passes; truncation saves only ~1 s/run of planning.
+        df = df.persist()
+    elif name == "candidate_pairs":
+        # verified pairs feed CC edges, decision confidence and the caller —
+        # persist so the detectors run once; the eager count fills the cache
+        # while the detector caches are still in scope
+        df = df.persist()
+        df.count()
+    return df
 
 
 def run_dedup_dataframes(
     conv: DataFrame,
     cfg: DedupConfig | None = None,
+    detectors: tuple[str, ...] = DETECTORS,
 ) -> dict:
-    """Pure-DataFrame composition of the detect->verify->cluster->decide
-    stages (no TableIO, no metrics) — for embedding the engine in other
-    dataflows (e.g. the driver's documents-table queries)."""
-    from pyspark import StorageLevel
+    """The stages over built conversations through the in-memory sink —
+    for embedding the engine in other dataflows (e.g. the driver's
+    queries). ``detectors`` as in detect_pairs.
 
-    cfg = cfg or DedupConfig()
-    # persist, not localCheckpoint: a round-8 A/B replaced this with a
-    # lineage-truncating localCheckpoint (1-node plan for the ~8 downstream
-    # conv references) and measured the pinned 240k pairs job consistently
-    # SLOWER (21.2/27.1 -> 23.3/32.5 s main-count job at T4, interleaved) —
-    # the columnar InMemoryRelation cache out-reads the checkpointed
-    # row-object RDD across the pairs job's 6-8 full conv passes, and the
-    # driver-side planning the truncation saves is only ~1 s/run here.
-    if conv.storageLevel == StorageLevel.NONE:
-        conv = conv.persist()
-    # materialize the cache NOW: the pairs job fans conv out into many
-    # concurrent AQE query-stages, and racing past an unpopulated cache
-    # recomputes the signature kernel once per racing stage (measured).
-    # The action doubles as the cid-injectivity guard (loud abort on an
-    # xxhash64 birthday collision — remediation: bump cfg.cid_seed).
-    n_conv = assert_cid_unique(conv)
-    # verified pairs feed three consumers (CC edges, decision confidence,
-    # caller) — persist so the detector cascade runs exactly once; the
-    # eager count materializes the cache (same AQE-race rationale as conv)
-    # and lets the detector caches be released as the block exits
-    with detect_pairs(conv, cfg, n_conv=n_conv) as pairs:
-        pairs = pairs.persist()
-        pairs.count()
-    comps = connected_components(pairs.filter("is_match"), cfg)
-    decisions = make_decisions(comps, conv, pairs, cfg)
-    # n_conv rides along so callers (e.g. tools/bench_pipeline.py) don't pay a
-    # second full-corpus count job for a number this run already computed;
-    # conversations is the PERSISTED conv — callers joining against it
-    # reuse the populated cache instead of recomputing the kernel
-    return {
-        "conversations": conv,
-        "candidate_pairs": pairs,
-        "components": comps,
-        "decisions": decisions,
-        "n_conv": n_conv,
-    }
+    Returns the four stage frames plus ``n_conv``, so callers (e.g.
+    tools/bench_pipeline.py) pay no second full-corpus count; conversations
+    is the PERSISTED conv, so joins against it reuse the populated cache."""
+    return run_stages({"conversations": conv}, cfg or DedupConfig(), _in_memory, detectors)
 
 
 def closure_pairs(components: DataFrame) -> DataFrame:
