@@ -18,11 +18,10 @@ import pytest
 from pyspark import StorageLevel
 
 from transcript_dedup import pipeline
-from transcript_dedup.pipeline import DedupPipeline, run_dedup_dataframes
 from transcript_dedup.detectors import substring
+from transcript_dedup.pipeline import DedupPipeline, run_dedup_dataframes
 from transcript_dedup.reconstruct import reconstruct_conversations
 from transcript_dedup.signatures import add_signatures
-
 
 SF_0001 = "/root/testdata/sf0.001"
 

@@ -180,14 +180,12 @@ def test_sinks_agree(run200, spark, cfg, turns200):
 
     pair_cols = ("conv_a", "conv_b", "confidence")
     dec_cols = ("group_id", "keep", "delete", "rule_applied", "decision_type", "min_confidence", "size")
-    for name, cols, keep in (
+    for name, cols, where in (
         ("candidate_pairs", pair_cols, "is_match"),
-        ("components", ("conv_id", "component_id"), None),
-        ("decisions", dec_cols, None),
+        ("components", ("conv_id", "component_id"), "true"),
+        ("decisions", dec_cols, "true"),
     ):
-        a, b = res[name], mem[name]
-        if keep:
-            a, b = a.filter(keep), b.filter(keep)
+        a, b = res[name].filter(where), mem[name].filter(where)
         got = rows(a, cols)
         assert got and got == rows(b, cols), name
     assert mem["n_conv"] == res["conversations"].count()
