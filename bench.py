@@ -53,6 +53,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -110,7 +111,7 @@ CACHE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "c
 # timed phase (headline included) bench.py measures one pinned T4 pipeline
 # rep; if its wall exceeds the canary threshold the draw is considered
 # degraded. Round-7 changes (judge items #1/#3):
-#   * the threshold is DERIVED, not a hand-chased constant: rolling min of
+#   * the threshold is DERIVED, not a hand-chased constant: the median of
 #     the last CANARY_BAND_KEEP clean pinned-T4 readings (canaries, window
 #     hi reps, re-probes) x CANARY_BAND_MARGIN, persisted per
 #     (convs x cores) in BENCH/canary_band.json; provenance is recorded in
@@ -178,16 +179,19 @@ def _append_band(walls: list[float]) -> None:
 
 
 def _canary_threshold() -> tuple[float, str]:
-    """(threshold_sec, provenance) — env override, else rolling-min of the
-    recorded clean band x margin, else the static default."""
+    """(threshold_sec, provenance) — env override, else the median of the
+    recorded clean band x margin, else the static default. The median, not
+    the minimum: one unusually fast reading must not set a gate that the
+    typical clean run fails (a 48.44 s outlier in a ~65 s band gated at
+    52.3 s and failed every following run)."""
     env = os.environ.get("BENCH_CANARY_THRESH")
     if env:
         return float(env), "env:BENCH_CANARY_THRESH"
     band = _load_band()
     if band:
         return (
-            round(min(band) * CANARY_BAND_MARGIN, 1),
-            f"rolling_min({len(band)})x{CANARY_BAND_MARGIN}",
+            round(statistics.median(band) * CANARY_BAND_MARGIN, 1),
+            f"median({len(band)})x{CANARY_BAND_MARGIN}",
         )
     return CANARY_DEFAULT_THRESH, "default"
 

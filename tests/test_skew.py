@@ -227,3 +227,100 @@ def test_substring_gramless_fallback_paths(spark, cfg):
     assert (b, o) in pairs, pairs  # short-needle arm
     assert counters["substring_tiny_docs"] >= 2
     assert counters["substring_tiny_short_docs"] >= 1
+
+
+@pytest.fixture(params=["aqe_on", "aqe_off"])
+def aqe(spark, request):
+    """Runs the test with adaptive execution on and off: AQE moves stage
+    boundaries and prunes stages whose consumers come out empty, both of
+    which decide where an observed counter's metrics are collected."""
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "true" if request.param == "aqe_on" else "false")
+    yield request.param
+    spark.conf.set(key, before)
+
+
+def _key_size_counters(conv, cfg) -> dict:
+    """The LSH counters by definition, from exact band-key sizes: a key of
+    more than band_key_drop members is a stop band, one of more than
+    band_key_cap (up to drop) is salted — whether the pre-pass or the
+    post-aggregation filter handles it. The pre-pass counters come from
+    the sampled hot-key table itself. These are the values the former
+    collect-based counters returned."""
+    from pyspark.sql import functions as F
+
+    from transcript_dedup.detectors.lsh import _hot_band_sizes, band_keys
+
+    keys = band_keys(conv, cfg)
+    cap, drop = cfg.band_key_cap, cfg.band_key_drop
+    sizes = keys.groupBy("band_id", "band_hash").agg(F.count("*").alias("sz"))
+    r = sizes.agg(
+        F.expr(f"sum(if(sz > {drop}, sz, 0))").alias("rows"),
+        F.expr(f"count_if(sz > {drop})").alias("keys"),
+        F.expr(f"count_if(sz > {cap} AND sz <= {drop})").alias("salted"),
+    ).first()
+    hot = _hot_band_sizes(keys, cfg).agg(
+        F.count("*").alias("hk"), F.expr(f"sum(if(hot_sz > {drop}, hot_sz, 0))").alias("dr")
+    ).first()
+    return {
+        "lsh_stop_band_rows": int(r["rows"] or 0),
+        "lsh_stop_band_keys": int(r["keys"]),
+        "lsh_salted_keys": int(r["salted"]),
+        "lsh_hot_keys_prepass": int(hot["hk"]),
+        "lsh_predropped_rows": int(hot["dr"] or 0),
+    }
+
+
+def test_observed_lsh_counters_equal_key_size_counts(spark, skewed_conv, aqe):
+    """The observed counters equal the counts taken straight from the band
+    keys, with AQE on and off, on a corpus where stop bands, salted keys
+    and the hot-key pre-pass all engage."""
+    conv, cfg = skewed_conv
+    want = _key_size_counters(conv, cfg)
+    assert want["lsh_stop_band_keys"] > 0 and want["lsh_salted_keys"] > 0, want
+    assert want["lsh_hot_keys_prepass"] > 0, want
+    counters: dict = {}
+    lsh_candidates(conv, cfg, counters).count()
+    assert {k: int(v) for k, v in counters.items()} == want
+
+
+def test_observed_lsh_counters_without_prepass(spark, skewed_conv, aqe):
+    """Below the pre-pass floor every key goes through the
+    post-aggregation filter; the counters still match the key sizes."""
+    conv, cfg = skewed_conv
+    want = _key_size_counters(conv, cfg)
+    counters: dict = {}
+    lsh_candidates(conv, cfg, counters, n_conv=conv.count()).count()
+    got = {k: int(v) for k, v in counters.items()}
+    assert got == {**want, "lsh_hot_keys_prepass": 0, "lsh_predropped_rows": 0}
+
+
+def test_observed_counters_fire_once_per_action(spark, skewed_conv, aqe):
+    """An observed counter holds the first action's values: a second
+    action does not add to them, and a frame read twice by one action
+    (a self-union) is not counted twice."""
+    conv, cfg = skewed_conv
+    want = _key_size_counters(conv, cfg)
+    counters: dict = {}
+    pairs = lsh_candidates(conv, cfg, counters)
+    pairs.unionByName(pairs).count()
+    first = {k: int(v) for k, v in counters.items()}
+    pairs.count()
+    assert first == {k: int(v) for k, v in counters.items()} == want
+
+
+def test_observed_counter_read_before_its_action_raises(spark, skewed_conv):
+    """Reading a counter before any action computed its frame raises at
+    once instead of blocking; after the action it resolves, also through
+    float() and comparisons."""
+    conv, cfg = skewed_conv
+    counters: dict = {}
+    pairs = lsh_candidates(conv, cfg, counters)
+    for read in (int, float, lambda c: c > 0, lambda c: c == 0):
+        with pytest.raises(RuntimeError, match="before the action"):
+            read(counters["lsh_stop_band_keys"])
+    assert "pending" in repr(counters["lsh_stop_band_keys"])
+    pairs.write.format("noop").mode("overwrite").save()
+    c = counters["lsh_stop_band_keys"]
+    assert c > 0 and float(c) == int(c) and 0 < c

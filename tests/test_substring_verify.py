@@ -98,3 +98,122 @@ def test_tiny_cap_fits_the_probe_pattern_index(cfg):
     cfg.with_(substring_tiny_cap=(1 << 23) - 1)
     with pytest.raises(ValueError, match="substring_tiny_cap"):
         cfg.with_(substring_tiny_cap=1 << 23)
+
+
+#: gram df cap of the stop-gram corpus: the boilerplate below is shared by
+#: more docs than this, so its grams are stop-listed
+STOP_MAXDF = 5
+BOILER = (
+    "thank you for contacting support, we have received your request and a member "
+    "of our team will get back to you within two business days with an update"
+)
+RARE = (
+    "the quarterly ledger reconciliation for the northern warehouse showed a "
+    "discrepancy of forty two crates of copper fittings"
+)
+
+
+@pytest.fixture(scope="module")
+def stop_gram_conv(spark, cfg):
+    """Documents whose shared boilerplate is stop-listed: 12 outers carry
+    the boilerplate plus a unique tail, one inner doc IS the boilerplate
+    (every sampled gram stopped: tiny path), and one inner doc with rare
+    grams sits inside one outer (gram path). A few unrelated docs pad it."""
+    docs = [(1, BOILER), (2, RARE), (3, "prefix words " + RARE + " and a closing remark")]
+    docs += [(10 + i, f"{BOILER} ticket number {i:04d} closed by agent {i * 7}") for i in range(12)]
+    docs += [(50 + i, f"an unrelated note about topic {i} written on day {i * 3}") for i in range(4)]
+    conv = signed_records(
+        spark.createDataFrame(docs, "doc_id long, text string"),
+        cfg.with_(substring_gram_maxdf=STOP_MAXDF),
+    ).persist()
+    yield conv, cfg.with_(substring_gram_maxdf=STOP_MAXDF)
+    conv.unpersist()
+
+
+def _substring_paths(conv, cfg) -> tuple[set, set]:
+    """(gram-path verified pairs, tiny-path verified pairs), cid-keyed."""
+    from transcript_dedup.detectors.substring import _gram_pairs, _tiny_pairs, hydrate_and_verify
+
+    gram_pairs, all_stopped = _gram_pairs(conv, cfg, None, None)
+    gram = {tuple(r) for r in hydrate_and_verify(gram_pairs, conv).select("conv_a", "conv_b").collect()}
+    tiny = {tuple(r) for r in _tiny_pairs(conv, all_stopped, cfg, None).collect()}
+    return gram, tiny
+
+
+@pytest.mark.parametrize("corpus", ["generated200", "stop_grams"])
+def test_gram_and_tiny_paths_are_disjoint(spark, cfg, turns200, stop_gram_conv, corpus):
+    """substring_candidates unions the two verified pair sets without a
+    distinct: a pair's inner doc either has a kept sampled gram (gram path)
+    or none (tiny path), never both, so the sets never share a pair."""
+    if corpus == "generated200":
+        conv = add_signatures(reconstruct_conversations(turns200), cfg).persist()
+    else:
+        conv, cfg = stop_gram_conv
+    gram, tiny = _substring_paths(conv, cfg)
+    assert gram, "vacuous: no gram-path pair"
+    if corpus == "stop_grams":
+        assert tiny, "vacuous: no tiny-path pair"
+    else:
+        conv.unpersist()
+    assert not gram & tiny
+
+
+@pytest.fixture(params=["aqe_on", "aqe_off"])
+def shuffled_joins(spark, request):
+    """AQE on and off, with broadcast joins off so the gram df table is
+    shuffled into its join, not broadcast."""
+    conf = {
+        "spark.sql.adaptive.enabled": "true" if request.param == "aqe_on" else "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    before = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    yield request.param
+    for k, v in before.items():
+        spark.conf.set(k, v)
+
+
+def test_observed_substring_counters(spark, stop_gram_conv, shuffled_joins):
+    """substring_stop_grams, observed on the gram df aggregate, equals the
+    number of grams over the df cap counted directly, and the tiny-path
+    counters equal the fallback docs counted directly — with and without
+    the pipeline's cache registry."""
+    from pyspark.sql import functions as F
+
+    conv, cfg = stop_gram_conv
+    maxdf = cfg.substring_gram_maxdf
+    grams = conv.filter("length(norm_text) > 0").select(
+        "cid", "norm_text", F.explode("sub_grams").alias("gram")
+    )
+    df = grams.groupBy("gram").agg(F.count("*").alias("df"))
+    stopped = grams.join(df, "gram").groupBy("cid", "norm_text").agg(F.min("df").alias("m"))
+    tiny = (
+        stopped.filter(f"m > {maxdf}").select("norm_text")
+        .unionByName(conv.filter("length(norm_text) > 0 AND size(sub_grams) = 0").select("norm_text"))
+        .collect()
+    )
+    want = {
+        "substring_stop_grams": df.filter(f"df > {maxdf}").count(),
+        "substring_tiny_docs": len(tiny),
+        "substring_tiny_short_docs": sum(len(r["norm_text"]) < cfg.substring_gram_k for r in tiny),
+    }
+    assert want["substring_stop_grams"] > 0 and want["substring_tiny_docs"] > 0, want
+    for registry in (None, []):
+        counters: dict = {}
+        substring_candidates(conv, cfg, counters, cache_registry=registry).count()
+        release_key_caches(registry or [])
+        assert {k: int(v) for k, v in counters.items()} == want
+
+
+def test_tiny_path_overflow_fails_loud(spark, stop_gram_conv):
+    """The bounded tiny-path collection holds at most cap+1 docs: exactly
+    cap fallback docs run, one more raises instead of dropping recall."""
+    conv, cfg = stop_gram_conv
+    counters: dict = {}
+    substring_candidates(conv, cfg, counters).count()
+    n = int(counters["substring_tiny_docs"])
+    assert n >= 1
+    substring_candidates(conv, cfg.with_(substring_tiny_cap=n)).count()
+    with pytest.raises(RuntimeError, match="exceeds cap"):
+        substring_candidates(conv, cfg.with_(substring_tiny_cap=n - 1))

@@ -23,7 +23,7 @@ interactive branch becomes a flag, SURVEY 2.8).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
@@ -35,36 +35,36 @@ def select_representatives(components: DataFrame, conv: DataFrame) -> DataFrame:
     m = components.join(
         conv.select("conv_id", "completeness", "total_chars", "first_ts"), "conv_id"
     )
-    w = Window.partitionBy("component_id")
+    # window and aggregate columns are SQL text: one Py4J call per
+    # expression instead of one per column reference, literal and operator
+    w = "OVER (PARTITION BY component_id)"
 
-    def unique_max(col, asc=False):
-        target = F.min(col).over(w) if asc else F.max(col).over(w)
-        is_best = F.col(col) == target
-        n_best = F.sum(is_best.cast("int")).over(w)
-        return is_best & (n_best == 1)
+    def unique_max(col: str, agg: str = "max") -> str:
+        is_best = f"{col} = {agg}({col}) {w}"
+        return f"{is_best} AND sum(CAST({is_best} AS INT)) {w} = 1"
 
     m = (
-        m.withColumn("win_complete", unique_max("completeness"))
-        .withColumn("win_length", unique_max("total_chars"))
-        .withColumn("win_earliest", unique_max("first_ts", asc=True))
-        .withColumn("win_first_id", F.col("conv_id") == F.min("conv_id").over(w))
+        m.withColumn("win_complete", F.expr(unique_max("completeness")))
+        .withColumn("win_length", F.expr(unique_max("total_chars")))
+        .withColumn("win_earliest", F.expr(unique_max("first_ts", "min")))
+        .withColumn("win_first_id", F.expr(f"conv_id = min(conv_id) {w}"))
     )
     # does any member win at rule k? (if not, the rule tied -> fall through)
-    any_ = lambda c: F.max(F.col(c).cast("int")).over(w) == 1  # noqa: E731
-    rule = (
-        F.when(any_("win_complete"), F.lit("keep-most-complete"))
-        .when(any_("win_length"), F.lit("keep-longest"))
-        .when(any_("win_earliest"), F.lit("keep-earliest"))
-        .otherwise(F.lit("keep-first-id"))
+    rules = (
+        ("win_complete", "keep-most-complete"),
+        ("win_length", "keep-longest"),
+        ("win_earliest", "keep-earliest"),
     )
-    is_keep = (
-        F.when(any_("win_complete"), F.col("win_complete"))
-        .when(any_("win_length"), F.col("win_length"))
-        .when(any_("win_earliest"), F.col("win_earliest"))
-        .otherwise(F.col("win_first_id"))
-    )
-    return m.select(
-        "component_id", "conv_id", is_keep.alias("is_keep"), rule.alias("rule_applied")
+
+    def cascade(then) -> str:
+        whens = " ".join(f"WHEN max(CAST({c} AS INT)) {w} = 1 THEN {then(c, r)}" for c, r in rules)
+        return f"CASE {whens} ELSE {then('win_first_id', 'keep-first-id')} END"
+
+    return m.selectExpr(
+        "component_id",
+        "conv_id",
+        f"{cascade(lambda c, r: c)} AS is_keep",
+        f"{cascade(lambda c, r: repr(r))} AS rule_applied",
     )
 
 
@@ -82,72 +82,52 @@ def make_decisions(
     # auto-decider.ts:196)
     pair_conf = (
         pairs.filter("is_match")
-        .join(
-            components.select(
-                F.col("conv_id").alias("conv_a"), "component_id"
-            ),
-            "conv_a",
-        )
+        .join(components.selectExpr("conv_id AS conv_a", "component_id"), "conv_a")
         .groupBy("component_id")
-        .agg(F.min("confidence").alias("min_confidence"))
+        .agg(F.expr("min(confidence) AS min_confidence"))
     )
 
     # metadata-field disagreement per component (compareMetadataFields,
     # /root/reference/src/auto-decider.ts:75-108: differing fields flag the
     # decision for metadata review) — transcript fields: role_seq, tool_set,
     # turn_count
+    differs = ", ".join(
+        f"CASE WHEN count(DISTINCT {sql}) > 1 THEN '{name}' END"
+        for name, sql in (
+            ("role_seq", "role_seq"),
+            ("tool_set", "to_json(struct(tool_set))"),
+            ("turn_count", "turn_count"),
+        )
+    )
     meta_diff = (
         components.join(
             conv.select("conv_id", "role_seq", "tool_set", "turn_count"), "conv_id"
         )
         .groupBy("component_id")
-        .agg(
-            F.filter(
-                F.array(
-                    F.when(F.count_distinct("role_seq") > 1, F.lit("role_seq")),
-                    F.when(
-                        F.count_distinct(F.to_json(F.struct("tool_set"))) > 1,
-                        F.lit("tool_set"),
-                    ),
-                    F.when(F.count_distinct("turn_count") > 1, F.lit("turn_count")),
-                ),
-                lambda x: x.isNotNull(),
-            ).alias("meta_differences")
-        )
+        .agg(F.expr(f"filter(array({differs}), x -> x IS NOT NULL) AS meta_differences"))
     )
 
+    no_diffs = "coalesce(meta_differences, CAST(array() AS ARRAY<STRING>))"
     dec = (
         ranked.groupBy("component_id", "rule_applied")
         .agg(
-            F.sort_array(F.collect_list(F.when(F.col("is_keep"), F.col("conv_id")))).alias(
-                "keep"
-            ),
-            F.sort_array(
-                F.collect_list(F.when(~F.col("is_keep"), F.col("conv_id")))
-            ).alias("delete"),
-            F.count("*").cast("int").alias("size"),
+            F.expr("sort_array(collect_list(CASE WHEN is_keep THEN conv_id END)) AS keep"),
+            F.expr("sort_array(collect_list(CASE WHEN NOT is_keep THEN conv_id END)) AS `delete`"),
+            F.expr("CAST(count(1) AS INT) AS size"),
         )
         .join(pair_conf, "component_id", "left")
         .join(meta_diff, "component_id", "left")
-        .select(
-            F.col("component_id").alias("group_id"),
+        .selectExpr(
+            "component_id AS group_id",
             "keep",
-            "delete",
+            "`delete`",
             "rule_applied",
-            F.when(
-                F.coalesce("min_confidence", F.lit(0)) >= cfg.confidence_threshold,
-                F.lit("auto"),
-            )
-            .otherwise(F.lit("needs_review"))
-            .alias("decision_type"),
-            F.coalesce("min_confidence", F.lit(0)).alias("min_confidence"),
+            f"CASE WHEN coalesce(min_confidence, 0) >= {cfg.confidence_threshold} THEN 'auto'"
+            " ELSE 'needs_review' END AS decision_type",
+            "coalesce(min_confidence, 0) AS min_confidence",
             "size",
-            F.coalesce("meta_differences", F.array().cast("array<string>")).alias(
-                "meta_differences"
-            ),
-            (F.size(F.coalesce("meta_differences", F.array().cast("array<string>"))) > 0).alias(
-                "needs_metadata_review"
-            ),
+            f"{no_diffs} AS meta_differences",
+            f"size({no_diffs}) > 0 AS needs_metadata_review",
         )
     )
     return dec

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
+from ..metrics import observe
 
 def release_key_caches(registry: list[DataFrame]) -> None:
     """Unpersist every frame a detector registered in ``registry`` (the
@@ -59,16 +60,14 @@ def band_keys(conv: DataFrame, cfg: DedupConfig) -> DataFrame:
     per-row id bytes dominate its shuffle size."""
     # explicit per-band expressions (codegen) instead of
     # transform(sequence(...), lambda) — HigherOrderFunctions run in the
-    # expression interpreter; 42 unrolled xxhash64(slice) terms compile
-    bands_arr = F.array(
-        *[
-            F.xxhash64(F.lit(b), F.slice("minhash", b * cfg.lsh_rows + 1, cfg.lsh_rows))
-            for b in range(cfg.lsh_bands)
-        ]
+    # expression interpreter; the unrolled xxhash64(slice) terms compile.
+    # Built as one SQL text: one Py4J call instead of ~6 per band
+    bands = ", ".join(
+        f"xxhash64({b}, slice(minhash, {b * cfg.lsh_rows + 1}, {cfg.lsh_rows}))"
+        for b in range(cfg.lsh_bands)
     )
-    return (
-        conv.filter(F.col("n_shingles") > 0)
-        .select("cid", F.posexplode(bands_arr).alias("band_id", "band_hash"))
+    return conv.filter("n_shingles > 0").selectExpr(
+        "cid", f"posexplode(array({bands})) AS (band_id, band_hash)"
     )
 
 
@@ -88,20 +87,18 @@ def _hot_band_sizes(keys: DataFrame, cfg: DedupConfig) -> DataFrame:
     """
     mod = cfg.band_hot_sample_mod
     thresh = max(2, cfg.band_key_cap // mod)
-    sampled = keys.filter(
-        F.pmod(F.xxhash64(F.lit("hot-key-probe"), "cid"), F.lit(mod)) == 0
-    )
+    sampled = keys.filter(f"pmod(xxhash64('hot-key-probe', cid), {mod}) = 0")
     cand = (
         sampled.groupBy("band_id", "band_hash")
         .count()
-        .filter(F.col("count") >= thresh)
+        .filter(f"`count` >= {thresh}")
         .select("band_id", "band_hash")
     )
     return (
         keys.join(F.broadcast(cand), ["band_id", "band_hash"], "left_semi")
         .groupBy("band_id", "band_hash")
-        .agg(F.count("*").alias("hot_sz"))
-        .filter(F.col("hot_sz") > cfg.band_key_cap)
+        .agg(F.expr("count(1) AS hot_sz"))
+        .filter(f"hot_sz > {cfg.band_key_cap}")
     )
 
 
@@ -148,6 +145,11 @@ def lsh_candidates(
     band-key frame the pre-pass reads three times is persisted and appended
     to it, and the caller releases it (release_key_caches). Without one,
     nothing is cached.
+
+    ``counters`` (optional): a caller-owned dict that gains the stop-band,
+    salt and pre-pass counts as ``metrics.Observed`` values, observed on
+    the hot-key broadcast and the band-key groups, so the first action
+    over the returned frame fills them and no extra job runs.
     """
     if (
         n_conv is not None
@@ -169,93 +171,77 @@ def lsh_candidates(
         keys = keys.persist(StorageLevel.MEMORY_AND_DISK)
         cache_registry.append(keys)
     on = ["band_id", "band_hash"]
+    cap, drop = cfg.band_key_cap, cfg.band_key_drop
 
+    pre = None
     if cfg.band_hot_sample_mod > 0:
         hot = _hot_band_sizes(keys, cfg)
+        if counters is not None:
+            # pre-pass stats, observed on the broadcast the pairs job builds
+            hot, pre = observe(
+                hot,
+                dr=f"sum(if(hot_sz > {drop}, hot_sz, NULL))",
+                dk=f"count_if(hot_sz > {drop})",
+                sk=f"count_if(hot_sz <= {drop})",
+                hk="count(1)",
+            )
         keyed = keys.join(F.broadcast(hot), on, "left")
     else:
-        hot = None
-        keyed = keys.withColumn("hot_sz", F.lit(None).cast("long"))
+        keyed = keys.selectExpr("*", "CAST(NULL AS BIGINT) AS hot_sz")
 
     # pre-drop: stop-band rows never reach the aggregation buffer
-    live = keyed.filter(
-        F.col("hot_sz").isNull() | (F.col("hot_sz") <= cfg.band_key_drop)
-    )
-    # pre-salt: known-hot keys group by (key, salt subgroup)
-    n_salts_pre = F.least(
-        F.lit(cfg.band_salt_max), F.ceil(F.col("hot_sz") / F.lit(cfg.band_key_cap))
-    )
+    live = keyed.filter(f"hot_sz IS NULL OR hot_sz <= {drop}")
+    # pre-salt: known-hot keys group by (key, salt subgroup).
     # salt = pmod(cid, n): cid IS xxhash64(conv_id) (signatures.py), so this
     # equals the pre-cid pmod(xxhash64(conv_id), n) salt bit-for-bit — the
     # pair set is unchanged by the id encoding — and costs no extra hash
-    presalt = F.when(
-        F.col("hot_sz").isNotNull(), F.pmod(F.col("cid"), n_salts_pre)
-    ).otherwise(F.lit(0))
-
-    groups = live.groupBy("band_id", "band_hash", presalt.alias("psalt")).agg(
-        F.collect_list("cid").alias("m"),
-        F.first("hot_sz").alias("hot_sz"),
+    presalt = F.expr(
+        "CASE WHEN hot_sz IS NOT NULL "
+        f"THEN pmod(cid, least({cfg.band_salt_max}, ceil(hot_sz / {cap}))) ELSE 0 END"
     )
-    sz = F.size("m")
-    is_pre = F.col("hot_sz").isNotNull()
+    groups = live.groupBy("band_id", "band_hash", presalt.alias("psalt")).agg(
+        F.expr("collect_list(cid) AS m"), F.expr("first(hot_sz) AS hot_sz")
+    )
 
     if counters is not None:
-        hot_stats = (
-            hot.agg(
-                F.sum(F.when(F.col("hot_sz") > cfg.band_key_drop, F.col("hot_sz"))).alias("dr"),
-                F.sum((F.col("hot_sz") > cfg.band_key_drop).cast("long")).alias("dk"),
-                F.sum((F.col("hot_sz") <= cfg.band_key_drop).cast("long")).alias("sk"),
-                F.count("*").alias("hk"),
-            ).collect()[0]
-            if hot is not None
-            else {"dr": 0, "dk": 0, "sk": 0, "hk": 0}
-        )
-        # post-aggregation stats only describe keys the pre-pass missed
-        post = groups.filter(~is_pre).agg(
-            F.sum(F.when(sz > cfg.band_key_drop, sz)).alias("dropped_rows"),
-            F.sum((sz > cfg.band_key_drop).cast("long")).alias("dropped_keys"),
-            F.sum(
-                ((sz > cfg.band_key_cap) & (sz <= cfg.band_key_drop)).cast("long")
-            ).alias("salted_keys"),
-        ).collect()[0]
-        counters["lsh_stop_band_rows"] = int(post["dropped_rows"] or 0) + int(
-            hot_stats["dr"] or 0
-        )
-        counters["lsh_stop_band_keys"] = int(post["dropped_keys"] or 0) + int(
-            hot_stats["dk"] or 0
-        )
-        counters["lsh_salted_keys"] = int(post["salted_keys"] or 0) + int(
-            hot_stats["sk"] or 0
-        )
-        counters["lsh_hot_keys_prepass"] = int(hot_stats["hk"] or 0)
-        counters["lsh_predropped_rows"] = int(hot_stats["dr"] or 0)
-
-    # post-aggregation salt for keys the sample missed; pre-salted groups are
-    # already one salt subgroup, so every within-group pair is valid there
-    n_salts = F.least(F.lit(cfg.band_salt_max), F.ceil(sz / F.lit(cfg.band_key_cap)))
-
-    def salt(x):
-        # pmod(cid, n) — same bit-compat rationale as the pre-salt above
-        return F.when(
-            ~is_pre & (sz > cfg.band_key_cap), F.pmod(x, n_salts)
-        ).otherwise(F.lit(0))
-
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("m"),
-            lambda x, i: F.transform(
-                F.filter(
-                    # elements strictly after position i (slice is 1-based)
-                    F.slice(F.col("m"), i + F.lit(2), F.size("m")),
-                    lambda y: salt(x) == salt(y),
-                ),
-                lambda y: F.struct(
-                    F.least(x, y).alias("conv_a"), F.greatest(x, y).alias("conv_b")
-                ),
+        # post-aggregation stats only describe keys the pre-pass missed;
+        # observed on the groups the pairs job aggregates anyway
+        groups, post = observe(
+            groups,
+            dropped_rows=f"sum(if(hot_sz IS NULL AND size(m) > {drop}, size(m), NULL))",
+            dropped_keys=f"count_if(hot_sz IS NULL AND size(m) > {drop})",
+            salted_keys=(
+                f"count_if(hot_sz IS NULL AND size(m) > {cap} AND size(m) <= {drop})"
             ),
         )
+        counters["lsh_stop_band_rows"] = post["dropped_rows"]
+        counters["lsh_stop_band_keys"] = post["dropped_keys"]
+        counters["lsh_salted_keys"] = post["salted_keys"]
+        counters["lsh_hot_keys_prepass"] = counters["lsh_predropped_rows"] = 0
+        if pre is not None:
+            counters["lsh_stop_band_rows"] += pre["dr"]
+            counters["lsh_stop_band_keys"] += pre["dk"]
+            counters["lsh_salted_keys"] += pre["sk"]
+            counters["lsh_hot_keys_prepass"] = pre["hk"]
+            counters["lsh_predropped_rows"] = pre["dr"]
+
+    # post-aggregation salt for keys the sample missed; pre-salted groups are
+    # already one salt subgroup, so every within-group pair is valid there.
+    # pmod(cid, n) — same bit-compat rationale as the pre-salt above
+    def salt(x: str) -> str:
+        return (
+            f"CASE WHEN hot_sz IS NULL AND size(m) > {cap} "
+            f"THEN pmod({x}, least({cfg.band_salt_max}, ceil(size(m) / {cap}))) ELSE 0 END"
+        )
+
+    # every within-group pair whose members share a salt: elements strictly
+    # after position i (slice is 1-based), oriented by cid
+    pair_structs = (
+        "flatten(transform(m, (x, i) -> transform("
+        f"filter(slice(m, i + 2, size(m)), y -> {salt('x')} = {salt('y')}), "
+        "y -> struct(least(x, y) AS conv_a, greatest(x, y) AS conv_b))))"
     )
-    buckets = groups.filter((sz >= 2) & (is_pre | (sz <= cfg.band_key_drop)))
+    buckets = groups.filter(f"size(m) >= 2 AND (hot_sz IS NOT NULL OR size(m) <= {drop})")
     n_pair_parts = cfg.pair_gen_partitions
     if n_pair_parts < 0:
         # auto: 4x the session shuffle width — enough round-robin slots that
@@ -273,11 +259,6 @@ def lsh_candidates(
         # sum(m^2) sets the critical path (see config.pair_gen_partitions);
         # round-robin placement only — the emitted pair set is unchanged
         buckets = buckets.repartition(n_pair_parts)
-    return (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select(
-            F.col("p.conv_a").alias("conv_a"),
-            F.col("p.conv_b").alias("conv_b"),
-            F.lit("lsh").alias("src"),
-        )
+    return buckets.selectExpr(f"explode({pair_structs}) AS p").selectExpr(
+        "p.conv_a AS conv_a", "p.conv_b AS conv_b", "'lsh' AS src"
     )

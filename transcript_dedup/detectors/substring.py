@@ -33,10 +33,12 @@ the exact detector's job.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
+from ..metrics import observe
 
 
 def _cached(df: DataFrame, cache_registry: list[DataFrame] | None) -> DataFrame:
@@ -70,12 +72,13 @@ def _gram_pairs(
     grams = nonempty.select("cid", F.explode("sub_grams").alias("gram"))
     sizes = grams.groupBy("gram").agg(F.count("*").alias("df"))
     if counters is not None:
-        stats = sizes.agg(
-            F.sum((F.col("df") > cfg.substring_gram_maxdf).cast("long")).alias("stop_grams")
-        ).collect()[0]
-        counters["substring_stop_grams"] = int(stats["stop_grams"] or 0)
+        # observed on the df aggregate the pairs job computes anyway: the
+        # join below consumes it whole, and it sits behind the cid
+        # exchange, so even the bounded tiny-path collection fills it
+        sizes, stats = observe(sizes, stop_grams=f"count_if(df > {cfg.substring_gram_maxdf})")
+        counters["substring_stop_grams"] = stats["stop_grams"]
     # persisted (when the caller owns a cache registry): the tiny-path
-    # pattern collection (a driver take() in _tiny_pairs) materializes this
+    # pattern collection (a driver collection in _tiny_pairs) materializes this
     # subtree before the main pairs job; the caches make that barrier double
     # as the subtree's materialization instead of costing a second full
     # explode+df pipeline run
@@ -190,7 +193,7 @@ def _tiny_pairs(
     the strict inner-shorter rule, so its output is verified too.
 
     Scale guard: the pattern set is hard-capped at
-    ``cfg.substring_tiny_cap`` (take(cap+1) fails LOUD on overflow — a
+    ``cfg.substring_tiny_cap`` (collecting cap+1 fails LOUD on overflow — a
     boilerplate-degenerate corpus should raise maxdf, not silently lose
     recall)."""
     spark = conv.sparkSession
@@ -203,7 +206,10 @@ def _tiny_pairs(
         .join(conv.select("cid", "norm_text"), "cid")
         .select(F.col("cid").alias("t_id"), F.col("norm_text").alias("t_text"))
     )
-    rows = tiny.take(cfg.substring_tiny_cap + 1)
+    # one bounded job: each task hands at most cap+1 rows to a single
+    # partition that keeps cap+1 (a plain take() grows its scan over
+    # several incremental jobs while the set is below the cap)
+    rows = tiny.limit(cfg.substring_tiny_cap + 1).toArrow().to_pylist()
     if len(rows) > cfg.substring_tiny_cap:
         raise RuntimeError(
             f"substring tiny-path fallback exceeds cap {cfg.substring_tiny_cap}: "
@@ -213,7 +219,9 @@ def _tiny_pairs(
         )
     if counters is not None:
         counters["substring_tiny_docs"] = len(rows)
-    empty = spark.createDataFrame([], "conv_a long, conv_b long")
+    # driver-side tables are built from Arrow (or a range): a frame built
+    # from a Python list costs a Python worker pass when a job reads it
+    empty = spark.range(0).selectExpr("id AS conv_a", "id AS conv_b")
     if not rows:
         return empty
 
@@ -275,7 +283,12 @@ def _tiny_pairs(
         )
         tix_df = F.broadcast(
             spark.createDataFrame(
-                [(tix_of[t], t_id) for t_id, t in long_rows], "tix long, t_id long"
+                pa.table(
+                    {
+                        "tix": pa.array([tix_of[t] for _, t in long_rows], pa.int64()),
+                        "t_id": pa.array([t_id for t_id, _ in long_rows], pa.int64()),
+                    }
+                )
             )
         )
 
@@ -363,7 +376,14 @@ def _tiny_pairs(
         )
     if short_rows:
         shorts = F.broadcast(
-            spark.createDataFrame(short_rows, "t_id long, t_text string")
+            spark.createDataFrame(
+                pa.table(
+                    {
+                        "t_id": pa.array([t_id for t_id, _ in short_rows], pa.int64()),
+                        "t_text": pa.array([t for _, t in short_rows], pa.string()),
+                    }
+                )
+            )
         )
         others = conv.filter(F.length("norm_text") > 0).select(
             F.col("cid").alias("o_id"), F.col("norm_text").alias("o_text")
@@ -401,7 +421,11 @@ def substring_candidates(
     ``verify_mode`` accepts only ``"instr"`` (the one verifier). With a
     ``cache_registry`` list, the two frames the tiny-path barrier
     materializes are persisted into it for the caller to release
-    (lsh.release_key_caches); without one, nothing is cached."""
+    (lsh.release_key_caches); without one, nothing is cached.
+
+    ``counters`` (optional) gains ``substring_stop_grams``, observed on the
+    gram df aggregate (``metrics.Observed``), and the tiny-path counts,
+    which the bounded tiny-path collection yields as plain ints."""
     if verify_mode != "instr":
         raise ValueError(f"unknown substring verify_mode {verify_mode!r}; only 'instr'")
     gram_pairs, all_stopped = _gram_pairs(conv, cfg, counters, cache_registry)

@@ -40,11 +40,9 @@ from ..config import DedupConfig
 QUALITY_SCORE_SQL = "round(completeness * 10) * 100000 + total_chars"
 
 
-def quality_score(prefix: str = "") -> F.Column:
-    return F.expr(
-        QUALITY_SCORE_SQL.replace("completeness", f"{prefix}completeness").replace(
-            "total_chars", f"{prefix}total_chars"
-        )
+def quality_sql(prefix: str = "") -> str:
+    return QUALITY_SCORE_SQL.replace("completeness", f"{prefix}completeness").replace(
+        "total_chars", f"{prefix}total_chars"
     )
 
 
@@ -87,15 +85,16 @@ def verify_candidates(
     # detector memberships as a bitmask folded with bit_or: a primitive
     # codegen aggregate instead of collect_set's ObjectHashAggregate (the
     # set-of-strings version measured 186 core-s over ~2M candidate rows)
-    mask = (
-        F.when(F.col("src") == "exact", F.lit(1))
-        .when(F.col("src") == "lsh", F.lit(2))
-        .otherwise(F.lit(4))
-    )
+    #
+    # Every expression below is SQL text: one Py4J call per expression,
+    # where the Column API makes one per column reference, literal and
+    # operator; the plans are the same.
     srcs = (
-        candidates.withColumn("_m", mask)
+        candidates.withColumn(
+            "_m", F.expr("CASE WHEN src = 'exact' THEN 1 WHEN src = 'lsh' THEN 2 ELSE 4 END")
+        )
         .groupBy("conv_a", "conv_b")
-        .agg(F.bit_or("_m").alias("src_mask"))
+        .agg(F.expr("bit_or(_m) AS src_mask"))
     )
 
     # hydration payload is shuffled twice (a/b side): keep it minimal.
@@ -104,106 +103,84 @@ def verify_candidates(
     # confidence, P ~ 2^-64 per pair — far below the content-hash arm's
     # own collision floor). cid leads (join key); conv_id rides as payload
     # only so the output can restore string ids.
-    feats = conv.select(
-        F.col("cid"),
-        F.col("conv_id"),
-        F.col("minhash"),
-        F.col("content_hash"),
-        F.col("simhash"),
-        F.col("n_shingles"),
-        F.col("total_chars"),
-        F.xxhash64("role_seq").alias("role_key"),
-        F.col("completeness"),
-    )
+    feats = {
+        "cid": "cid",
+        "conv_id": "conv_id",
+        "minhash": "minhash",
+        "content_hash": "content_hash",
+        "simhash": "simhash",
+        "n_shingles": "n_shingles",
+        "total_chars": "total_chars",
+        "role_key": "xxhash64(role_seq)",
+        "completeness": "completeness",
+    }
     # pairs <-> conv features is a key-equality join whose conv side is the
     # whole corpus: at 10^12 turns it can only ever be a shuffled join, so
     # run that plan at every scale. (Auto-broadcast of the conv side "works"
     # at bench scale but serializes ~12 s of relation collect+build per side
     # on the driver — measured, see BENCH/BASELINE.md round 3.)
-    a = feats.toDF(*[f"a_{c}" for c in feats.columns]).hint("shuffle_hash")
-    b = feats.toDF(*[f"b_{c}" for c in feats.columns]).hint("shuffle_hash")
+    a, b = (
+        conv.selectExpr(*[f"{sql} AS {p}_{c}" for c, sql in feats.items()]).hint("shuffle_hash")
+        for p in ("a", "b")
+    )
     est_j = (
-        F.aggregate(
-            F.zip_with("a_minhash", "b_minhash", lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        )
-        / F.lit(cfg.num_perm)
-    ).alias("est_jaccard")
+        "aggregate(zip_with(a_minhash, b_minhash, (x, y) -> CAST(x = y AS INT)), 0, "
+        f"(acc, x) -> acc + x) / {cfg.num_perm}"
+    )
     scored = (
-        srcs.join(a, srcs.conv_a == a.a_cid)
-        .join(b, srcs.conv_b == b.b_cid)
+        srcs.join(a, F.expr("conv_a = a_cid"))
+        .join(b, F.expr("conv_b = b_cid"))
         .drop("a_cid", "b_cid")
-        .withColumn("est_jaccard", est_j)
-        .select(
+        .withColumn("est_jaccard", F.expr(est_j))
+        .selectExpr(
             "a_conv_id",
             "b_conv_id",
             "src_mask",
             "est_jaccard",
-            F.bit_count(F.col("a_simhash").bitwiseXOR(F.col("b_simhash"))).alias("hamming"),
-            (
-                (F.col("a_content_hash") == F.col("b_content_hash"))
-                & (F.col("a_n_shingles") > 0)
-                & (F.col("b_n_shingles") > 0)
-            ).alias("m_content"),
-            (
-                F.abs(F.col("a_total_chars") - F.col("b_total_chars"))
-                <= F.greatest("a_total_chars", "b_total_chars")
-                * F.lit(cfg.length_tolerance_frac)
-            ).alias("m_length"),
-            (F.col("a_role_key") == F.col("b_role_key")).alias("m_roles"),
-            quality_score("a_").alias("a_q"),
-            quality_score("b_").alias("b_q"),
+            "bit_count(a_simhash ^ b_simhash) AS hamming",
+            "a_content_hash = b_content_hash AND a_n_shingles > 0 AND b_n_shingles > 0"
+            " AS m_content",
+            "abs(a_total_chars - b_total_chars) <= greatest(a_total_chars, b_total_chars)"
+            f" * {cfg.length_tolerance_frac!r}D AS m_length",
+            "a_role_key = b_role_key AS m_roles",
+            f"{quality_sql('a_')} AS a_q",
+            f"{quality_sql('b_')} AS b_q",
         )
     )
     # second factor on the exact arm: identical texts have identical minhash
     # arrays, so est_jaccard == 1.0 exactly; a 64-bit content_hash collision
     # between different texts (expected O(1) at 10^10 docs) would need a
     # simultaneous full-signature collision to cause a false merge
-    scored = scored.withColumn(
-        "m_content", F.col("m_content") & (F.col("est_jaccard") == F.lit(1.0))
-    ).withColumn(
+    scored = scored.withColumn("m_content", F.expr("m_content AND est_jaccard = 1.0D")).withColumn(
         "m_fuzzy",
-        (F.col("src_mask").bitwiseAND(2) != 0)
-        & (
-            (F.col("est_jaccard") >= F.lit(cfg.jaccard_threshold))
-            | (F.col("hamming") <= F.lit(cfg.hamming_radius))
+        F.expr(
+            "(src_mask & 2) != 0 AND "
+            f"(est_jaccard >= {cfg.jaccard_threshold!r}D OR hamming <= {cfg.hamming_radius})"
         ),
-    ).withColumn("m_substring", F.col("src_mask").bitwiseAND(4) != 0)
+    ).withColumn("m_substring", F.expr("(src_mask & 4) != 0"))
 
     w = cfg
+    reasons = ", ".join(
+        f"CASE WHEN m_{r} THEN '{r}' END"
+        for r in ("content", "fuzzy", "substring", "length", "roles")
+    )
     # restore the external (string) surface: pairs oriented by conv_id
     # string order — exactly the pre-cid contract — regardless of the
     # internal cid orientation the detectors emitted
-    out = scored.select(
-        F.least("a_conv_id", "b_conv_id").alias("conv_a"),
-        F.greatest("a_conv_id", "b_conv_id").alias("conv_b"),
+    out = scored.selectExpr(
+        "least(a_conv_id, b_conv_id) AS conv_a",
+        "greatest(a_conv_id, b_conv_id) AS conv_b",
         "est_jaccard",
         "hamming",
-        (F.col("m_content") | F.col("m_fuzzy") | F.col("m_substring")).alias("is_match"),
-        (
-            F.col("m_content").cast("int") * w.w_exact
-            + F.col("m_fuzzy").cast("int") * w.w_fuzzy
-            + F.col("m_substring").cast("int") * w.w_fuzzy
-            + F.col("m_length").cast("int") * w.w_length
-            + F.col("m_roles").cast("int") * w.w_meta
-        ).alias("confidence"),
-        F.filter(
-            F.array(
-                F.when(F.col("m_content"), F.lit("content")),
-                F.when(F.col("m_fuzzy"), F.lit("fuzzy")),
-                F.when(F.col("m_substring"), F.lit("substring")),
-                F.when(F.col("m_length"), F.lit("length")),
-                F.when(F.col("m_roles"), F.lit("roles")),
-            ),
-            lambda x: x.isNotNull(),
-        ).alias("match_reasons"),
+        "m_content OR m_fuzzy OR m_substring AS is_match",
+        f"CAST(m_content AS INT) * {w.w_exact} + CAST(m_fuzzy AS INT) * {w.w_fuzzy}"
+        f" + CAST(m_substring AS INT) * {w.w_fuzzy} + CAST(m_length AS INT) * {w.w_length}"
+        f" + CAST(m_roles AS INT) * {w.w_meta} AS confidence",
+        f"filter(array({reasons}), x -> x IS NOT NULL) AS match_reasons",
         # strictly greater quality wins; ties keep the string-min side (the
         # reference keeps first-seen, duplicates.ts:216-221 — identical to
         # the pre-cid "conv_a keeps ties" since conv_a was the string-min)
-        F.when(F.col("a_q") > F.col("b_q"), F.col("a_conv_id"))
-        .when(F.col("b_q") > F.col("a_q"), F.col("b_conv_id"))
-        .otherwise(F.least("a_conv_id", "b_conv_id"))
-        .alias("suggested_keep"),
+        "CASE WHEN a_q > b_q THEN a_conv_id WHEN b_q > a_q THEN b_conv_id"
+        " ELSE least(a_conv_id, b_conv_id) END AS suggested_keep",
     )
     return out

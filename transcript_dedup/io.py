@@ -7,7 +7,14 @@ on a parquet directory + JSON manifest (SURVEY.md section 7 step 0):
 
   - every committed write is a new immutable snapshot directory
     ``<base>/<table>/snap-<n>``; the manifest records the current snapshot
-    id, row count, and the caller-supplied input fingerprint;
+    id, row counts, the written schema and the caller-supplied input
+    fingerprint;
+  - a commit costs the write job alone: row counts (total, delta and per
+    part file) come from the parquet footers of the files just written, and
+    the recorded schema (nullable, exactly what Spark infers from those
+    files) is handed to the reader, so neither a count nor a
+    schema-inference job runs. Snapshots committed before schemas were
+    recorded still read, through inference;
   - ``mode='overwrite'`` snapshots replace the table contents;
     ``mode='append'`` snapshots record the previous snapshot's data paths as
     parents, so the write costs O(delta) and readers see the union — the
@@ -25,17 +32,43 @@ Swapping in a real Iceberg catalog means replacing this class only.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import tempfile
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 def _snap_paths(snap: dict) -> list[str]:
     """Data paths of a snapshot; tolerates pre-append-era manifests that
     recorded a scalar ``path`` key (resume must work across the upgrade)."""
     return snap.get("paths") or [snap["path"]]
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable: the schema Spark
+    infers when it reads parquet files back (``StructType.asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+class Snapshot(dict):
+    """A committed snapshot's manifest entry. ``int(snap)`` is its id, so it
+    stands wherever a snapshot id is expected (``write`` used to return the
+    bare id)."""
+
+    def __int__(self) -> int:
+        return self["id"]
 
 
 class TableIO:
@@ -64,18 +97,26 @@ class TableIO:
         table: str,
         fingerprint: str | None = None,
         mode: str = "overwrite",
-    ) -> int:
-        """Commit ``df`` as a new snapshot of ``table``; returns snapshot id.
+    ) -> Snapshot:
+        """Commit ``df`` as a new snapshot of ``table``; returns it.
 
         ``mode='append'``: only ``df``'s rows are written (O(delta) I/O);
         the snapshot's readable contents = previous current snapshot + df.
+
+        The write is the only Spark job: ``file_rows`` (rows per part file
+        written, in file-name order), ``delta_rows`` and ``rows`` are read
+        from the new files' parquet footers.
         """
         man = self._load()
         t = man["tables"].get(table, {"snapshots": []})
         snap_id = (t["snapshots"][-1]["id"] + 1) if t["snapshots"] else 1
         path = os.path.join(self.base_dir, table, f"snap-{snap_id}")
+        schema = _nullable(df.schema)
         df.write.mode("overwrite").parquet(path)
-        delta_rows = SparkSession.getActiveSession().read.parquet(path).count()
+        file_rows = [
+            pq.read_metadata(f).num_rows for f in sorted(glob.glob(os.path.join(path, "part-*")))
+        ]
+        delta_rows = sum(file_rows)
         if mode == "append" and t.get("current"):
             prev = next(s for s in t["snapshots"] if s["id"] == t["current"])
             paths = _snap_paths(prev) + [path]
@@ -83,35 +124,40 @@ class TableIO:
         else:
             paths = [path]
             rows = delta_rows
-        t["snapshots"].append(
-            {
-                "id": snap_id,
-                "paths": paths,
-                "rows": rows,
-                "delta_rows": delta_rows,
-                "fingerprint": fingerprint,
-                "mode": mode,
-            }
-        )
+        entry = {
+            "id": snap_id,
+            "paths": paths,
+            "rows": rows,
+            "delta_rows": delta_rows,
+            "file_rows": file_rows,
+            "schema": schema.jsonValue(),
+            "fingerprint": fingerprint,
+            "mode": mode,
+        }
+        t["snapshots"].append(entry)
         t["current"] = snap_id
         man["tables"][table] = t
         self._commit(man)
-        return snap_id
+        return Snapshot(entry)
 
     def read(self, spark: SparkSession, table: str, snapshot: int | None = None) -> DataFrame:
         man = self._load()
         t = man["tables"][table]
         snap_id = snapshot or t["current"]
-        snap = next(s for s in t["snapshots"] if s["id"] == snap_id)
-        return spark.read.parquet(*_snap_paths(snap))
+        return self.read_snapshot(spark, next(s for s in t["snapshots"] if s["id"] == snap_id))
 
-    def current_snapshot(self, table: str) -> dict | None:
+    @staticmethod
+    def read_snapshot(spark: SparkSession, snap: dict) -> DataFrame:
+        """The contents of a snapshot (a manifest entry or a ``Snapshot``);
+        with its recorded schema, no schema-inference job runs."""
+        reader = spark.read
+        if snap.get("schema") is not None:
+            reader = reader.schema(StructType.fromJson(snap["schema"]))
+        return reader.parquet(*_snap_paths(snap))
+
+    def current_snapshot(self, table: str) -> Snapshot | None:
         man = self._load()
         t = man["tables"].get(table)
         if not t or not t.get("current"):
             return None
-        return next(s for s in t["snapshots"] if s["id"] == t["current"])
-
-    def has_fingerprint(self, table: str, fingerprint: str) -> bool:
-        snap = self.current_snapshot(table)
-        return snap is not None and snap.get("fingerprint") == fingerprint
+        return Snapshot(next(s for s in t["snapshots"] if s["id"] == t["current"]))

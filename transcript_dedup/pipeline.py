@@ -13,7 +13,9 @@ Each stage's output goes to the caller's sink, ``sink(name, build)``:
       + one metrics row, so a killed run resumes from the last committed
       stage (the scaled-out version of the reference's scan-state resume,
       /root/reference/src/index.ts:140-160, :186); the keep/delete
-      conflict invariant is checked after decisions.
+      conflict invariant is checked after decisions. A commit is one Spark
+      job, the write: row counts come from the written parquet footers,
+      counters from observations the write collects (metrics.Observed).
   in-memory sink (run_dedup_dataframes): conversations and candidate_pairs
       are persisted, components and decisions stay lazy — for embedding
       the engine in other dataflows (e.g. the driver's queries).
@@ -51,7 +53,7 @@ from .detectors import (
     verify_candidates,
 )
 from .io import TableIO
-from .metrics import MetricsLog, StageTimer, partition_counts
+from .metrics import MetricsLog, Observed, StageTimer, observe
 from .reconstruct import reconstruct_conversations
 from .signatures import KERNEL_VERSION, add_signatures, assert_cid_unique
 
@@ -168,45 +170,48 @@ class DedupPipeline:
         )
 
     # ------------------------------------------------------------------
-    def _table_sink(self, turns: DataFrame, input_fingerprint: str, resume: bool) -> Sink:
+    def _table_sink(self, rows_in: Observed, input_fingerprint: str, resume: bool) -> Sink:
         """The TableIO sink: resume a stage whose current snapshot carries
         its fingerprint, else build it, commit a snapshot and log its
-        metrics row. A stage's ``rows_in`` is the previous stage's committed
-        rows; ``turns.count()`` runs only if conversations builds, so a
-        fully-resumed ``run()`` stays scanless."""
-        upstream, rows = (input_fingerprint, self.cfg_fp), None
+        metrics row. A commit is the stage's write job and nothing else:
+        rows and per-file rows come from the written files' footers and
+        detector counters from observations on that write. A stage's
+        ``rows_in`` is the previous stage's committed rows; the first
+        stage's is ``rows_in``, observed on the turns, so it is read only
+        when conversations builds and a fully-resumed ``run()`` stays
+        scanless."""
+        upstream = (input_fingerprint, self.cfg_fp)
 
         def commit(name, build):
-            nonlocal upstream, rows
+            nonlocal upstream, rows_in
             fp = _fp(name, *upstream)
-            if resume and self.io.has_fingerprint(name, fp):
-                snap_id = self.io.current_snapshot(name)["id"]
-                out = self.io.read(self.spark, name)
-            else:
+            snap = self.io.current_snapshot(name) if resume else None
+            if snap is None or snap.get("fingerprint") != fp:
                 t = StageTimer()
                 counters: dict = {}
-                df = build(counters)
-                snap_id = self.io.write(df, name, fingerprint=fp)
-                out = self.io.read(self.spark, name)
+                snap = self.io.write(build(counters), name, fingerprint=fp)
                 self.metrics.log_stage(
                     name,
-                    snap_id,
-                    turns.count() if rows is None else rows,
-                    self.io.current_snapshot(name)["rows"],
+                    snap["id"],
+                    rows_in,
+                    snap["rows"],
                     t.ms(),
                     counters=counters,
-                    partitions=partition_counts(out),
+                    partitions=snap["file_rows"],
                 )
-            upstream, rows = (fp, snap_id), self.io.current_snapshot(name)["rows"]
-            return out
+            upstream, rows_in = (fp, snap["id"]), snap["rows"]
+            return self.io.read_snapshot(self.spark, snap)
 
         return commit
 
     # ------------------------------------------------------------------
     def run(self, turns: DataFrame, input_fingerprint: str = "adhoc", resume: bool = True) -> dict:
         """Run (or resume) the full pipeline; returns dict of DataFrames."""
+        turns, n_turns = observe(turns, rows="count(1)")
         frames = run_stages(
-            {"turns": turns}, self.cfg, self._table_sink(turns, input_fingerprint, resume)
+            {"turns": turns},
+            self.cfg,
+            self._table_sink(n_turns["rows"], input_fingerprint, resume),
         )
         n_conflicts = find_conflicts(frames["decisions"]).count()
         if n_conflicts:
