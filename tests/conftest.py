@@ -22,6 +22,18 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(params=["aqe_on", "aqe_off"])
+def aqe(spark, request):
+    """Runs the test with adaptive execution on and off: AQE moves stage
+    boundaries and prunes stages whose consumers come out empty, both of
+    which decide where an observed counter's metrics are collected."""
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "true" if request.param == "aqe_on" else "false")
+    yield request.param
+    spark.conf.set(key, before)
+
+
 @pytest.fixture(scope="session")
 def cfg():
     return DedupConfig()

@@ -136,14 +136,26 @@ def test_resume_never_scans_raw_input(spark, cfg, corpus200, tmp_path):
     assert res["decisions"].count() > 0
 
 
-def test_metrics_lineage_written(run200, spark):
-    pipe, _ = run200
+def test_metrics_lineage_written(run200, spark, turns200):
+    """One metrics row per stage: rows_in is the previous stage's committed
+    rows (for conversations the turns count, observed on the turns),
+    rows_out the committed rows, partition_rows the rows of each written
+    part file, and the detector counters resolved integers."""
+    pipe, res = run200
     m = pipe.io.read(spark, "pipeline_runs").toPandas()
-    assert set(m.stage) >= {"conversations", "candidate_pairs", "components", "decisions"}
     assert (m.rows_out > 0).all()
     assert (m.wall_ms > 0).all()
-    # per-partition lineage recorded
-    assert m.partition_rows.map(len).max() >= 1
+    rows = {r.stage: r for r in m.itertuples()}
+    prev = turns200.count()
+    for name in ("conversations", "candidate_pairs", "components", "decisions"):
+        snap = pipe.io.current_snapshot(name)
+        assert rows[name].rows_in == prev
+        assert rows[name].rows_out == snap["rows"] == res[name].count()
+        assert list(rows[name].partition_rows) == snap["file_rows"]
+        prev = snap["rows"]
+    counters = rows["candidate_pairs"].counters
+    assert counters["n_conv_cid_checked"] == rows["conversations"].rows_out
+    assert {"lsh_stop_band_keys", "substring_stop_grams", "substring_tiny_docs"} <= set(counters)
 
 
 def test_determinism_under_repartition(spark, cfg, corpus200, tmp_path):

@@ -229,18 +229,6 @@ def test_substring_gramless_fallback_paths(spark, cfg):
     assert counters["substring_tiny_short_docs"] >= 1
 
 
-@pytest.fixture(params=["aqe_on", "aqe_off"])
-def aqe(spark, request):
-    """Runs the test with adaptive execution on and off: AQE moves stage
-    boundaries and prunes stages whose consumers come out empty, both of
-    which decide where an observed counter's metrics are collected."""
-    key = "spark.sql.adaptive.enabled"
-    before = spark.conf.get(key)
-    spark.conf.set(key, "true" if request.param == "aqe_on" else "false")
-    yield request.param
-    spark.conf.set(key, before)
-
-
 def _key_size_counters(conv, cfg) -> dict:
     """The LSH counters by definition, from exact band-key sizes: a key of
     more than band_key_drop members is a stop band, one of more than

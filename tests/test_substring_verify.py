@@ -158,23 +158,17 @@ def test_gram_and_tiny_paths_are_disjoint(spark, cfg, turns200, stop_gram_conv, 
     assert not gram & tiny
 
 
-@pytest.fixture(params=["aqe_on", "aqe_off"])
-def shuffled_joins(spark, request):
-    """AQE on and off, with broadcast joins off so the gram df table is
-    shuffled into its join, not broadcast."""
-    conf = {
-        "spark.sql.adaptive.enabled": "true" if request.param == "aqe_on" else "false",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    before = {k: spark.conf.get(k) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    yield request.param
-    for k, v in before.items():
-        spark.conf.set(k, v)
+@pytest.fixture
+def no_broadcast(spark):
+    """Broadcast joins off, so the gram df table is shuffled into its join."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, before)
 
 
-def test_observed_substring_counters(spark, stop_gram_conv, shuffled_joins):
+def test_observed_substring_counters(spark, stop_gram_conv, aqe, no_broadcast):
     """substring_stop_grams, observed on the gram df aggregate, equals the
     number of grams over the df cap counted directly, and the tiny-path
     counters equal the fallback docs counted directly — with and without

@@ -77,22 +77,3 @@ def test_legacy_manifest_reads_and_resumes(spark, cfg, turns200, tmp_path):
     with open(io.manifest_path) as f:
         assert "schema" not in json.load(f)["tables"]["decisions"]["snapshots"][-1]
 
-
-def test_metrics_rows_come_from_footers_and_observations(spark, cfg, turns200, tmp_path):
-    """Each stage's metrics row: rows_in is the previous stage's committed
-    rows (the turns count for conversations, observed on the turns),
-    rows_out the committed rows, partition_rows the rows per written part
-    file, and the detector counters resolved integers."""
-    pipe = DedupPipeline(spark, str(tmp_path / "pipe"), cfg)
-    res = pipe.run(turns200, input_fingerprint="metrics")
-    m = {r["stage"]: r for r in pipe.io.read(spark, "pipeline_runs").collect()}
-    prev = turns200.count()
-    for name in STAGES:
-        snap = pipe.io.current_snapshot(name)
-        assert m[name]["rows_in"] == prev
-        assert m[name]["rows_out"] == snap["rows"] == res[name].count()
-        assert list(m[name]["partition_rows"]) == snap["file_rows"]
-        prev = snap["rows"]
-    counters = m["candidate_pairs"]["counters"]
-    assert counters["n_conv_cid_checked"] == m["conversations"]["rows_out"]
-    assert {"lsh_stop_band_keys", "substring_stop_grams", "substring_tiny_docs"} <= set(counters)

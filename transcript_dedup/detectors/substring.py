@@ -284,10 +284,7 @@ def _tiny_pairs(
         tix_df = F.broadcast(
             spark.createDataFrame(
                 pa.table(
-                    {
-                        "tix": pa.array([tix_of[t] for _, t in long_rows], pa.int64()),
-                        "t_id": pa.array([t_id for t_id, _ in long_rows], pa.int64()),
-                    }
+                    {"tix": [tix_of[t] for _, t in long_rows], "t_id": [i for i, _ in long_rows]}
                 )
             )
         )
@@ -377,12 +374,7 @@ def _tiny_pairs(
     if short_rows:
         shorts = F.broadcast(
             spark.createDataFrame(
-                pa.table(
-                    {
-                        "t_id": pa.array([t_id for t_id, _ in short_rows], pa.int64()),
-                        "t_text": pa.array([t for _, t in short_rows], pa.string()),
-                    }
-                )
+                pa.table({"t_id": [i for i, _ in short_rows], "t_text": [t for _, t in short_rows]})
             )
         )
         others = conv.filter(F.length("norm_text") > 0).select(
