@@ -50,3 +50,34 @@ def turns200(spark, corpus200):
     from transcript_dedup.generate import corpus_to_spark
 
     return corpus_to_spark(spark, corpus200[0])
+
+
+@pytest.fixture(scope="session")
+def skewed_turns():
+    """800 conversations as turns, with the config that makes them skewed:
+    600 share one heavy template with a single unique trailing sentence
+    (hot bands, NOT duplicates of each other); 100 exact copies of one doc
+    (legit mega-cluster); 100 unique. With band_key_cap=20 and
+    band_key_drop=200 the template's band keys are stop-bands."""
+    import datetime as dt
+
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(99)
+    template = " ".join(f"boiler{i:03d}" for i in range(120))
+    ts = dt.datetime(2026, 1, 1)
+    rows = []
+    for i in range(600):
+        uniq = " ".join(f"u{i:04d}x{j}" for j in range(8))
+        rows.append((f"t{i:05d}", 0, "user", template + " " + uniq, "", ts))
+    mega = " ".join(f"mega{j:03d}" for j in range(80))
+    for i in range(100):
+        rows.append((f"m{i:05d}", 0, "user", mega, "", ts))
+    for i in range(100):
+        text = " ".join(f"s{i:04d}w{rng.integers(0, 9999)}" for _ in range(60))
+        rows.append((f"s{i:05d}", 0, "user", text, "", ts))
+    pdf = pd.DataFrame(
+        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    ).astype({"turn_idx": "int32"})
+    return pdf, DedupConfig().with_(band_key_cap=20, band_key_drop=200)

@@ -54,22 +54,27 @@ def test_pipeline_plan_shape_gate(spark, turns200, cfg):
     the dictionary-encoded cid longs (a_cid/b_cid), not the conv_id
     strings. A future change that silently regresses any of these fails
     here instead of surfacing as a bench cliff. The same plan is archived
-    in BENCH/PLANS.md by tools/explain_plans.py."""
+    in BENCH/PLANS.md by tools/explain_plans.py. The incremental shape a
+    streaming micro-batch runs (a probe side of new conversations) must
+    keep the same properties and plan no SortAggregate either."""
     # assert under BOTH AQE settings: the library session default runs AQE
     # on; the local-mode bench pipeline runs AQE off (round-7, measured
     # stage-wave latency). The 100 TB-audit properties must hold in both,
     # with the LSH hot-key pre-pass on (corpus size unknown, or above
-    # cfg.band_hot_prepass_min_rows) and off (the pipeline's known n_conv).
+    # cfg.band_hot_prepass_min_rows) and off (the pipeline's known n_conv),
+    # as a batch run and with every other conversation as the probe side.
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
     try:
-        for aqe, n_conv in itertools.product(("true", "false"), (None, 200)):
+        for aqe, n_conv, probed in itertools.product(("true", "false"), (None, 200), (False, True)):
             spark.conf.set("spark.sql.adaptive.enabled", aqe)
             conv = add_signatures(reconstruct_conversations(turns200), cfg)
-            with detect_pairs(conv, cfg, n_conv=n_conv) as pairs:
+            probe = conv.filter("pmod(cid, 2) = 0").select("cid") if probed else None
+            with detect_pairs(conv, cfg, n_conv=n_conv, probe=probe) as pairs:
                 plan = pairs._jdf.queryExecution().executedPlan().toString()
-            ctx = f" (aqe={aqe}, n_conv={n_conv})"
+            ctx = f" (aqe={aqe}, n_conv={n_conv}, probed={probed})"
             assert "CartesianProduct" not in plan, "cartesian join regressed" + ctx
             assert "BroadcastNestedLoopJoin" not in plan, "BNLJ regressed" + ctx
+            assert "SortAggregate" not in plan, "sort-based aggregation regressed" + ctx
             assert "ShuffledHashJoin" in plan, "hydration lost shuffle_hash pin" + ctx
             assert "a_cid#" in plan and "b_cid#" in plan, "hydration not cid-keyed" + ctx
     finally:

@@ -4,8 +4,6 @@ prove it) and must not produce false merges across distinct truth clusters."""
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 import pytest
 
 from transcript_dedup.config import DedupConfig
@@ -16,31 +14,11 @@ from transcript_dedup.signatures import add_signatures
 
 
 @pytest.fixture(scope="module")
-def skewed_conv(spark):
-    """800 conversations: 600 share one heavy template with a single unique
-    trailing sentence (hot bands, NOT duplicates of each other); 100 exact
-    copies of one doc (legit mega-cluster); 100 unique."""
-    rng = np.random.default_rng(99)
-    template = " ".join(f"boiler{i:03d}" for i in range(120))
-    rows = []
-    import datetime as dt
-
-    ts = dt.datetime(2026, 1, 1)
-    for i in range(600):
-        uniq = " ".join(f"u{i:04d}x{j}" for j in range(8))
-        rows.append((f"t{i:05d}", 0, "user", template + " " + uniq, "", ts))
-    mega = " ".join(f"mega{j:03d}" for j in range(80))
-    for i in range(100):
-        rows.append((f"m{i:05d}", 0, "user", mega, "", ts))
-    for i in range(100):
-        text = " ".join(f"s{i:04d}w{rng.integers(0, 9999)}" for _ in range(60))
-        rows.append((f"s{i:05d}", 0, "user", text, "", ts))
-    pdf = pd.DataFrame(
-        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    ).astype({"turn_idx": "int32"})
+def skewed_conv(spark, skewed_turns):
+    """The skewed corpus (conftest.skewed_turns) as persisted conversations."""
     from transcript_dedup.generate import corpus_to_spark
 
-    cfg = DedupConfig().with_(band_key_cap=20, band_key_drop=200)
+    pdf, cfg = skewed_turns
     conv = add_signatures(
         reconstruct_conversations(corpus_to_spark(spark, pdf)), cfg
     ).persist()

@@ -60,6 +60,11 @@ def main():
 
     with detect_pairs(conv, DedupConfig()) as pairs3:
         sections.append(("full pairs stage (exact ∪ LSH ∪ substring -> verify)", fmt(pairs3)))
+    # the same stage as a streaming micro-batch runs it: every other doc is
+    # the probe side (the new conversations), the whole corpus the build side
+    probe = conv.filter("pmod(cid, 2) = 0").select("cid")
+    with detect_pairs(conv, DedupConfig(), probe=probe) as probed:
+        sections.append(("incremental pairs stage (probe = new conversations)", fmt(probed)))
 
     # embeddings sign-LSH: ONE ArrowEvalPython pass computes every table's
     # bucket (no per-table unions / re-scans of the input, no plan-literal

@@ -13,6 +13,10 @@ Three detectors (north rule), each emitting candidate edges
 
 verify.py scores the unioned candidates (compareFiles analogue,
 /root/reference/src/duplicates.ts:44-83) into the candidate_pairs table.
+
+Each detector takes an optional ``probe`` side, the new conversations of a
+streaming micro-batch: block statistics stay those of the whole input, and
+only the pairs touching the probe are emitted (pipeline.detect_pairs).
 """
 
 from .exact import exact_candidates

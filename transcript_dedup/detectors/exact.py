@@ -29,23 +29,29 @@ missing fields, duplicates.ts:97-101).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .verify import touching
 
-def exact_candidates(conv: DataFrame) -> DataFrame:
-    """conversations -> (conv_a, conv_b, src='exact') star edges, cid-keyed."""
-    w = Window.partitionBy("content_hash")
-    nonempty = conv.filter(F.length("norm_text") > 0).select(
-        "content_hash", "conv_id", "cid"
-    )
+
+def exact_candidates(conv: DataFrame, probe: DataFrame | None = None) -> DataFrame:
+    """conversations -> (conv_a, conv_b, src='exact') star edges, cid-keyed.
+
+    ``probe`` (optional, a frame of cids): only the content-hash groups
+    holding a probe row are expanded, over ALL their members in ``conv`` —
+    so the representative is the same as in the batch run — and only the
+    edges touching the probe are emitted."""
+    nonempty = conv.filter("length(norm_text) > 0").select("content_hash", "conv_id", "cid")
+    if probe is not None:
+        probed = nonempty.join(F.broadcast(probe.select("cid")), "cid", "left_semi")
+        groups = F.broadcast(probed.select("content_hash"))
+        nonempty = nonempty.join(groups, "content_hash", "left_semi")
     # struct-min orders by conv_id first: rep = cid of the string-min member
-    rep = nonempty.withColumn("rep", F.min(F.struct("conv_id", "cid")).over(w))
-    return (
-        rep.filter(F.col("conv_id") != F.col("rep.conv_id"))
-        .select(
-            F.least(F.col("rep.cid"), F.col("cid")).alias("conv_a"),
-            F.greatest(F.col("rep.cid"), F.col("cid")).alias("conv_b"),
-            F.lit("exact").alias("src"),
-        )
+    rep = nonempty.withColumn(
+        "rep", F.expr("min(struct(conv_id, cid)) OVER (PARTITION BY content_hash)")
     )
+    edges = rep.filter("conv_id != rep.conv_id").selectExpr(
+        "least(rep.cid, cid) AS conv_a", "greatest(rep.cid, cid) AS conv_b", "'exact' AS src"
+    )
+    return touching(edges, probe)

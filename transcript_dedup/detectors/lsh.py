@@ -43,6 +43,8 @@ from pyspark.sql import functions as F
 
 from ..config import DedupConfig
 from ..metrics import observe
+from .verify import touching
+
 
 def release_key_caches(registry: list[DataFrame]) -> None:
     """Unpersist every frame a detector registered in ``registry`` (the
@@ -108,6 +110,7 @@ def lsh_candidates(
     counters: dict | None = None,
     cache_registry: list[DataFrame] | None = None,
     n_conv: int | None = None,
+    probe: DataFrame | None = None,
 ) -> DataFrame:
     """conversations(minhash, n_shingles) -> (conv_a, conv_b, src='lsh'),
     cid-keyed (pairs canonically oriented by cid; the verify stage restores
@@ -150,6 +153,13 @@ def lsh_candidates(
     salt and pre-pass counts as ``metrics.Observed`` values, observed on
     the hot-key broadcast and the band-key groups, so the first action
     over the returned frame fills them and no extra job runs.
+
+    ``probe`` (optional, a frame of cids): key sizes, the pre-pass, the
+    stop-band drop and the salt are computed over all of ``conv`` exactly
+    as without it; then only the band keys of probe rows are grouped (each
+    such group still holds every member, so ``size(m)`` and the salt are
+    unchanged) and only the pairs touching the probe are emitted. The
+    post-aggregation counters then describe the probed keys only.
     """
     if (
         n_conv is not None
@@ -191,6 +201,9 @@ def lsh_candidates(
 
     # pre-drop: stop-band rows never reach the aggregation buffer
     live = keyed.filter(f"hot_sz IS NULL OR hot_sz <= {drop}")
+    if probe is not None:
+        probe_keys = keys.join(F.broadcast(probe.select("cid")), "cid", "left_semi")
+        live = live.join(F.broadcast(probe_keys.select(*on)), on, "left_semi")
     # pre-salt: known-hot keys group by (key, salt subgroup).
     # salt = pmod(cid, n): cid IS xxhash64(conv_id) (signatures.py), so this
     # equals the pre-cid pmod(xxhash64(conv_id), n) salt bit-for-bit — the
@@ -259,6 +272,7 @@ def lsh_candidates(
         # sum(m^2) sets the critical path (see config.pair_gen_partitions);
         # round-robin placement only — the emitted pair set is unchanged
         buckets = buckets.repartition(n_pair_parts)
-    return buckets.selectExpr(f"explode({pair_structs}) AS p").selectExpr(
+    pairs = buckets.selectExpr(f"explode({pair_structs}) AS p").selectExpr(
         "p.conv_a AS conv_a", "p.conv_b AS conv_b", "'lsh' AS src"
     )
+    return touching(pairs, probe)

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from ..config import DedupConfig
 from ..metrics import observe
+from .verify import touching
 
 
 def _cached(df: DataFrame, cache_registry: list[DataFrame] | None) -> DataFrame:
@@ -55,6 +56,7 @@ def _gram_pairs(
     cfg: DedupConfig,
     counters: dict | None,
     cache_registry: list[DataFrame] | None,
+    probe: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (candidate pairs from rare-gram collisions, ids of docs whose
     sampled grams were ALL stopped — they need the exhaustive tiny path).
@@ -65,17 +67,23 @@ def _gram_pairs(
     materialization barrier, no driver action. All consumers hang off shared
     exchanges (AQE ReusedExchange), so the explode+count pipeline runs once
     per pairs job even without a persist.
+
+    With a ``probe`` (a frame of cids), both sides of the blocking join keep
+    only the kept grams of probe docs. No pair touching the probe is lost:
+    for inner x contained in outer y, x's rarest gram is a kept gram of x
+    AND of y, so whichever endpoint is a probe doc contributes it. The
+    pairs still include some that touch no probe doc; the caller filters.
     """
-    nonempty = conv.filter(F.length("norm_text") > 0)
+    maxdf = cfg.substring_gram_maxdf
     # cid keys: the gram explode is this detector's widest exchange, and the
     # blocking join below shuffles it again — 8-byte longs, not id strings
-    grams = nonempty.select("cid", F.explode("sub_grams").alias("gram"))
-    sizes = grams.groupBy("gram").agg(F.count("*").alias("df"))
+    grams = conv.filter("length(norm_text) > 0").selectExpr("cid", "explode(sub_grams) AS gram")
+    sizes = grams.groupBy("gram").agg(F.expr("count(1) AS df"))
     if counters is not None:
         # observed on the df aggregate the pairs job computes anyway: the
         # join below consumes it whole, and it sits behind the cid
         # exchange, so even the bounded tiny-path collection fills it
-        sizes, stats = observe(sizes, stop_grams=f"count_if(df > {cfg.substring_gram_maxdf})")
+        sizes, stats = observe(sizes, stop_grams=f"count_if(df > {maxdf})")
         counters["substring_stop_grams"] = stats["stop_grams"]
     # persisted (when the caller owns a cache registry): the tiny-path
     # pattern collection (a driver collection in _tiny_pairs) materializes this
@@ -84,7 +92,7 @@ def _gram_pairs(
     # explode+df pipeline run
     joined = _cached(grams.join(sizes, "gram", "inner"), cache_registry)
     # membership side of the blocking join: stop-listed grams dropped
-    kept = joined.filter(F.col("df") <= cfg.substring_gram_maxdf)
+    kept = joined.filter(f"df <= {maxdf}").select("cid", "gram")
     # rarest-gram blocking: containment means the outer doc contains EVERY
     # inner gram, so the inner doc only needs to probe with its single
     # rarest (min-df) gram — join fan-out is df(rarest gram) per doc, never
@@ -102,32 +110,31 @@ def _gram_pairs(
     # (min_df, gram) per cid is bit-identical.
     _TWO64 = "18446744073709551616"  # 2^64
     _BIAS = "9223372036854775808"  # 2^63
-    packed = F.expr(
-        f"cast(df as decimal(38,0)) * {_TWO64} + (cast(gram as decimal(38,0)) + {_BIAS})"
-    )
+    packed = f"cast(df as decimal(38,0)) * {_TWO64} + (cast(gram as decimal(38,0)) + {_BIAS})"
     rarest = _cached(
         joined.groupBy("cid")
-        .agg(F.min(packed).alias("p"))
-        .select(
+        .agg(F.expr(f"min({packed}) AS p"))
+        .selectExpr(
             "cid",
-            F.expr(f"cast((p - (p % {_TWO64})) / {_TWO64} as long)").alias("min_df"),
-            F.expr(f"cast(p % {_TWO64} - {_BIAS} as long)").alias("gram"),
+            f"cast((p - (p % {_TWO64})) / {_TWO64} as long) AS min_df",
+            f"cast(p % {_TWO64} - {_BIAS} as long) AS gram",
         ),
         cache_registry,
     )
-    inner_keys = rarest.filter(F.col("min_df") <= cfg.substring_gram_maxdf)
+    inner_keys = rarest.filter(f"min_df <= {maxdf}")
     # docs whose grams were ALL stop-listed: min_df over every gram > maxdf
-    all_stopped = rarest.filter(F.col("min_df") > cfg.substring_gram_maxdf).select(
-        "cid"
-    )
+    all_stopped = rarest.filter(f"min_df > {maxdf}").select("cid")
+    if probe is not None:
+        probe_grams = F.broadcast(
+            kept.join(F.broadcast(probe.select("cid")), "cid", "left_semi").select("gram")
+        )
+        inner_keys = inner_keys.join(probe_grams, "gram", "left_semi")
+        kept = kept.join(probe_grams, "gram", "left_semi")
     pairs = (
         inner_keys.alias("a")
-        .join(kept.select("cid", "gram").alias("b"), "gram")
-        .filter(F.col("a.cid") != F.col("b.cid"))
-        .select(
-            F.least("a.cid", "b.cid").alias("conv_a"),
-            F.greatest("a.cid", "b.cid").alias("conv_b"),
-        )
+        .join(kept.alias("b"), "gram")
+        .filter("a.cid != b.cid")
+        .selectExpr("least(a.cid, b.cid) AS conv_a", "greatest(a.cid, b.cid) AS conv_b")
         .distinct()
     )
     return pairs, all_stopped
@@ -405,6 +412,7 @@ def substring_candidates(
     counters: dict | None = None,
     verify_mode: str = "instr",
     cache_registry: list[DataFrame] | None = None,
+    probe: DataFrame | None = None,
 ) -> DataFrame:
     """conversations -> (conv_a, conv_b, src='substring') containment edges,
     cid-keyed (pairs canonically oriented by cid; consumers of the bare
@@ -417,24 +425,27 @@ def substring_candidates(
 
     ``counters`` (optional) gains ``substring_stop_grams``, observed on the
     gram df aggregate (``metrics.Observed``), and the tiny-path counts,
-    which the bounded tiny-path collection yields as plain ints."""
+    which the bounded tiny-path collection yields as plain ints.
+
+    ``probe`` (optional, a frame of cids): gram document frequencies and
+    rarest grams are computed over all of ``conv``; the blocking join keeps
+    only the probe docs' grams (see _gram_pairs), the tiny path runs as
+    without it, and only the pairs touching the probe are emitted."""
     if verify_mode != "instr":
         raise ValueError(f"unknown substring verify_mode {verify_mode!r}; only 'instr'")
-    gram_pairs, all_stopped = _gram_pairs(conv, cfg, counters, cache_registry)
+    gram_pairs, all_stopped = _gram_pairs(conv, cfg, counters, cache_registry, probe)
     # gram-path candidates hydrate + verify; tiny-path pairs arrive ALREADY
     # verified in the probe kernel (see _tiny_pairs) and must not re-enter
     # the hydration join. The two verified sets are disjoint by the inner
     # doc's class — a pair's inner (strictly shorter) doc either has a rare
     # sampled gram (gram path) or is tiny (tiny path), never both — so the
     # union needs no distinct to stay duplicate-free.
-    verified = hydrate_and_verify(gram_pairs, conv).select("conv_a", "conv_b")
-    tiny_verified = _tiny_pairs(conv, all_stopped, cfg, counters)
+    verified = hydrate_and_verify(touching(gram_pairs, probe), conv).select("conv_a", "conv_b")
+    tiny_verified = touching(_tiny_pairs(conv, all_stopped, cfg, counters), probe)
     # no materialization barrier anywhere in this detector: the single
     # downstream consumer (verify stage) triggers the whole dataflow in one
     # job; the gram explode/df exchanges are shared via ReusedExchange
-    return (
-        verified.unionByName(tiny_verified).withColumn("src", F.lit("substring"))
-    )
+    return verified.unionByName(tiny_verified).selectExpr("*", "'substring' AS src")
 
 
 def hydrate_and_verify(raw: DataFrame, conv: DataFrame) -> DataFrame:
@@ -442,51 +453,27 @@ def hydrate_and_verify(raw: DataFrame, conv: DataFrame) -> DataFrame:
 
     Hydrates both texts (by cid), orients inner = shorter / outer = longer
     (equal lengths are the exact detector's job), and keeps the pairs whose
-    inner text occurs in the outer one (JVM ``instr``). Shared by the batch
-    detector above and the streaming incremental arm
-    (streaming._incremental_substring).
+    inner text occurs in the outer one (JVM ``instr``). The gram path of
+    substring_candidates is its one caller.
 
     The texts side is hinted ``shuffle_hash``: it is the whole corpus, so
     this is a shuffled key-equality join at any scale; without the hint
     Catalyst plans it as SortMergeJoin, which SORTS the full norm_text
     corpus twice (once per hydration side) plus the pair side — pure wasted
     work for an equality join."""
-    texts = conv.select(
-        "cid", "norm_text", F.length("norm_text").alias("len")
-    ).hint("shuffle_hash")
+    texts = conv.selectExpr("cid", "norm_text", "length(norm_text) AS len").hint("shuffle_hash")
     hyd = (
-        raw.join(
-            texts.select(
-                F.col("cid").alias("conv_a"),
-                F.col("norm_text").alias("text_a"),
-                F.col("len").alias("len_a"),
-            ),
-            "conv_a",
-        )
-        .join(
-            texts.select(
-                F.col("cid").alias("conv_b"),
-                F.col("norm_text").alias("text_b"),
-                F.col("len").alias("len_b"),
-            ),
-            "conv_b",
-        )
+        raw.join(texts.selectExpr("cid AS conv_a", "norm_text AS text_a", "len AS len_a"), "conv_a")
+        .join(texts.selectExpr("cid AS conv_b", "norm_text AS text_b", "len AS len_b"), "conv_b")
         # orient: inner = shorter, outer = longer (equal lengths -> exact's job)
-        .filter(F.col("len_a") != F.col("len_b"))
-        .select(
+        .filter("len_a != len_b")
+        .selectExpr(
             "conv_a",
             "conv_b",
-            F.when(F.col("len_a") < F.col("len_b"), F.col("text_a"))
-            .otherwise(F.col("text_b"))
-            .alias("text_in"),
-            F.when(F.col("len_a") < F.col("len_b"), F.col("text_b"))
-            .otherwise(F.col("text_a"))
-            .alias("text_out"),
-            F.least("len_a", "len_b").alias("len_in"),
-            F.greatest("len_a", "len_b").alias("len_out"),
+            "CASE WHEN len_a < len_b THEN text_a ELSE text_b END AS text_in",
+            "CASE WHEN len_a < len_b THEN text_b ELSE text_a END AS text_out",
+            "least(len_a, len_b) AS len_in",
+            "greatest(len_a, len_b) AS len_out",
         )
     )
-    return hyd.filter(
-        (F.col("len_in") < F.col("len_out"))
-        & (F.expr("instr(text_out, text_in) > 0"))
-    )
+    return hyd.filter("len_in < len_out AND instr(text_out, text_in) > 0")

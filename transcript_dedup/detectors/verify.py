@@ -66,6 +66,22 @@ def resolve_pair_ids(
     )
 
 
+def touching(pairs: DataFrame, probe: DataFrame | None) -> DataFrame:
+    """The (conv_a, conv_b) cid pairs with at least one endpoint in
+    ``probe`` (a frame with a ``cid`` column); every pair when ``probe`` is
+    None. Each endpoint is flagged by a broadcast outer join against the
+    distinct probe ids, so the pairs are read once and none is emitted
+    twice, and the plan needs no nested-loop join."""
+    if probe is None:
+        return pairs
+    ids = probe.select("cid").distinct()
+    flagged = pairs
+    for end in ("conv_a", "conv_b"):
+        flags = ids.selectExpr(f"cid AS {end}", f"true AS _probe_{end}")
+        flagged = flagged.join(F.broadcast(flags), end, "left")
+    return flagged.filter("_probe_conv_a OR _probe_conv_b").select(*pairs.columns)
+
+
 def verify_candidates(
     candidates: DataFrame, conv: DataFrame, cfg: DedupConfig
 ) -> DataFrame:

@@ -76,6 +76,7 @@ def detect_pairs(
     counters: dict | None = None,
     n_conv: int | None = None,
     detectors: tuple[str, ...] = DETECTORS,
+    probe: DataFrame | None = None,
 ) -> Iterator[DataFrame]:
     """The pairs stage: exact ∪ LSH ∪ substring candidates -> verified,
     scored candidate_pairs (lazy). Every caller composes it here;
@@ -92,14 +93,26 @@ def detect_pairs(
             pairs.count()
 
     ``n_conv`` is the corpus row count when the caller knows it (see
-    lsh_candidates)."""
+    lsh_candidates).
+
+    ``probe`` (optional) is a frame of cids, the new conversations of a
+    micro-batch (streaming.StreamingDedup). ``conv`` stays the build side:
+    every block statistic (key sizes, stop-bands, salts, gram document
+    frequencies) is computed over it as in a batch run, and verify hydrates
+    from it; only the blocks holding a probe row are expanded, and the
+    output is exactly the batch output restricted to the pairs with at
+    least one endpoint in the probe. ``None`` is the batch run."""
     if not detectors or set(detectors) - set(DETECTORS):
         raise ValueError(f"detectors must be a non-empty subset of {DETECTORS}: {detectors!r}")
     caches: list[DataFrame] = []
     arms = {
-        "exact": lambda: exact_candidates(conv),
-        "lsh": lambda: lsh_candidates(conv, cfg, counters, cache_registry=caches, n_conv=n_conv),
-        "substring": lambda: substring_candidates(conv, cfg, counters, cache_registry=caches),
+        "exact": lambda: exact_candidates(conv, probe=probe),
+        "lsh": lambda: lsh_candidates(
+            conv, cfg, counters, cache_registry=caches, n_conv=n_conv, probe=probe
+        ),
+        "substring": lambda: substring_candidates(
+            conv, cfg, counters, cache_registry=caches, probe=probe
+        ),
     }
     try:
         cand = reduce(DataFrame.unionByName, [arms[d]() for d in DETECTORS if d in detectors])

@@ -4,8 +4,14 @@ The reference is batch-only with file-based resume (SURVEY.md 2.10); the
 engine's snapshot/anti-join resume covers that. This module adds the
 streaming growth path with **O(batch) state maintenance per micro-batch**:
 
-  - detector joins run new-vs-all (never all-vs-all): exact hashes and LSH
-    band keys of the NEW conversations probe the stored corpus;
+  - detection runs new-vs-all through the batch detectors
+    (pipeline.detect_pairs) with the NEW conversations as the probe side:
+    block statistics (content-hash groups, LSH key sizes with the hot-key
+    pre-pass, stop-band drop and salting, gram document frequencies) are
+    computed over the stored corpus plus the batch exactly as in a batch
+    run, only the blocks holding a new conversation are expanded, and only
+    the pairs touching one are emitted. The first batch (no stored corpus)
+    is a batch run;
   - state tables are APPEND-ONLY deltas (TableIO mode='append' writes only
     the batch's rows) plus tiny equality-delete tombstone tables — the
     Iceberg equality-delete pattern. A reader resolves
@@ -16,12 +22,14 @@ streaming growth path with **O(batch) state maintenance per micro-batch**:
   - connected components run INCREMENTALLY: only components touched by new
     edges or re-delivered conversations are re-solved (merge AND split are
     handled, because the affected subgraph is re-clustered from its valid
-    pairs), and only their membership/decision rows are rewritten;
-  - the substring arm runs incrementally too (_incremental_substring):
-    rarest-gram blocking over the stored corpus's gram index in BOTH
-    containment directions, restricted to new-touching pairs, with the
-    batch detector's pattern-probe fallback and the same containment
-    verification before pairs are emitted.
+    pairs), and only their membership/decision rows are rewritten.
+
+Limitation: pairs that an earlier batch committed are not recomputed. A
+band key that new conversations push past ``band_key_drop`` (or a gram past
+``substring_gram_maxdf``) is dropped from then on, but the pairs it gave
+while it was smaller stay stored, where a batch run over the final corpus
+would not emit them; the same holds for a key whose salt count grows
+(tests/test_streaming.py::test_skewed_stream_equals_batch_per_microbatch).
 
 Structured Streaming's checkpointLocation provides exactly-once micro-batch
 tracking on top; a stream can take over from a batch bootstrap because the
@@ -36,129 +44,14 @@ from pyspark.sql import functions as F
 from .cluster import connected_components
 from .config import DedupConfig
 from .decide import make_decisions
-from .detectors.lsh import band_keys
-from .detectors.verify import verify_candidates
 from .io import TableIO
+from .pipeline import detect_pairs
 from .reconstruct import reconstruct_conversations
-from .signatures import add_signatures
+from .signatures import add_signatures, assert_cid_unique
 
 TURNS_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 )
-
-
-def _incremental_candidates(new: DataFrame, all_: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Candidates touching at least one NEW conversation (new-vs-all),
-    cid-keyed like the batch detectors (verify restores string ids)."""
-    # exact: new hashes probe all hashes
-    nh = new.filter(F.length("norm_text") > 0).select(
-        F.col("cid").alias("n_id"), "content_hash"
-    )
-    ah = all_.filter(F.length("norm_text") > 0).select(
-        F.col("cid").alias("a_id"), "content_hash"
-    )
-    exact = (
-        nh.join(ah, "content_hash")
-        .filter(F.col("n_id") != F.col("a_id"))
-        .select(
-            F.least("n_id", "a_id").alias("conv_a"),
-            F.greatest("n_id", "a_id").alias("conv_b"),
-            F.lit("exact").alias("src"),
-        )
-    )
-    # LSH: band keys of new probe band keys of all
-    nb = band_keys(new, cfg).withColumnRenamed("cid", "n_id")
-    ab = band_keys(all_, cfg).withColumnRenamed("cid", "a_id")
-    lsh = (
-        nb.join(ab, ["band_id", "band_hash"])
-        .filter(F.col("n_id") != F.col("a_id"))
-        .select(
-            F.least("n_id", "a_id").alias("conv_a"),
-            F.greatest("n_id", "a_id").alias("conv_b"),
-            F.lit("lsh").alias("src"),
-        )
-    )
-    return exact.unionByName(lsh).unionByName(_incremental_substring(new, all_, cfg))
-
-
-def _incremental_substring(new: DataFrame, all_: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Substring containment edges touching >=1 NEW conversation — the same
-    new-vs-all shape as the exact/LSH arms.
-
-    The stored side's sampled-gram index is derived from the resolved
-    conversations state (``all_`` IS the maintained append-delta table, so
-    exploding its ``sub_grams`` per batch is the gram-table scan a separate
-    index table would also pay); document frequencies are one count
-    aggregation over that index. Both containment directions are blocked
-    with the batch detector's rarest-gram scheme, restricted to pairs with a
-    new endpoint:
-
-      new-inner:    rarest kept gram of each NEW doc probes ALL kept grams;
-      new-outer:    rarest kept gram of EVERY doc probes the NEW docs' kept
-                    grams (the stored->new containment direction);
-      fallback:     gramless / all-stopped docs run the pattern probe
-                    (substring._tiny_pairs) over the full corpus, output
-                    filtered to new-touching pairs (cap + counters as in
-                    batch).
-
-    Candidates are then containment-verified (hydrate + instr) before being
-    emitted as src='substring', exactly like the batch arm — verify's
-    m_substring gate trusts its input pairs."""
-    from .detectors.substring import _tiny_pairs, hydrate_and_verify
-
-    nonempty = all_.filter(F.length("norm_text") > 0)
-    grams = nonempty.select("cid", F.explode("sub_grams").alias("gram"))
-    sizes = grams.groupBy("gram").agg(F.count("*").alias("df"))
-    joined = grams.join(sizes, "gram")
-    kept = joined.filter(F.col("df") <= cfg.substring_gram_maxdf).select(
-        "cid", "gram"
-    )
-    rarest = (
-        joined.groupBy("cid")
-        .agg(F.min(F.struct("df", "gram")).alias("m"))
-        .select("cid", F.col("m.df").alias("min_df"), F.col("m.gram").alias("gram"))
-    )
-    inner_keys = rarest.filter(F.col("min_df") <= cfg.substring_gram_maxdf).select(
-        "cid", "gram"
-    )
-    new_ids = new.select("cid").distinct()
-
-    def only_new(df: DataFrame, key: str = "cid") -> DataFrame:
-        return df.join(
-            F.broadcast(new_ids.withColumnRenamed("cid", key)), key, "left_semi"
-        )
-
-    def pairs_of(inner: DataFrame, outer: DataFrame) -> DataFrame:
-        return (
-            inner.alias("a")
-            .join(outer.alias("b"), "gram")
-            .filter(F.col("a.cid") != F.col("b.cid"))
-            .select(
-                F.least("a.cid", "b.cid").alias("conv_a"),
-                F.greatest("a.cid", "b.cid").alias("conv_b"),
-            )
-        )
-
-    p_new_inner = pairs_of(only_new(inner_keys), kept)
-    p_new_outer = pairs_of(inner_keys, only_new(kept))
-    all_stopped = rarest.filter(F.col("min_df") > cfg.substring_gram_maxdf).select(
-        "cid"
-    )
-    tiny = _tiny_pairs(all_, all_stopped, cfg, None)
-    tiny_new = (
-        tiny.join(F.broadcast(new_ids.withColumnRenamed("cid", "conv_a")), "conv_a", "left_semi")
-        .unionByName(
-            tiny.join(
-                F.broadcast(new_ids.withColumnRenamed("cid", "conv_b")), "conv_b", "left_semi"
-            )
-        )
-    )
-    raw = p_new_inner.unionByName(p_new_outer).unionByName(tiny_new).distinct()
-    return (
-        hydrate_and_verify(raw, all_)
-        .select("conv_a", "conv_b")
-        .withColumn("src", F.lit("substring"))
-    )
 
 
 class StreamingDedup:
@@ -255,17 +148,18 @@ class StreamingDedup:
                 redelivered.withColumn("_seq", seq), "conv_deletes", mode="append"
             )
 
-        # ---- new-vs-all detector pass (exact + LSH) ----------------------
+        # ---- new-vs-all detector pass -------------------------------------
         # same cid injectivity contract the batch pipeline asserts per pairs
-        # job: all_ is new ∪ stored-live, exactly the id space the joins
-        # below key on, so a cross-batch xxhash64 collision aborts loudly
-        # here instead of emitting a false duplicate pair
-        from .signatures import assert_cid_unique
-
-        assert_cid_unique(all_)
-        cand = _incremental_candidates(new, all_, cfg)
-        new_pairs = verify_candidates(cand, all_, cfg).persist()
-        self.io.write(new_pairs.withColumn("_seq", seq), "candidate_pairs", mode="append")
+        # job: all_ is new ∪ stored-live, exactly the id space the detectors
+        # key on, so a cross-batch xxhash64 collision aborts loudly here
+        # instead of emitting a false duplicate pair
+        n = assert_cid_unique(all_)
+        probe = None if stored is None else new.select("cid")
+        # the pairs are persisted and written inside the block: the detector
+        # caches are released when it exits, on success and on failure
+        with detect_pairs(all_, cfg, n_conv=n, probe=probe) as pairs:
+            new_pairs = pairs.persist()
+            self.io.write(new_pairs.withColumn("_seq", seq), "candidate_pairs", mode="append")
 
         # ---- incremental connected components -----------------------------
         # touched = endpoints of new matched edges + re-delivered convs;
@@ -323,7 +217,9 @@ class StreamingDedup:
         old_groups = (
             affected_ids.withColumnRenamed("component_id", "group_id")
             if prev_comps is not None
-            else self.spark.createDataFrame([], "group_id string")
+            # empty frames come from a range: one built from a Python list
+            # costs a Python worker pass in every job that reads it
+            else self.spark.range(0).selectExpr("CAST(id AS STRING) AS group_id")
         )
         dead_groups = old_groups.unionByName(
             dec_new.select("group_id")
@@ -362,11 +258,8 @@ class StreamingDedup:
             ("decision_deletes", "group_id"),
         ):
             if self.io.current_snapshot(tomb) is not None:
-                self.io.write(
-                    self.spark.createDataFrame([], f"{key} string, _seq long"),
-                    tomb,
-                    mode="overwrite",
-                )
+                empty = self.spark.range(0).selectExpr(f"CAST(id AS STRING) AS {key}", "id AS _seq")
+                self.io.write(empty, tomb, mode="overwrite")
 
     # -- the stream -----------------------------------------------------------
     def start(self, input_dir: str, checkpoint_dir: str, available_now: bool = True):
