@@ -200,28 +200,49 @@ def test_containment_pair_split_across_batches(spark, cfg, tmp_path):
     assert comps["in2"] == comps["out2"]
 
 
-def test_skewed_stream_equals_batch_per_microbatch(spark, skewed_turns, tmp_path):
-    """The skewed corpus (stop-bands and salted keys fire) delivered as two
-    micro-batches of alternating sorted conv_id: the stored components are
-    those of a batch run over the first batch plus, from a batch run over
-    the whole corpus, the matched pairs touching the second batch's
-    conversations. The streamed LSH arm must drop the template's
-    stop-bands of the whole corpus to meet this; a copy that does not
-    merges all 600 template docs.
+def test_redelivered_representative_keeps_its_group_whole(spark, skewed_turns, tmp_path):
+    """An exact group of more copies than band_key_cap whose representative
+    (the string-min member, where its star edges meet) is re-delivered with
+    other text. LSH salting splits the remaining copies into subgroups that
+    never pair across, so only star edges around the next member keep them
+    one component, as in a batch run over the final corpus."""
+    import pandas as pd
 
-    It is not a batch run over the whole corpus: with 300 template docs the
-    first batch's template band keys hold about 200 members, so some fall
-    under band_key_drop and are salted, and the pairs they give are kept
-    once committed (the limitation in the streaming module docstring)."""
+    pdf, cfg = skewed_turns
+    pdf = pdf[~pdf.conv_id.str.startswith("t")]  # 100 copies + 100 unique docs
+    rep = pdf.conv_id.min()
+    edited = pdf[pdf.conv_id == rep].assign(text="an edited text sharing nothing with the copies")
+    assert (pdf.text == pdf[pdf.conv_id == rep].text.iloc[0]).sum() > cfg.band_key_cap
+    sd = StreamingDedup(spark, str(tmp_path / "state"), cfg, compact_every=0)
+    sd.process_batch(corpus_to_spark(spark, pdf), 0)
+    sd.process_batch(corpus_to_spark(spark, edited), 1)
+    got = {r["conv_id"]: r["component_id"] for r in sd.stored_components().collect()}
+    final = pd.concat([pdf[pdf.conv_id != rep], edited], ignore_index=True)
+    assert got == batch_components(spark, final, cfg)
+
+
+@pytest.fixture(scope="module")
+def skewed_stream(spark, skewed_turns, tmp_path_factory):
+    """The skewed corpus (stop-bands and salted keys fire) delivered as two
+    micro-batches of alternating sorted conv_id: (turns, second batch's
+    conv_ids, config, stored components)."""
     pdf, cfg = skewed_turns
     first = set(sorted(pdf.conv_id.unique())[::2])
     b0, b1 = pdf[pdf.conv_id.isin(first)], pdf[~pdf.conv_id.isin(first)]
-    sd = StreamingDedup(spark, str(tmp_path / "state"), cfg, compact_every=0)
+    sd = StreamingDedup(spark, str(tmp_path_factory.mktemp("skewed_state")), cfg, compact_every=0)
     sd.process_batch(corpus_to_spark(spark, b0), 0)
     sd.process_batch(corpus_to_spark(spark, b1), 1)
     got = {r["conv_id"]: r["component_id"] for r in sd.stored_components().collect()}
+    return pdf, b0, set(b1.conv_id), cfg, got
 
-    new = set(b1.conv_id)
+
+def test_skewed_stream_equals_batch_per_microbatch(spark, skewed_stream):
+    """The stored components are those of a batch run over the first batch
+    plus, from a batch run over the whole corpus, the matched pairs touching
+    the second batch's conversations. The streamed LSH arm must drop the
+    template's stop-bands of the whole corpus to meet this; a copy that does
+    not merges all 600 template docs."""
+    pdf, b0, new, cfg, got = skewed_stream
     edges = matched_pairs(spark, b0, cfg) | {
         p for p in matched_pairs(spark, pdf, cfg) if new & set(p)
     }
@@ -232,6 +253,19 @@ def test_skewed_stream_equals_batch_per_microbatch(spark, skewed_turns, tmp_path
         ).collect()
     }
     assert got == want
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="committed pairs are not retracted: with 300 template docs the first "
+    "batch's template band keys hold about 200 members, so some fall under "
+    "band_key_drop and are salted, and the pairs they give stay stored after "
+    "the whole corpus drops those keys (streaming module docstring)",
+)
+def test_skewed_stream_equals_batch(spark, skewed_stream):
+    """The stored components equal one batch run over the whole corpus."""
+    pdf, _, _, cfg, got = skewed_stream
+    assert got == batch_components(spark, pdf, cfg)
 
 
 @pytest.fixture(scope="module", params=["generated200", "skewed"])

@@ -45,6 +45,7 @@ def exact_candidates(conv: DataFrame, probe: DataFrame | None = None) -> DataFra
     nonempty = conv.filter("length(norm_text) > 0").select("content_hash", "conv_id", "cid")
     if probe is not None:
         probed = nonempty.join(F.broadcast(probe.select("cid")), "cid", "left_semi")
+        # one row per probe doc, like the probe ids: safe to broadcast
         groups = F.broadcast(probed.select("content_hash"))
         nonempty = nonempty.join(groups, "content_hash", "left_semi")
     # struct-min orders by conv_id first: rep = cid of the string-min member
@@ -55,3 +56,31 @@ def exact_candidates(conv: DataFrame, probe: DataFrame | None = None) -> DataFra
         "least(rep.cid, cid) AS conv_a", "greatest(rep.cid, cid) AS conv_b", "'exact' AS src"
     )
     return touching(edges, probe)
+
+
+def orphaned_members(stored: DataFrame, new: DataFrame) -> DataFrame:
+    """The rows of ``stored`` whose content-hash group loses its
+    representative: ``new`` re-delivers the string-min member with other
+    (or empty) text.
+
+    The group's star edges all end at that member's old version; a batch run
+    over the updated corpus anchors them on the next string-min member, so
+    a probed run (exact_candidates(..., probe=)) emits them only when the
+    probe holds these members."""
+    nonempty = stored.filter("length(norm_text) > 0")
+    ids = new.select("conv_id")
+    kept = new.filter("length(norm_text) > 0").select("conv_id", "content_hash")
+    left = (
+        nonempty.join(ids, "conv_id", "left_semi")
+        .join(kept, ["conv_id", "content_hash"], "left_anti")
+        .select("conv_id", "content_hash")
+    )
+    groups = nonempty.join(left.select("content_hash"), "content_hash", "left_semi")
+    orphaned = (
+        groups.groupBy("content_hash")
+        .agg(F.expr("min(conv_id) AS conv_id"))
+        .join(left, ["content_hash", "conv_id"], "left_semi")
+    )
+    return groups.join(orphaned.select("content_hash"), "content_hash", "left_semi").join(
+        ids, "conv_id", "left_anti"
+    )

@@ -202,8 +202,10 @@ def lsh_candidates(
     # pre-drop: stop-band rows never reach the aggregation buffer
     live = keyed.filter(f"hot_sz IS NULL OR hot_sz <= {drop}")
     if probe is not None:
+        # only the probe ids are forced to broadcast: the probe's band keys
+        # grow with the micro-batch (rows x bands), so Catalyst picks that join
         probe_keys = keys.join(F.broadcast(probe.select("cid")), "cid", "left_semi")
-        live = live.join(F.broadcast(probe_keys.select(*on)), on, "left_semi")
+        live = live.join(probe_keys.select(*on), on, "left_semi")
     # pre-salt: known-hot keys group by (key, salt subgroup).
     # salt = pmod(cid, n): cid IS xxhash64(conv_id) (signatures.py), so this
     # equals the pre-cid pmod(xxhash64(conv_id), n) salt bit-for-bit — the

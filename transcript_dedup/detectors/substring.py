@@ -125,8 +125,9 @@ def _gram_pairs(
     # docs whose grams were ALL stop-listed: min_df over every gram > maxdf
     all_stopped = rarest.filter(f"min_df > {maxdf}").select("cid")
     if probe is not None:
-        probe_grams = F.broadcast(
-            kept.join(F.broadcast(probe.select("cid")), "cid", "left_semi").select("gram")
+        # not hinted: the probe's kept grams grow with the micro-batch
+        probe_grams = kept.join(F.broadcast(probe.select("cid")), "cid", "left_semi").select(
+            "gram"
         )
         inner_keys = inner_keys.join(probe_grams, "gram", "left_semi")
         kept = kept.join(probe_grams, "gram", "left_semi")

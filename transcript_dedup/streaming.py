@@ -11,7 +11,9 @@ streaming growth path with **O(batch) state maintenance per micro-batch**:
     computed over the stored corpus plus the batch exactly as in a batch
     run, only the blocks holding a new conversation are expanded, and only
     the pairs touching one are emitted. The first batch (no stored corpus)
-    is a batch run;
+    is a batch run. An exact group's representative re-delivered with other
+    text brings the group's other members into the batch, so its star edges
+    are rebuilt around the next member (detectors.exact.orphaned_members);
   - state tables are APPEND-ONLY deltas (TableIO mode='append' writes only
     the batch's rows) plus tiny equality-delete tombstone tables — the
     Iceberg equality-delete pattern. A reader resolves
@@ -29,7 +31,7 @@ band key that new conversations push past ``band_key_drop`` (or a gram past
 ``substring_gram_maxdf``) is dropped from then on, but the pairs it gave
 while it was smaller stay stored, where a batch run over the final corpus
 would not emit them; the same holds for a key whose salt count grows
-(tests/test_streaming.py::test_skewed_stream_equals_batch_per_microbatch).
+(tests/test_streaming.py::test_skewed_stream_equals_batch, a strict xfail).
 
 Structured Streaming's checkpointLocation provides exactly-once micro-batch
 tracking on top; a stream can take over from a batch bootstrap because the
@@ -44,6 +46,7 @@ from pyspark.sql import functions as F
 from .cluster import connected_components
 from .config import DedupConfig
 from .decide import make_decisions
+from .detectors.exact import orphaned_members
 from .io import TableIO
 from .pipeline import detect_pairs
 from .reconstruct import reconstruct_conversations
@@ -58,7 +61,7 @@ class StreamingDedup:
     """Incremental state layout (all through TableIO):
 
     conversations      +_seq   append-only conv deltas
-    conv_deletes               (conv_id, _seq) — re-delivered ids
+    conv_deletes               (conv_id, _seq) — re-delivered ids, orphaned members
     candidate_pairs    +_seq   append-only verified-pair deltas
     components         +_seq   append-only (conv_id, component_id) deltas
     component_deletes          (conv_id, _seq) — membership invalidations
@@ -123,6 +126,7 @@ class StreamingDedup:
         cfg = self.cfg
         seq = F.lit(int(batch_id)).cast("long")
         new = add_signatures(reconstruct_conversations(turns_batch), cfg).persist()
+        cached = [new]  # released when the batch is done
         if new.isEmpty():
             new.unpersist()  # empty micro-batches must not leak cache blocks
             return
@@ -130,14 +134,28 @@ class StreamingDedup:
 
         # ---- conversations: O(batch) delta + tombstones for re-delivery --
         if stored is not None:
-            redelivered = (
-                new.select("conv_id")
-                .join(stored.select("conv_id"), "conv_id", "left_semi")
+            # re-delivered ids, with the content hash they were stored with
+            again = (
+                new.select("conv_id", "content_hash")
+                .join(stored.selectExpr("conv_id", "content_hash AS old_hash"), "conv_id")
                 .persist()
             )
-            n_redelivered = redelivered.count()
+            cached.append(again)
+            n_redelivered, n_rehashed = again.selectExpr(
+                "count(1)", "count_if(content_hash != old_hash)"
+            ).first()
+            redelivered = again.select("conv_id")
+            if n_rehashed:
+                # an exact group whose representative changed text loses the
+                # star edges anchored on it: its other members are delivered
+                # again too, so their pairs are rebuilt around the next member.
+                # Checkpointed, not cached, for the reason given at new_pairs below
+                orphans = orphaned_members(stored, new).drop("_seq").localCheckpoint()
+                new = new.unionByName(orphans)
+                redelivered = redelivered.unionByName(orphans.select("conv_id"))
             stored_live = stored.join(redelivered, "conv_id", "left_anti")
             all_ = stored_live.drop("_seq").unionByName(new).persist()
+            cached.append(all_)
         else:
             redelivered = None
             n_redelivered = 0
@@ -155,11 +173,15 @@ class StreamingDedup:
         # instead of emitting a false duplicate pair
         n = assert_cid_unique(all_)
         probe = None if stored is None else new.select("cid")
-        # the pairs are persisted and written inside the block: the detector
-        # caches are released when it exits, on success and on failure
+        # the pairs are written inside the block: the detector caches are
+        # released when it exits, on success and on failure
         with detect_pairs(all_, cfg, n_conv=n, probe=probe) as pairs:
-            new_pairs = pairs.persist()
-            self.io.write(new_pairs.withColumn("_seq", seq), "candidate_pairs", mode="append")
+            snap = self.io.write(pairs.withColumn("_seq", seq), "candidate_pairs", mode="append")
+        # read back, not cached: a cached frame nests its whole plan into every
+        # plan that reads it, and planning the CC and decision jobs over the
+        # detector plan costs more than running the detectors
+        delta = {**snap, "paths": snap["paths"][-1:]}
+        new_pairs = TableIO.read_snapshot(self.spark, delta).drop("_seq")
 
         # ---- incremental connected components -----------------------------
         # touched = endpoints of new matched edges + re-delivered convs;
@@ -231,12 +253,8 @@ class StreamingDedup:
         if self.compact_every and (int(batch_id) + 1) % self.compact_every == 0:
             self.compact()
 
-        for df in (new, new_pairs, new_matched, comps_new):
+        for df in cached + [new_matched, comps_new]:
             df.unpersist()
-        if all_ is not new:  # stored-corpus union persisted separately above
-            all_.unpersist()
-        if redelivered is not None:
-            redelivered.unpersist()
 
     # -- compaction ----------------------------------------------------------
     def compact(self) -> None:
