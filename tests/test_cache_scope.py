@@ -2,7 +2,8 @@
 stage (LSH band keys, the substring gram join and rarest-gram argmin) is
 released once the pairs are materialized — after a successful run, after
 a failed one and in the driver queries that run the detectors; connected
-components releases its adjacency even when it fails. Checked against
+components releases its adjacency even when it fails, and a failed
+streaming micro-batch releases every frame it persisted. Checked against
 Spark's CacheManager itself.
 
 The LSH hot-key pre-pass (and so the band-key cache) only runs above
@@ -19,9 +20,11 @@ from pyspark import StorageLevel
 
 from transcript_dedup import pipeline
 from transcript_dedup.detectors import substring
+from transcript_dedup.generate import corpus_to_spark
 from transcript_dedup.pipeline import DedupPipeline, run_dedup_dataframes
 from transcript_dedup.reconstruct import reconstruct_conversations
 from transcript_dedup.signatures import add_signatures
+from transcript_dedup.streaming import StreamingDedup
 
 SF_0001 = "/root/testdata/sf0.001"
 
@@ -48,12 +51,16 @@ def persisted(spark, turns200, monkeypatch):
     return calls
 
 
-@pytest.mark.parametrize("outcome", ["success", "failure", "cc_failure"])
+@pytest.mark.parametrize("outcome", ["success", "failure", "cc_failure", "stream_failure"])
 def test_pipeline_run_releases_detector_caches(
-    spark, cfg, turns200, tmp_path, monkeypatch, persisted, outcome
+    spark, cfg, corpus200, turns200, tmp_path, monkeypatch, persisted, outcome
 ):
     cfg = cfg.with_(band_hot_prepass_min_rows=0)
     run = DedupPipeline(spark, str(tmp_path / "out"), cfg).run
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("verify failed")
+
     if outcome == "success":
         res = run(turns200, input_fingerprint="cache-scope")
         assert res["decisions"].count() > 0
@@ -65,11 +72,17 @@ def test_pipeline_run_releases_detector_caches(
         ).run
         with pytest.raises(RuntimeError, match="did not converge"):
             run(turns200, input_fingerprint="cache-scope")
+    elif outcome == "stream_failure":
+        # a micro-batch that fails in its pairs stage, after it persisted
+        # its conversations, the re-delivery join and the build side
+        pdf = corpus200[0]
+        first = pdf.conv_id.isin(sorted(pdf.conv_id.unique())[::2])
+        sd = StreamingDedup(spark, str(tmp_path / "stream"), cfg, compact_every=0)
+        sd.process_batch(corpus_to_spark(spark, pdf[first]), 0)
+        monkeypatch.setattr(pipeline, "verify_candidates", boom)
+        with pytest.raises(RuntimeError, match="verify failed"):
+            sd.process_batch(corpus_to_spark(spark, pdf[~first]), 1)
     else:
-
-        def boom(*args, **kwargs):
-            raise RuntimeError("verify failed")
-
         monkeypatch.setattr(pipeline, "verify_candidates", boom)
         with pytest.raises(RuntimeError, match="verify failed"):
             run(turns200, input_fingerprint="cache-scope")

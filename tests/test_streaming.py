@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+from transcript_dedup import pipeline, streaming
 from transcript_dedup.cluster import connected_components
 from transcript_dedup.detectors import exact_candidates, lsh_candidates, substring_candidates
 from transcript_dedup.generate import corpus_to_spark, generate_corpus
@@ -99,6 +100,32 @@ def test_per_batch_writes_are_batch_sized(spark, cfg, split_corpus, tmp_path):
     # pair/decision deltas exist per batch and are append-mode (O(batch))
     for t in ("candidate_pairs", "decisions", "components"):
         assert all(s["mode"] == "append" for s in man[t]["snapshots"])
+
+
+def test_micro_batch_runs_the_stage_table(spark, cfg, split_corpus, tmp_path, monkeypatch):
+    """Each non-empty micro-batch runs the four stages once, in order,
+    through pipeline.run_stages, with a probe side once something is
+    stored; an empty one runs none."""
+    calls = []
+
+    def recorder(frames, cfg, sink, *args):
+        names: list = []
+        calls.append((frames.get("probe") is not None, names))
+
+        def recording(name, build):
+            names.append(name)
+            return sink(name, build)
+
+        return pipeline.run_stages(frames, cfg, recording, *args)
+
+    monkeypatch.setattr(streaming, "run_stages", recorder)
+    d, _, _ = split_corpus
+    b0 = spark.read.parquet(str(d / "b0"))
+    sd = StreamingDedup(spark, str(tmp_path / "state"), cfg, compact_every=0)
+    sd.process_batch(b0, 0)
+    sd.process_batch(b0.limit(0), 1)
+    sd.process_batch(spark.read.parquet(str(d / "b1")), 2)
+    assert calls == [(False, list(pipeline.STAGES)), (True, list(pipeline.STAGES))]
 
 
 def test_redelivery_and_compaction(spark, cfg, split_corpus, tmp_path):

@@ -138,15 +138,13 @@ def find_conflicts(decisions: DataFrame) -> DataFrame:
     /root/reference/src/find-conflicts.ts:24-59, verify-no-conflicts.ts:19-47).
     Returns (conv_id, n_actions, actions) rows that violate the invariant —
     must be empty."""
-    exploded = decisions.select(
-        F.col("group_id"), F.explode("keep").alias("conv_id"), F.lit("keep").alias("action")
+    exploded = decisions.selectExpr(
+        "group_id", "explode(keep) AS conv_id", "'keep' AS action"
     ).unionByName(
-        decisions.select(
-            F.col("group_id"), F.explode("delete").alias("conv_id"), F.lit("delete").alias("action")
-        )
+        decisions.selectExpr("group_id", "explode(`delete`) AS conv_id", "'delete' AS action")
     )
     return (
         exploded.groupBy("conv_id")
-        .agg(F.collect_set("action").alias("actions"), F.count("*").alias("n_actions"))
-        .filter(F.size("actions") > 1)
+        .agg(F.expr("collect_set(action) AS actions"), F.expr("count(1) AS n_actions"))
+        .filter("size(actions) > 1")
     )

@@ -205,14 +205,12 @@ def _tiny_pairs(
     boilerplate-degenerate corpus should raise maxdf, not silently lose
     recall)."""
     spark = conv.sparkSession
-    gramless = conv.filter(
-        (F.length("norm_text") > 0) & (F.size("sub_grams") == 0)
-    ).select("cid")
+    gramless = conv.filter("length(norm_text) > 0 AND size(sub_grams) = 0").select("cid")
     tiny = (
         gramless.unionByName(tiny_ids)
         .distinct()
         .join(conv.select("cid", "norm_text"), "cid")
-        .select(F.col("cid").alias("t_id"), F.col("norm_text").alias("t_text"))
+        .selectExpr("cid AS t_id", "norm_text AS t_text")
     )
     # one bounded job: each task hands at most cap+1 rows to a single
     # partition that keeps cap+1 (a plain take() grows its scan over
@@ -244,6 +242,7 @@ def _tiny_pairs(
         counters["substring_tiny_short_docs"] = len(short_rows)
 
     out = empty
+    oriented = ("least(t_id, o_id) AS conv_a", "greatest(t_id, o_id) AS conv_b")
     if long_rows:
         # one min raw gram per DISTINCT needle text (raw = every gram, no
         # sampling; identical texts share one needle — fan-out to their doc
@@ -366,27 +365,19 @@ def _tiny_pairs(
                 )
 
         matches = (
-            conv.filter(F.length("norm_text") >= k)
+            conv.filter(f"length(norm_text) >= {k}")
             .select("cid", "norm_text")
             .mapInPandas(probe, schema="o_id long, tix long")
         )
-        out = (
-            matches.join(tix_df, "tix")
-            .filter(F.col("t_id") != F.col("o_id"))
-            .select(
-                F.least("t_id", "o_id").alias("conv_a"),
-                F.greatest("t_id", "o_id").alias("conv_b"),
-            )
-            .distinct()
-        )
+        out = matches.join(tix_df, "tix").filter("t_id != o_id").selectExpr(*oriented).distinct()
     if short_rows:
         shorts = F.broadcast(
             spark.createDataFrame(
                 pa.table({"t_id": [i for i, _ in short_rows], "t_text": [t for _, t in short_rows]})
             )
         )
-        others = conv.filter(F.length("norm_text") > 0).select(
-            F.col("cid").alias("o_id"), F.col("norm_text").alias("o_text")
+        others = conv.filter("length(norm_text) > 0").selectExpr(
+            "cid AS o_id", "norm_text AS o_text"
         )
         short_pairs = (
             others.join(
@@ -396,11 +387,8 @@ def _tiny_pairs(
                 F.expr("length(o_text) > length(t_text) AND instr(o_text, t_text) > 0"),
                 "inner",
             )
-            .filter(F.col("t_id") != F.col("o_id"))
-            .select(
-                F.least("t_id", "o_id").alias("conv_a"),
-                F.greatest("t_id", "o_id").alias("conv_b"),
-            )
+            .filter("t_id != o_id")
+            .selectExpr(*oriented)
             .distinct()
         )
         out = out.unionByName(short_pairs)

@@ -1,13 +1,14 @@
-"""End-to-end pipeline: one stage sequence, two sinks.
+"""End-to-end pipeline: one stage sequence, three sinks.
 
-Every batch caller runs the same four stages in order (``run_stages``):
+Every caller runs the same four stages in order (``run_stages``):
 
   turns --reconstruct+signatures--> conversations
         --exact+lsh+substring-----> candidate_pairs (verified + scored)
         --connected components----> components
         --rule cascade------------> decisions
 
-Each stage's output goes to the caller's sink, ``sink(name, build)``:
+Each stage's output goes to the caller's sink, ``sink(name, build)``, which
+returns the frame the later stages read:
 
   TableIO sink (DedupPipeline.run): each stage commits one TableIO snapshot
       + one metrics row, so a killed run resumes from the last committed
@@ -19,6 +20,10 @@ Each stage's output goes to the caller's sink, ``sink(name, build)``:
   in-memory sink (run_dedup_dataframes): conversations and candidate_pairs
       are persisted, components and decisions stay lazy — for embedding
       the engine in other dataflows (e.g. the driver's queries).
+  streaming sink (streaming.StreamingDedup.process_batch): each stage
+      appends a micro-batch's delta plus tombstones; the pairs stage probes
+      with the new conversations and hands on only the pairs of the
+      components they touch.
 
 A stage's cache scope closes as soon as its sink returns, so the detector
 caches live exactly until the pairs are committed.
@@ -60,7 +65,7 @@ from .signatures import KERNEL_VERSION, add_signatures, assert_cid_unique
 STAGES = ("conversations", "candidate_pairs", "components", "decisions")
 DETECTORS = ("exact", "lsh", "substring")
 
-# sink(stage name, build) -> the stage's committed frame; build(counters)
+# sink(stage name, build) -> the frame later stages read; build(counters)
 # constructs the stage, counters=None meaning "collect no counters"
 Sink = Callable[[str, Callable[[dict | None], DataFrame]], DataFrame]
 
@@ -124,9 +129,12 @@ def detect_pairs(
 def run_stages(
     frames: dict, cfg: DedupConfig, sink: Sink, detectors: tuple[str, ...] = DETECTORS
 ) -> dict:
-    """Run the four stages in order, each through ``sink``. ``frames``
-    holds the input — ``turns``, or ``conversations`` already built — and
-    gains every stage's committed frame, plus ``n_conv`` if pairs built."""
+    """Run the four stages in order, each through ``sink``, which returns
+    the frame the later stages read (the committed table, for the TableIO
+    and in-memory sinks). ``frames`` holds the input — ``turns``, or
+    ``conversations`` already built, and optionally ``probe``, the cids the
+    pairs must touch (see detect_pairs) — and gains every stage's frame,
+    plus ``n_conv`` if pairs built."""
 
     def conversations(counters, scope):
         if "conversations" in frames:
@@ -144,7 +152,9 @@ def run_stages(
         if counters is not None:
             counters["n_conv_cid_checked"] = n
         return scope.enter_context(
-            detect_pairs(conv, cfg, counters, n_conv=n, detectors=detectors)
+            detect_pairs(
+                conv, cfg, counters, n_conv=n, detectors=detectors, probe=frames.get("probe")
+            )
         )
 
     def components(counters, scope):

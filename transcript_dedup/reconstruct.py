@@ -33,24 +33,22 @@ def reconstruct_conversations(turns: DataFrame, keep_doc_text: bool = False) -> 
       norm_text (F1-normalized doc_text), content_hash (xxhash64 of norm_text),
       completeness (fraction of non-empty turn texts)
     """
-    ordered = F.sort_array(
-        F.collect_list(F.struct("turn_idx", "text", "role"))
-    )
+    # SQL text: one Py4J call per expression instead of one per column
+    # reference, literal, operator and lambda
     conv = turns.groupBy("conv_id").agg(
-        F.count(F.lit(1)).cast("int").alias("turn_count"),
-        F.sum(F.length("text")).cast("long").alias("total_chars"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-        ordered.alias("_turns"),
-        F.sort_array(F.collect_set(F.nullif("tool", F.lit("")))).alias("tool_set"),
-        F.avg((F.length(F.trim("text")) > 0).cast("double")).alias("completeness"),
+        F.expr("CAST(count(1) AS INT) AS turn_count"),
+        F.expr("CAST(sum(length(text)) AS BIGINT) AS total_chars"),
+        F.expr("min(ts) AS first_ts"),
+        F.expr("max(ts) AS last_ts"),
+        F.expr("sort_array(collect_list(struct(turn_idx, text, role))) AS _turns"),
+        F.expr("sort_array(collect_set(nullif(tool, ''))) AS tool_set"),
+        F.expr("avg(CAST(length(trim(text)) > 0 AS DOUBLE)) AS completeness"),
     )
-    conv = conv.withColumn(
-        "doc_text", F.concat_ws("\n", F.transform("_turns", lambda t: t["text"]))
-    ).withColumn(
-        "role_seq", F.concat_ws("|", F.transform("_turns", lambda t: t["role"]))
-    )
-    conv = conv.drop("_turns")
+    conv = conv.selectExpr(
+        "*",
+        "concat_ws('\\n', transform(_turns, t -> t.text)) AS doc_text",
+        "concat_ws('|', transform(_turns, t -> t.role)) AS role_seq",
+    ).drop("_turns")
     conv = conv.withColumn("norm_text", normalize_text("doc_text"))
     conv = conv.withColumn("content_hash", F.xxhash64("norm_text"))
     if not keep_doc_text:

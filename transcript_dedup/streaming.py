@@ -4,16 +4,17 @@ The reference is batch-only with file-based resume (SURVEY.md 2.10); the
 engine's snapshot/anti-join resume covers that. This module adds the
 streaming growth path with **O(batch) state maintenance per micro-batch**:
 
-  - detection runs new-vs-all through the batch detectors
-    (pipeline.detect_pairs) with the NEW conversations as the probe side:
-    block statistics (content-hash groups, LSH key sizes with the hot-key
-    pre-pass, stop-band drop and salting, gram document frequencies) are
-    computed over the stored corpus plus the batch exactly as in a batch
-    run, only the blocks holding a new conversation are expanded, and only
-    the pairs touching one are emitted. The first batch (no stored corpus)
-    is a batch run. An exact group's representative re-delivered with other
-    text brings the group's other members into the batch, so its star edges
-    are rebuilt around the next member (detectors.exact.orphaned_members);
+  - a micro-batch runs the batch stage table (pipeline.run_stages) once:
+    the stored corpus plus the batch is the build side, the NEW
+    conversations the probe side of the detectors, so block statistics
+    (content-hash groups, LSH key sizes with the hot-key pre-pass,
+    stop-band drop and salting, gram document frequencies) are those of a
+    batch run, only the blocks holding a new conversation are expanded, and
+    only the pairs touching one are emitted. The first batch (no stored
+    corpus) is a batch run. An exact group's representative re-delivered
+    with other text brings the group's other members into the batch, so
+    its star edges are rebuilt around the next member
+    (detectors.exact.orphaned_members);
   - state tables are APPEND-ONLY deltas (TableIO mode='append' writes only
     the batch's rows) plus tiny equality-delete tombstone tables — the
     Iceberg equality-delete pattern. A reader resolves
@@ -21,10 +22,11 @@ streaming growth path with **O(batch) state maintenance per micro-batch**:
     re-delivered conversations and re-clustered components, so they stay
     O(churn), and periodic compaction (``compact_every``) folds the chain
     back into a single snapshot;
-  - connected components run INCREMENTALLY: only components touched by new
-    edges or re-delivered conversations are re-solved (merge AND split are
-    handled, because the affected subgraph is re-clustered from its valid
-    pairs), and only their membership/decision rows are rewritten.
+  - connected components run INCREMENTALLY: the batch's sink hands the
+    components and decisions stages only the components touched by new
+    edges or re-delivered conversations, with their valid pairs (merge AND
+    split are handled, the affected subgraph is re-clustered), and only
+    their membership/decision rows are rewritten.
 
 Limitation: pairs that an earlier batch committed are not recomputed. A
 band key that new conversations push past ``band_key_drop`` (or a gram past
@@ -40,17 +42,17 @@ state lives in the same TableIO tables.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .cluster import connected_components
 from .config import DedupConfig
-from .decide import make_decisions
 from .detectors.exact import orphaned_members
 from .io import TableIO
-from .pipeline import detect_pairs
+from .pipeline import STAGES, Sink, run_stages
 from .reconstruct import reconstruct_conversations
-from .signatures import add_signatures, assert_cid_unique
+from .signatures import add_signatures
 
 TURNS_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -58,7 +60,8 @@ TURNS_SCHEMA = (
 
 
 class StreamingDedup:
-    """Incremental state layout (all through TableIO):
+    """Incremental dedup state; ``process_batch`` is the foreachBatch
+    function. State layout (all through TableIO):
 
     conversations      +_seq   append-only conv deltas
     conv_deletes               (conv_id, _seq) — re-delivered ids, orphaned members
@@ -123,138 +126,122 @@ class StreamingDedup:
 
     # -- one micro-batch ----------------------------------------------------
     def process_batch(self, turns_batch: DataFrame, batch_id: int) -> None:
+        """One micro-batch through pipeline.run_stages (module docstring).
+        Every frame it persists is released when it ends, even on failure."""
         cfg = self.cfg
+        with ExitStack() as cached:
+
+            def cache(df: DataFrame) -> DataFrame:
+                df = df.persist()
+                cached.callback(df.unpersist)
+                return df
+
+            new = cache(add_signatures(reconstruct_conversations(turns_batch), cfg))
+            if new.isEmpty():
+                return  # empty micro-batches must not leak cache blocks
+            stored = self.stored_conversations()
+            all_, redelivered, n_redelivered, probe = new, None, 0, None
+            if stored is not None:
+                # re-delivered ids, with the content hash they were stored with
+                again = cache(
+                    new.select("conv_id", "content_hash").join(
+                        stored.selectExpr("conv_id", "content_hash AS old_hash"), "conv_id"
+                    )
+                )
+                n_redelivered, n_rehashed = again.selectExpr(
+                    "count(1)", "count_if(content_hash != old_hash)"
+                ).first()
+                redelivered = again.select("conv_id")
+                if n_rehashed:
+                    # an exact group whose representative changed text loses
+                    # the star edges anchored on it: its other members are
+                    # delivered again too, so their pairs are rebuilt around
+                    # the next member. Checkpointed, not cached: a cached
+                    # frame nests its whole plan into every plan that reads it
+                    orphans = orphaned_members(stored, new).drop("_seq").localCheckpoint()
+                    new = new.unionByName(orphans)
+                    redelivered = redelivered.unionByName(orphans.select("conv_id"))
+                stored_live = stored.join(redelivered, "conv_id", "left_anti")
+                all_ = cache(stored_live.drop("_seq").unionByName(new))
+                probe = new.select("cid")
+            sink = self._batch_sink(batch_id, new, redelivered, n_redelivered, cache)
+            run_stages({"conversations": all_, "probe": probe}, cfg, sink)
+
+            # ---- periodic compaction ---------------------------------------
+            if self.compact_every and (int(batch_id) + 1) % self.compact_every == 0:
+                self.compact()
+
+    def _batch_sink(self, batch_id, new, redelivered, n_redelivered, cache) -> Sink:
+        """Each stage appends its O(batch) delta plus tombstones. The pairs
+        stage returns the new pairs plus the stored matched pairs of the
+        components they touch: the subgraph components and decisions redo."""
         seq = F.lit(int(batch_id)).cast("long")
-        new = add_signatures(reconstruct_conversations(turns_batch), cfg).persist()
-        cached = [new]  # released when the batch is done
-        if new.isEmpty():
-            new.unpersist()  # empty micro-batches must not leak cache blocks
-            return
-        stored = self.stored_conversations()
+        affected: dict = {}
 
-        # ---- conversations: O(batch) delta + tombstones for re-delivery --
-        if stored is not None:
-            # re-delivered ids, with the content hash they were stored with
-            again = (
-                new.select("conv_id", "content_hash")
-                .join(stored.selectExpr("conv_id", "content_hash AS old_hash"), "conv_id")
-                .persist()
+        def append(df: DataFrame, table: str) -> dict:
+            return self.io.write(df.withColumn("_seq", seq), table, mode="append")
+
+        def conversations(all_):
+            append(new, "conversations")
+            if n_redelivered:
+                append(redelivered, "conv_deletes")
+            return all_
+
+        def candidate_pairs(pairs):
+            # written inside the detector scope, then read back, not cached:
+            # a cached frame nests its whole plan into every plan that reads
+            # it, and planning the CC and decision jobs over the detector
+            # plan costs more than running the detectors
+            snap = append(pairs, "candidate_pairs")
+            delta = {**snap, "paths": snap["paths"][-1:]}
+            new_pairs = TableIO.read_snapshot(self.spark, delta).drop("_seq")
+            # touched = endpoints of new matched edges + re-delivered convs;
+            # affected components = stored components holding a touched node
+            new_matched = cache(new_pairs.filter("is_match").select("conv_a", "conv_b"))
+            touched = new_matched.select(F.col("conv_a").alias("conv_id")).unionByName(
+                new_matched.select(F.col("conv_b").alias("conv_id"))
             )
-            cached.append(again)
-            n_redelivered, n_rehashed = again.selectExpr(
-                "count(1)", "count_if(content_hash != old_hash)"
-            ).first()
-            redelivered = again.select("conv_id")
-            if n_rehashed:
-                # an exact group whose representative changed text loses the
-                # star edges anchored on it: its other members are delivered
-                # again too, so their pairs are rebuilt around the next member.
-                # Checkpointed, not cached, for the reason given at new_pairs below
-                orphans = orphaned_members(stored, new).drop("_seq").localCheckpoint()
-                new = new.unionByName(orphans)
-                redelivered = redelivered.unionByName(orphans.select("conv_id"))
-            stored_live = stored.join(redelivered, "conv_id", "left_anti")
-            all_ = stored_live.drop("_seq").unionByName(new).persist()
-            cached.append(all_)
-        else:
-            redelivered = None
-            n_redelivered = 0
-            all_ = new
-        self.io.write(new.withColumn("_seq", seq), "conversations", mode="append")
-        if n_redelivered:
-            self.io.write(
-                redelivered.withColumn("_seq", seq), "conv_deletes", mode="append"
-            )
-
-        # ---- new-vs-all detector pass -------------------------------------
-        # same cid injectivity contract the batch pipeline asserts per pairs
-        # job: all_ is new ∪ stored-live, exactly the id space the detectors
-        # key on, so a cross-batch xxhash64 collision aborts loudly here
-        # instead of emitting a false duplicate pair
-        n = assert_cid_unique(all_)
-        probe = None if stored is None else new.select("cid")
-        # the pairs are written inside the block: the detector caches are
-        # released when it exits, on success and on failure
-        with detect_pairs(all_, cfg, n_conv=n, probe=probe) as pairs:
-            snap = self.io.write(pairs.withColumn("_seq", seq), "candidate_pairs", mode="append")
-        # read back, not cached: a cached frame nests its whole plan into every
-        # plan that reads it, and planning the CC and decision jobs over the
-        # detector plan costs more than running the detectors
-        delta = {**snap, "paths": snap["paths"][-1:]}
-        new_pairs = TableIO.read_snapshot(self.spark, delta).drop("_seq")
-
-        # ---- incremental connected components -----------------------------
-        # touched = endpoints of new matched edges + re-delivered convs;
-        # affected components = stored components containing any touched node
-        new_matched = new_pairs.filter("is_match").select("conv_a", "conv_b").persist()
-        touched = (
-            new_matched.select(F.col("conv_a").alias("conv_id"))
-            .unionByName(new_matched.select(F.col("conv_b").alias("conv_id")))
-        )
-        if redelivered is not None:
-            touched = touched.unionByName(redelivered)
-        touched = touched.distinct()
-
-        prev_comps = self.stored_components()
-        if prev_comps is not None:
+            if redelivered is not None:
+                touched = touched.unionByName(redelivered)
+            touched = touched.distinct()
+            prev_comps = self.stored_components()
+            if prev_comps is None:
+                affected["members"] = touched
+                # empty frames come from a range: one built from a Python
+                # list costs a Python worker pass in every job that reads it
+                affected["groups"] = self.spark.range(0).selectExpr(
+                    "CAST(id AS STRING) AS group_id"
+                )
+                return new_pairs
             affected_ids = (
-                prev_comps.join(touched, "conv_id", "left_semi")
-                .select("component_id")
-                .distinct()
+                prev_comps.join(touched, "conv_id", "left_semi").select("component_id").distinct()
             )
-            affected_members = prev_comps.join(
+            members = prev_comps.join(
                 F.broadcast(affected_ids), "component_id", "left_semi"
             ).select("conv_id")
+            affected["members"] = members.unionByName(touched).distinct()
+            affected["groups"] = affected_ids.withColumnRenamed("component_id", "group_id")
             # valid stored matched pairs inside affected components
-            sp = self.stored_pairs()
-            sub_stored = sp.filter("is_match").join(
-                F.broadcast(affected_members.withColumnRenamed("conv_id", "conv_a")),
-                "conv_a",
-                "left_semi",
+            sub_stored = self.stored_pairs().filter("is_match").join(
+                F.broadcast(members.withColumnRenamed("conv_id", "conv_a")), "conv_a", "left_semi"
             )
-            sub_pairs = sub_stored.select("conv_a", "conv_b").unionByName(new_matched)
-            all_affected = affected_members.unionByName(
-                touched
-            ).distinct()
-        else:
-            affected_members = None
-            sub_pairs = new_matched
-            sub_stored = None
-            all_affected = touched
+            return sub_stored.select(*new_pairs.columns).unionByName(new_pairs)
 
-        comps_new = connected_components(sub_pairs, cfg).persist()
+        def components(comps):
+            comps = cache(comps)
+            # membership tombstones: every node whose component was re-solved
+            append(affected["members"], "component_deletes")
+            append(comps, "components")
+            return comps
 
-        # membership tombstones: every node whose component was re-solved
-        self.io.write(
-            all_affected.withColumn("_seq", seq), "component_deletes", mode="append"
-        )
-        self.io.write(comps_new.withColumn("_seq", seq), "components", mode="append")
+        def decisions(dec):
+            dead = affected["groups"].unionByName(dec.select("group_id")).distinct()
+            append(dead, "decision_deletes")
+            append(dec, "decisions")
+            return dec
 
-        # ---- decisions for the re-solved components only -------------------
-        pairs_for_conf = (
-            new_pairs if sub_stored is None
-            else sub_stored.select(*new_pairs.columns).unionByName(new_pairs)
-        )
-        dec_new = make_decisions(comps_new, all_, pairs_for_conf, cfg)
-        old_groups = (
-            affected_ids.withColumnRenamed("component_id", "group_id")
-            if prev_comps is not None
-            # empty frames come from a range: one built from a Python list
-            # costs a Python worker pass in every job that reads it
-            else self.spark.range(0).selectExpr("CAST(id AS STRING) AS group_id")
-        )
-        dead_groups = old_groups.unionByName(
-            dec_new.select("group_id")
-        ).distinct()
-        self.io.write(dead_groups.withColumn("_seq", seq), "decision_deletes", mode="append")
-        self.io.write(dec_new.withColumn("_seq", seq), "decisions", mode="append")
-
-        # ---- periodic compaction -------------------------------------------
-        if self.compact_every and (int(batch_id) + 1) % self.compact_every == 0:
-            self.compact()
-
-        for df in cached + [new_matched, comps_new]:
-            df.unpersist()
+        commits = dict(zip(STAGES, (conversations, candidate_pairs, components, decisions)))
+        return lambda name, build: commits[name](build(None))
 
     # -- compaction ----------------------------------------------------------
     def compact(self) -> None:
