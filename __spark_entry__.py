@@ -1630,15 +1630,14 @@ def _transcript_decisions_es_oracle() -> str:
 # columns (minhash, simhash, n_shingles); the path hashes only these plus the
 # kernel version, so adding or removing any other config field leaves the
 # path — and the transcript_decisions oracle SQL that embeds it — unchanged
-_SIG_EXPORT_FIELDS = ("shingle_k", "num_perm", "minhash_seed", "minhash_width")
+_SIG_EXPORT_FIELDS = ("shingle_k", "num_perm", "minhash_seed")
 
 
 def _sigs_parquet_path() -> str:
     """Signature-export path keyed by a fingerprint of the signature
     fields of the config plus a kernel version tag, so no
-    signature-relevant change (num_perm, width, shingle_k, minhash_seed,
-    or the kernel itself) can ever pair a stale export with a fresh engine
-    run."""
+    signature-relevant change (num_perm, shingle_k, minhash_seed, or the
+    kernel itself) can ever pair a stale export with a fresh engine run."""
     import hashlib
     import json
 
@@ -1646,7 +1645,10 @@ def _sigs_parquet_path() -> str:
     from transcript_dedup.signatures import KERNEL_VERSION
 
     cfg = DedupConfig()
-    sig = {f: getattr(cfg, f) for f in _SIG_EXPORT_FIELDS}
+    # signatures are always stored 64-bit; the constant entry keeps the
+    # hash (so the path and the oracle text embedding it) what it was when
+    # the width was a config field
+    sig = {"minhash_width": 64, **{f: getattr(cfg, f) for f in _SIG_EXPORT_FIELDS}}
     fp = hashlib.sha256(
         json.dumps({"cfg": sig, "kernel": KERNEL_VERSION}, sort_keys=True).encode()
     ).hexdigest()[:12]

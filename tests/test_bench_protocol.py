@@ -5,7 +5,12 @@ engine's clean band instead of being a hand-recalibrated constant)."""
 from __future__ import annotations
 
 import json
+import os
+import signal
+import subprocess
 import sys
+import textwrap
+import time
 
 sys.path.insert(0, "/root/repo")
 
@@ -127,3 +132,68 @@ def test_summary_line_stays_compact():
     assert "windows\":" not in line.replace(
         "scaling_efficiency_windows", ""
     ).replace("efficiency_vs_ceiling_windows", "").replace("n_windows", "")
+
+
+def _exec_children(pid: int, comm: str) -> list[int]:
+    """Child pids of ``pid`` that have exec'd the program ``comm``."""
+    with open(f"/proc/{pid}/task/{pid}/children") as f:
+        kids = [int(c) for c in f.read().split()]
+    out = []
+    for kid in kids:
+        try:
+            with open(f"/proc/{kid}/comm") as f:
+                if f.read().strip() == comm:
+                    out.append(kid)
+        except FileNotFoundError:
+            pass
+    return out
+
+
+def test_sigterm_prints_partial_line_and_kills_rep():
+    """A SIGTERM'd bench (a harness timeout) still ends stdout with one
+    parsed summary line holding what was measured so far, and the rep it
+    was waiting on dies with it instead of running on orphaned."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = textwrap.dedent(
+        f"""
+        import subprocess, sys
+        sys.path.insert(0, {repo!r})
+        import bench
+        bench._print_partial_on_sigterm({{"queries": {{"q1": 1.5}}, "sf": "0.1"}})
+        print("waiting", flush=True)
+        subprocess.run(["sleep", "30"])
+        """
+    )
+    proc = subprocess.Popen(
+        [sys.executable, "-c", child], stdout=subprocess.PIPE, text=True, cwd=repo
+    )
+    rep = None
+    try:
+        assert proc.stdout.readline().strip() == "waiting"
+        # signal only once the rep has exec'd and Popen has returned: a
+        # signal inside Popen's own start-up reaches no kill path
+        deadline = time.monotonic() + 10
+        while not _exec_children(proc.pid, "sleep") and time.monotonic() < deadline:
+            time.sleep(0.05)
+        (rep,) = _exec_children(proc.pid, "sleep")
+        time.sleep(0.3)
+        proc.send_signal(signal.SIGTERM)
+        out, _ = proc.communicate(timeout=10)
+        assert proc.returncode == 143
+        line = json.loads(out.strip().splitlines()[-1])
+        assert line == {"queries": {"q1": 1.5}, "sf": "0.1", "partial": True}
+        # subprocess.run killed and reaped the rep before the child exited
+        try:
+            os.kill(rep, 0)
+            alive = True
+        except ProcessLookupError:
+            alive = False
+        assert not alive, "the rep in flight outlived the SIGTERM'd bench"
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+        if rep is not None:
+            try:
+                os.kill(rep, signal.SIGKILL)
+            except ProcessLookupError:
+                pass

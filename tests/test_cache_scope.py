@@ -7,8 +7,8 @@ streaming micro-batch releases every frame it persisted. Checked against
 Spark's CacheManager itself.
 
 The LSH hot-key pre-pass (and so the band-key cache) only runs above
-``band_hot_prepass_min_rows``; the floor is lowered to 0 here so that
-every detector cache is exercised on the 200-conv fixture.
+``lsh.PREPASS_MIN_ROWS`` known conversations; the floor is lowered to 0
+here so that every detector cache is exercised on the 200-conv fixture.
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ import pytest
 from pyspark import StorageLevel
 
 from transcript_dedup import pipeline
-from transcript_dedup.detectors import substring
+from transcript_dedup.detectors import lsh, substring
 from transcript_dedup.generate import corpus_to_spark
 from transcript_dedup.pipeline import DedupPipeline, run_dedup_dataframes
 from transcript_dedup.reconstruct import reconstruct_conversations
@@ -55,7 +55,7 @@ def persisted(spark, turns200, monkeypatch):
 def test_pipeline_run_releases_detector_caches(
     spark, cfg, corpus200, turns200, tmp_path, monkeypatch, persisted, outcome
 ):
-    cfg = cfg.with_(band_hot_prepass_min_rows=0)
+    monkeypatch.setattr(lsh, "PREPASS_MIN_ROWS", 0)
     run = DedupPipeline(spark, str(tmp_path / "out"), cfg).run
 
     def boom(*args, **kwargs):
@@ -91,8 +91,10 @@ def test_pipeline_run_releases_detector_caches(
     assert _cache_is_empty(spark)
 
 
-def test_run_dedup_dataframes_keeps_only_its_outputs_cached(spark, cfg, turns200, persisted):
-    cfg = cfg.with_(band_hot_prepass_min_rows=0)
+def test_run_dedup_dataframes_keeps_only_its_outputs_cached(
+    spark, cfg, turns200, monkeypatch, persisted
+):
+    monkeypatch.setattr(lsh, "PREPASS_MIN_ROWS", 0)
     conv = add_signatures(reconstruct_conversations(turns200), cfg)
     res = run_dedup_dataframes(conv, cfg)
     assert res["decisions"].count() > 0

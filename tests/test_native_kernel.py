@@ -6,7 +6,7 @@ compute_signature_row for every doc — minhash, simhash, n_shingles, and the
 sorted sampled-gram list — across edge cases (empty, single-char, double
 spaces, multi-byte UTF-8, embedded NUL, <k tokens, <gram_k bytes) and a
 randomized corpus, under both the default config and non-default
-shingle/gram/width settings. TD_NATIVE_KERNEL=require makes a compile or
+shingle/gram settings. TD_NATIVE_KERNEL=require makes a compile or
 parity-probe failure an error instead of a silent numpy fallback, proving
 the native path is the one being exercised.
 """
@@ -60,10 +60,9 @@ def _native_or_skip():
     [
         DedupConfig(),
         DedupConfig(shingle_k=3, substring_gram_k=8, substring_mod=16),
-        DedupConfig(minhash_width=32, num_perm=96),
         DedupConfig(substring_gram_k=6, substring_mod=10),  # non-pow2 mod branch
     ],
-    ids=["default", "small-grams", "width32", "mod10"],
+    ids=["default", "small-grams", "mod10"],
 )
 def test_native_matches_numpy(cfg):
     lib = _native_or_skip()

@@ -88,7 +88,8 @@ def test_sig_export_path_keys_on_signature_fields_only(monkeypatch):
     """The transcript_decisions oracle SQL embeds the signature-export path,
     so a config field the export does not depend on (added, removed or
     re-defaulted) must not move it; a signature field or the kernel version
-    must."""
+    must. Signatures are always 64-bit, and the path hashes that as a
+    constant so it stays where it was when the width was a config field."""
     import dataclasses
     import functools
 
@@ -96,6 +97,7 @@ def test_sig_export_path_keys_on_signature_fields_only(monkeypatch):
     from transcript_dedup import config, signatures
 
     base = E._sigs_parquet_path()
+    assert base.endswith("033926c5510a.parquet"), base
     cls = config.DedupConfig
     extra = dataclasses.make_dataclass(
         "ExtraConfig", [("future_knob", int, 7)], bases=(cls,), frozen=True
@@ -103,7 +105,7 @@ def test_sig_export_path_keys_on_signature_fields_only(monkeypatch):
     for variant in (extra, functools.partial(cls, jaccard_threshold=0.9, cc_max_iters=3)):
         monkeypatch.setattr(config, "DedupConfig", variant)
         assert E._sigs_parquet_path() == base
-    for field, value in (("shingle_k", 4), ("minhash_seed", 1), ("minhash_width", 32)):
+    for field, value in (("shingle_k", 4), ("minhash_seed", 1)):
         monkeypatch.setattr(config, "DedupConfig", functools.partial(cls, **{field: value}))
         assert E._sigs_parquet_path() != base, field
     monkeypatch.setattr(config, "DedupConfig", cls)

@@ -1,9 +1,10 @@
-"""Physical-execution config knobs must never change results.
+"""Physical execution must never change results.
 
-`pair_gen_partitions` only places the LSH pair explosion; the emitted
-candidate pairs, scores, and decisions must be bit-identical across every
-setting. The plan-shape gates render the pairs stage exactly as every
-pipeline path composes it (pipeline.detect_pairs).
+The session's shuffle width sets the partitioning of every shuffle and the
+round-robin width of the LSH pair explosion; the emitted candidate pairs,
+scores, and decisions must be bit-identical across widths. The plan-shape
+gates render the pairs stage exactly as every pipeline path composes it
+(pipeline.detect_pairs).
 """
 
 from __future__ import annotations
@@ -31,18 +32,20 @@ def _pairs_fingerprint(spark, turns, cfg):
     return (int(row["n"]), int(row["m"]), int(row["h"]))
 
 
-def test_pair_gen_partitions_variants_identical(spark, turns200, cfg):
-    variants = [
-        cfg,
-        # pair_gen_partitions inserts a round-robin exchange before the LSH
-        # pair explosion — placement only, the pair set must not move
-        # (-1 auto is the default; 0 is the fused pre-round-6 plan)
-        cfg.with_(pair_gen_partitions=0),
-        cfg.with_(pair_gen_partitions=16),
-        cfg.with_(pair_gen_partitions=3),
-    ]
-    fps = {_pairs_fingerprint(spark, turns200, c) for c in variants}
-    assert len(fps) == 1, f"physical config changed results: {fps}"
+def test_shuffle_partition_variants_identical(spark, turns200, cfg):
+    # the shuffle width places every shuffle and sizes the round-robin
+    # exchange before the LSH pair explosion (4x the width) — placement
+    # only, the pair set must not move
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    fps = set()
+    try:
+        for width in (before, "3", "16"):
+            spark.conf.set(key, width)
+            fps.add(_pairs_fingerprint(spark, turns200, cfg))
+    finally:
+        spark.conf.set(key, before)
+    assert len(fps) == 1, f"shuffle width changed results: {fps}"
 
 
 def test_pipeline_plan_shape_gate(spark, turns200, cfg):
@@ -61,7 +64,7 @@ def test_pipeline_plan_shape_gate(spark, turns200, cfg):
     # on; the local-mode bench pipeline runs AQE off (round-7, measured
     # stage-wave latency). The 100 TB-audit properties must hold in both,
     # with the LSH hot-key pre-pass on (corpus size unknown, or above
-    # cfg.band_hot_prepass_min_rows) and off (the pipeline's known n_conv),
+    # lsh.PREPASS_MIN_ROWS) and off (the pipeline's known n_conv),
     # as a batch run and with every other conversation as the probe side.
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
     try:

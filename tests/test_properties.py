@@ -105,7 +105,7 @@ def test_sub_shingle_docs_have_shingles(toks):
     assert (sh.size > 0) == (len(norm) > 0)
     if norm:
         # exact duplicates (any length, incl. sub-shingle): est_jaccard 1.0
-        sig = minhash_signature(sh, _A, _B, _CFG.minhash_width)
+        sig = minhash_signature(sh, _A, _B)
         assert est_jaccard(sig, sig) == 1.0
 
 
@@ -133,7 +133,7 @@ def test_fuzzy_or_gate_fp_budget():
 
     def feats(text):
         sh = shingle_hashes(text, _CFG.shingle_k)
-        sig = minhash_signature(sh, _A, _B, _CFG.minhash_width)
+        sig = minhash_signature(sh, _A, _B)
         bands = set(band_tuples(sig, _CFG.lsh_bands, _CFG.lsh_rows))
         return sig, int(simhash64(text)), bands
 

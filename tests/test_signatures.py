@@ -34,8 +34,8 @@ def test_minhash_estimates_jaccard():
     d1, d2 = " ".join(base), " ".join(other)
     s1, s2 = shingles_py(d1, cfg.shingle_k), shingles_py(d2, cfg.shingle_k)
     true_j = len(s1 & s2) / len(s1 | s2)
-    sig1 = minhash_signature(shingle_hashes(d1, cfg.shingle_k), a, b, cfg.minhash_width)
-    sig2 = minhash_signature(shingle_hashes(d2, cfg.shingle_k), a, b, cfg.minhash_width)
+    sig1 = minhash_signature(shingle_hashes(d1, cfg.shingle_k), a, b)
+    sig2 = minhash_signature(shingle_hashes(d2, cfg.shingle_k), a, b)
     assert abs(est_jaccard(sig1, sig2) - true_j) < 0.15
     assert est_jaccard(sig1, sig1) == 1.0
 
@@ -43,12 +43,8 @@ def test_minhash_estimates_jaccard():
 def test_signature_determinism():
     cfg = DedupConfig()
     a, b = minhash_params(cfg)
-    sig1 = minhash_signature(
-        shingle_hashes("alpha beta gamma delta epsilon zeta", 5), a, b, cfg.minhash_width
-    )
-    sig2 = minhash_signature(
-        shingle_hashes("alpha beta gamma delta epsilon zeta", 5), a, b, cfg.minhash_width
-    )
+    sig1 = minhash_signature(shingle_hashes("alpha beta gamma delta epsilon zeta", 5), a, b)
+    sig2 = minhash_signature(shingle_hashes("alpha beta gamma delta epsilon zeta", 5), a, b)
     assert (sig1 == sig2).all()
     assert simhash64("x y z") == simhash64("x y z")
     assert simhash64("x y z") != simhash64("x y w")

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from transcript_dedup.config import DedupConfig
-from transcript_dedup.detectors import lsh_candidates
+from transcript_dedup.detectors import lsh, lsh_candidates
 from transcript_dedup.pipeline import detect_pairs
 from transcript_dedup.reconstruct import reconstruct_conversations
 from transcript_dedup.signatures import add_signatures
@@ -98,8 +98,9 @@ def test_lsh_hot_key_prepass_predrops_100k_key(spark):
 
 def test_lsh_prepass_pair_set_identical(spark, skewed_conv):
     """The hot-key pre-pass is a memory mechanism, not a semantics change:
-    the emitted pair set must be bit-identical with the pre-pass disabled
-    (post-aggregation filter/salt path only)."""
+    the emitted pair set must be bit-identical with the pre-pass skipped
+    (a known corpus size below the floor: post-aggregation filter/salt path
+    only)."""
     conv, cfg = skewed_conv
     with_pre = {
         (r["conv_a"], r["conv_b"])
@@ -107,9 +108,7 @@ def test_lsh_prepass_pair_set_identical(spark, skewed_conv):
     }
     without = {
         (r["conv_a"], r["conv_b"])
-        for r in lsh_candidates(conv, cfg.with_(band_hot_sample_mod=0))
-        .distinct()
-        .collect()
+        for r in lsh_candidates(conv, cfg, n_conv=conv.count()).distinct().collect()
     }
     assert with_pre == without
     assert len(with_pre) > 0
@@ -122,13 +121,13 @@ def test_lsh_prepass_counters_consistent(spark, skewed_conv):
     c_on: dict = {}
     c_off: dict = {}
     lsh_candidates(conv, cfg, c_on).count()
-    lsh_candidates(conv, cfg.with_(band_hot_sample_mod=0), c_off).count()
+    lsh_candidates(conv, cfg, c_off, n_conv=conv.count()).count()
     for k in ("lsh_stop_band_rows", "lsh_stop_band_keys", "lsh_salted_keys"):
         assert c_on[k] == c_off[k], (k, c_on, c_off)
 
 
-def test_lsh_prepass_scale_floor(spark, skewed_conv):
-    """n_conv at or below band_hot_prepass_min_rows skips the pre-pass
+def test_lsh_prepass_scale_floor(spark, skewed_conv, monkeypatch):
+    """n_conv at or below lsh.PREPASS_MIN_ROWS skips the pre-pass
     (no hot-key counters, no band-key cache registered) with a
     bit-identical pair set; above the floor — or when n_conv is unknown —
     the pre-pass runs as before."""
@@ -149,15 +148,11 @@ def test_lsh_prepass_scale_floor(spark, skewed_conv):
     assert small == base and len(base) > 0
     assert c_small["lsh_hot_keys_prepass"] == 0  # pre-pass skipped
     assert reg_small == []  # no band-key cache without the pre-pass
+    monkeypatch.setattr(lsh, "PREPASS_MIN_ROWS", n - 1)
     c_big: dict = {}
     big = {
         (r["conv_a"], r["conv_b"])
-        for r in lsh_candidates(
-            conv,
-            cfg.with_(band_hot_prepass_min_rows=n - 1),
-            c_big,
-            n_conv=n,
-        ).distinct().collect()
+        for r in lsh_candidates(conv, cfg, c_big, n_conv=n).distinct().collect()
     }
     assert big == base
     assert c_big["lsh_hot_keys_prepass"] > 0  # pre-pass ran above the floor

@@ -13,7 +13,7 @@ by the pure-Python oracle share these exact parameters, which is what the
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 
 @dataclass(frozen=True)
@@ -38,16 +38,6 @@ class DedupConfig:
     lsh_bands: int = 32                 # bands (lsh_bands * lsh_rows == num_perm)
     lsh_rows: int = 3                   # rows per band
     minhash_seed: int = 0x5EED_1DEA     # seeds the (a, b) permutation params
-    # stored signature width. 32 truncates each 64-bit per-permutation min
-    # to its low 32 bits (signatures._truncate_sig — argmin still decided
-    # in 64-bit space, estimator unchanged up to a 2^-32 collision term),
-    # halving signature bytes through the verify hydration shuffle. Kept at
-    # 64: an interleaved pinned A/B at 120k measured the int32 arrays
-    # consistently ~8% SLOWER in the pairs phase (63.9/61.2 s vs 58.9/57.6
-    # at 4 pinned cores — array<int> codegen paths lose more than the bytes
-    # save on this box; identical pair sets both widths). Part of the
-    # config fingerprint so snapshots invalidate when it changes.
-    minhash_width: int = 64
 
     # --- verification thresholds ------------------------------------------
     # fuzzy gate: band collision AND (est-Jaccard >= tau OR Hamming <= r).
@@ -96,37 +86,14 @@ class DedupConfig:
 
     # --- skew handling ------------------------------------------------------
     # band keys with more than `cap` members get a dynamic salt of
-    # ceil(size/cap) (bounded by band_salt_max) — subgroups stay ~cap-sized;
-    # keys beyond `drop` are stop-bands: boilerplate-degenerate, dropped with
-    # a counter (true duplicate groups that large are caught by the exact
-    # detector's hash equality and by their other, less-degenerate bands).
+    # ceil(size/cap) — subgroups stay ~cap-sized; keys beyond `drop` are
+    # stop-bands: boilerplate-degenerate, dropped with a counter (true
+    # duplicate groups that large are caught by the exact detector's hash
+    # equality and by their other, less-degenerate bands). The hot-key
+    # pre-pass that applies both before aggregation is sized in
+    # detectors/lsh.py (HOT_SAMPLE_MOD, PREPASS_MIN_ROWS).
     band_key_cap: int = 100
-    band_salt_max: int = 64
     band_key_drop: int = 2000
-    # hot-band-key pre-pass: a deterministic 1/mod hash-sample of band-key
-    # rows estimates which keys are hot; exact counts for those keys are
-    # broadcast back so stop-band rows are dropped and oversize keys salted
-    # BEFORE the collect_list aggregation ever buffers them (one degenerate
-    # boilerplate key must not materialize millions of ids in one task).
-    # The pair set is invariant to sampling accuracy — a missed hot key just
-    # falls back to the post-aggregation filter path. 0 disables the
-    # pre-pass (tests use it for pair-set identity checks).
-    band_hot_sample_mod: int = 20
-    # scale floor for the pre-pass: when the caller KNOWS the corpus row
-    # count (pipeline paths pass it) and it is at or below this bound, the
-    # pre-pass is skipped — the danger it guards against (one degenerate
-    # key buffering unbounded member lists in the collect_list aggregation)
-    # is arithmetically impossible to matter below it: a key's member list
-    # is at most n_conv cids, so the worst single aggregation buffer is
-    # 8*n_conv bytes (8 MB at this bound) — while the pre-pass itself costs
-    # two serial broadcast barriers plus a sample aggregation on the pairs
-    # job's critical path (measured ~1 s of the sf0.1 components query and
-    # two 3-4 s broadcast collects at 240k/pinned-4). The emitted pair set
-    # is identical either way (the post-aggregation stop/salt logic is the
-    # same decision procedure — pinned by the pair-set invariance test);
-    # only the memory bound depends on it, exactly like cc_driver_threshold.
-    # Callers that don't know the corpus size keep the pre-pass.
-    band_hot_prepass_min_rows: int = 1_000_000
 
     # --- internal id encoding -------------------------------------------------
     # cid = xxhash64(cid_seed, conv_id): the dictionary-encoded 8-byte id
@@ -137,21 +104,6 @@ class DedupConfig:
     # an independent draw; corpora far beyond 1e9 docs should shard the
     # dedup run (or widen cid) rather than retry seeds.
     cid_seed: int = 0
-
-    # --- physical execution ---------------------------------------------------
-    # round-robin repartition of the multi-member band buckets (a small
-    # fraction of group rows) between the band groupBy and the m^2 pair
-    # explosion. Without it the explosion fuses into the groupBy reducer
-    # task, so one partition's sum(m^2) over its buckets sets the stage's
-    # critical path (the last named straggler: ~5.5 s task vs 0.9 s median
-    # at pinned 4 cores). A positive value inserts one cheap exchange of
-    # just the sz>=2 bucket rows and spreads heavy buckets independently of
-    # the band-key hash. 0 keeps the fused single-shuffle plan; -1 (the
-    # default) auto-sizes to 4 x spark.sql.shuffle.partitions (measured
-    # round 6: at the bench's T4 width that is 32 slots — wall −4% mean
-    # across three interleaved pinned pairs, T1 neutral-to-positive,
-    # decisions bit-identical).
-    pair_gen_partitions: int = -1
 
     # --- clustering ----------------------------------------------------------
     cc_max_iters: int = 50

@@ -14,19 +14,20 @@ count is quadratic; AQE can split partitions but cannot cut Cartesian
 semantics. Mitigation, by key size ``sz``:
 
   sz > band_key_drop  -> dropped entirely (stop-bands, counted + reported);
-  sz > band_key_cap   -> salted with ``pmod(cid, n_salts)``,
-                         ``n_salts = min(band_salt_max, ceil(sz/cap))`` —
-                         pairs only within a salt subgroup. Within-key recall
-                         drops to ~1/salt for that band, but a true near-dup
-                         pair collides on several independent bands, so union
-                         recall survives (measured by the oracle recall test);
+  sz > band_key_cap   -> salted with ``pmod(cid, ceil(sz/cap))`` —
+                         pairs only within a ~cap-sized salt subgroup.
+                         Within-key recall drops to ~1/salt for that band,
+                         but a true near-dup pair collides on several
+                         independent bands, so union recall survives
+                         (measured by the oracle recall test);
   otherwise           -> all within-key pairs.
 
 Execution shape: ONE row-level shuffle. Band keys are grouped once
 (collect_list of members per key) and candidate pairs are generated MAP-SIDE
 from each group's member list. A degenerate key must never buffer its whole
-member list in that aggregation, so a cheap pre-pass runs first: a
-deterministic 1/``band_hot_sample_mod`` hash-sample of the band-key rows
+member list in that aggregation, so above ``PREPASS_MIN_ROWS`` conversations
+(or when the corpus size is unknown) a cheap pre-pass runs first: a
+deterministic 1/``HOT_SAMPLE_MOD`` hash-sample of the band-key rows
 estimates hot keys, their EXACT sizes are counted (count-only aggregation,
 bounded state) and broadcast back, and rows of keys with exact sz >
 band_key_drop are filtered out — while keys with cap < sz <= drop get their
@@ -44,6 +45,25 @@ from pyspark.sql import functions as F
 from ..config import DedupConfig
 from ..metrics import observe
 from .verify import touching
+
+# hot-key pre-pass sample rate: a deterministic 1/HOT_SAMPLE_MOD hash-sample
+# of the band-key rows estimates which keys are hot (_hot_band_sizes)
+HOT_SAMPLE_MOD = 20
+# scale floor for the pre-pass: when the caller KNOWS the corpus row count
+# (pipeline paths pass it) and it is at or below this bound, the pre-pass is
+# skipped — the danger it guards against (one degenerate key buffering
+# unbounded member lists in the collect_list aggregation) is arithmetically
+# impossible to matter below it: a key's member list is at most n_conv cids,
+# so the worst single aggregation buffer is 8*n_conv bytes (8 MB at this
+# bound) — while the pre-pass itself costs two serial broadcast barriers
+# plus a sample aggregation on the pairs job's critical path (measured ~1 s
+# of the sf0.1 components query and two 3-4 s broadcast collects at
+# 240k/pinned-4). The emitted pair set is identical either way (the
+# post-aggregation stop/salt logic is the same decision procedure — pinned
+# by the pair-set invariance test); only the memory bound depends on it,
+# exactly like cfg.cc_driver_threshold. Callers that don't know the corpus
+# size keep the pre-pass.
+PREPASS_MIN_ROWS = 1_000_000
 
 
 def release_key_caches(registry: list[DataFrame]) -> None:
@@ -80,16 +100,15 @@ def _hot_band_sizes(keys: DataFrame, cfg: DedupConfig) -> DataFrame:
     The sample is keyed on a seeded xxhash64 of cid (deterministic,
     independent of physical partitioning, decorrelated from the band salt
     which hashes the bare cid). A key of size s appears ~s/mod times in the
-    sample; the
+    sample (mod = HOT_SAMPLE_MOD); the
     candidate threshold max(2, cap/mod) flags every key at >= a few x cap
     with overwhelming probability while keeping the candidate set ~|sample| /
     threshold at worst. Candidate keys then get exact count-only aggregation
     (O(1) state per key — no list) so downstream pre-drop/pre-salt decisions
     use true sizes and the pair set stays exact.
     """
-    mod = cfg.band_hot_sample_mod
-    thresh = max(2, cfg.band_key_cap // mod)
-    sampled = keys.filter(f"pmod(xxhash64('hot-key-probe', cid), {mod}) = 0")
+    thresh = max(2, cfg.band_key_cap // HOT_SAMPLE_MOD)
+    sampled = keys.filter(f"pmod(xxhash64('hot-key-probe', cid), {HOT_SAMPLE_MOD}) = 0")
     cand = (
         sampled.groupBy("band_id", "band_hash")
         .count()
@@ -140,9 +159,9 @@ def lsh_candidates(
 
     ``n_conv`` (optional): the corpus row count, when the caller already
     knows it (the pipeline paths computed it for the cid-injectivity
-    assert). At or below cfg.band_hot_prepass_min_rows the hot-key
-    pre-pass is skipped — see the config field's rationale; the pair set
-    is identical either way, only the aggregation memory bound changes.
+    assert). The hot-key pre-pass runs iff ``n_conv`` is None or above
+    PREPASS_MIN_ROWS — see that constant's rationale; the pair set is
+    identical either way, only the aggregation memory bound changes.
 
     ``cache_registry`` (optional): a caller-owned list; when given, the
     band-key frame the pre-pass reads three times is persisted and appended
@@ -161,14 +180,9 @@ def lsh_candidates(
     unchanged) and only the pairs touching the probe are emitted. The
     post-aggregation counters then describe the probed keys only.
     """
-    if (
-        n_conv is not None
-        and n_conv <= cfg.band_hot_prepass_min_rows
-        and cfg.band_hot_sample_mod > 0
-    ):
-        cfg = cfg.with_(band_hot_sample_mod=0)
+    prepass = n_conv is None or n_conv > PREPASS_MIN_ROWS
     keys = band_keys(conv, cfg)
-    if cache_registry is not None and cfg.band_hot_sample_mod > 0:
+    if cache_registry is not None and prepass:
         # the hot-key pre-pass reads the band-key frame three times (sample
         # aggregation, exact-count aggregation, main grouping); without a
         # cache each read recomputes the rows x bands explode from conv.
@@ -184,7 +198,7 @@ def lsh_candidates(
     cap, drop = cfg.band_key_cap, cfg.band_key_drop
 
     pre = None
-    if cfg.band_hot_sample_mod > 0:
+    if prepass:
         hot = _hot_band_sizes(keys, cfg)
         if counters is not None:
             # pre-pass stats, observed on the broadcast the pairs job builds
@@ -212,7 +226,7 @@ def lsh_candidates(
     # pair set is unchanged by the id encoding — and costs no extra hash
     presalt = F.expr(
         "CASE WHEN hot_sz IS NOT NULL "
-        f"THEN pmod(cid, least({cfg.band_salt_max}, ceil(hot_sz / {cap}))) ELSE 0 END"
+        f"THEN pmod(cid, ceil(hot_sz / {cap})) ELSE 0 END"
     )
     groups = live.groupBy("band_id", "band_hash", presalt.alias("psalt")).agg(
         F.expr("collect_list(cid) AS m"), F.expr("first(hot_sz) AS hot_sz")
@@ -246,7 +260,7 @@ def lsh_candidates(
     def salt(x: str) -> str:
         return (
             f"CASE WHEN hot_sz IS NULL AND size(m) > {cap} "
-            f"THEN pmod({x}, least({cfg.band_salt_max}, ceil(size(m) / {cap}))) ELSE 0 END"
+            f"THEN pmod({x}, ceil(size(m) / {cap})) ELSE 0 END"
         )
 
     # every within-group pair whose members share a salt: elements strictly
@@ -257,23 +271,22 @@ def lsh_candidates(
         "y -> struct(least(x, y) AS conv_a, greatest(x, y) AS conv_b))))"
     )
     buckets = groups.filter(f"size(m) >= 2 AND (hot_sz IS NOT NULL OR size(m) <= {drop})")
-    n_pair_parts = cfg.pair_gen_partitions
-    if n_pair_parts < 0:
-        # auto: 4x the session shuffle width — enough round-robin slots that
-        # no slot collects several of the heavy buckets, cheap enough that
-        # the extra scheduling waves stay sub-second
-        try:
-            n_pair_parts = 4 * int(
-                buckets.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):
-            # conf can be non-numeric (e.g. "auto" under some AQE setups)
-            n_pair_parts = 4 * buckets.sparkSession.sparkContext.defaultParallelism
-    if n_pair_parts > 0:
-        # break the reducer->explode fusion so no single groupBy partition's
-        # sum(m^2) sets the critical path (see config.pair_gen_partitions);
-        # round-robin placement only — the emitted pair set is unchanged
-        buckets = buckets.repartition(n_pair_parts)
+    # round-robin repartition of the multi-member buckets (a small fraction
+    # of group rows) before the m^2 pair explosion. Without it the explosion
+    # fuses into the groupBy reducer task, so one partition's sum(m^2) sets
+    # the stage's critical path (the last named straggler: ~5.5 s task vs
+    # 0.9 s median at pinned 4 cores). 4x the session shuffle width gives
+    # enough slots that no slot collects several heavy buckets, cheap enough
+    # that the extra scheduling waves stay sub-second (measured round 6: at
+    # the bench's T4 width that is 32 slots — wall -4% mean across three
+    # interleaved pinned pairs, T1 neutral-to-positive, decisions
+    # bit-identical). Placement only — the emitted pair set is unchanged.
+    try:
+        n_pair_parts = 4 * int(buckets.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        # conf can be non-numeric (e.g. "auto" under some AQE setups)
+        n_pair_parts = 4 * buckets.sparkSession.sparkContext.defaultParallelism
+    buckets = buckets.repartition(n_pair_parts)
     pairs = buckets.selectExpr(f"explode({pair_structs}) AS p").selectExpr(
         "p.conv_a AS conv_a", "p.conv_b AS conv_b", "'lsh' AS src"
     )

@@ -52,7 +52,3 @@ def signed_records(docs: DataFrame, cfg: DedupConfig, id_col="doc_id", text_col=
     if docs.rdd.getNumPartitions() < floor:
         docs = docs.repartition(floor)
     return add_signatures(docs_as_records(docs, id_col, text_col), cfg)
-
-
-def unpad_id(col: str = "conv_id"):
-    return F.col(col).cast("bigint")

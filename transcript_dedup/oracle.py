@@ -58,7 +58,7 @@ def build_records(turns_df: pd.DataFrame, cfg: DedupConfig) -> list[OracleRecord
         doc = "\n".join(g["text"].tolist())
         norm = normalize_text_py(doc)
         sh = shingle_hashes(norm, cfg.shingle_k)
-        sig = minhash_signature(sh, a, b, cfg.minhash_width)
+        sig = minhash_signature(sh, a, b)
         sim = int(simhash64(norm))
         recs.append(
             OracleRecord(
