@@ -22,6 +22,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from transcript_dedup.normalize import NORMALIZE_SQL
+
 SF_DEFAULT = "/root/testdata/sf0.001"
 
 _TABLES = [
@@ -64,15 +66,13 @@ def _register(spark: SparkSession, sf_dir: str, tables: list[str]) -> None:
 
 # --------------------------------------------------------------------------
 # Normalization shared snippets (F1 chain — SURVEY.md 2.7 F1; the exact
-# /root/reference/src/duplicates.ts:150-156 regex chain in two dialects)
+# /root/reference/src/duplicates.ts:150-156 regex chain in two dialects). The
+# DuckDB one is normalize.NORMALIZE_SQL, the string test_normalize checks
+# against the Python twin, so the oracles run the tested chain.
 # --------------------------------------------------------------------------
 _NORM_SPARK = (
     "trim(regexp_replace(regexp_replace(lower({c}), '[^\\\\w\\\\s]', ''), "
     "'\\\\s+', ' '))"
-)
-_NORM_DUCK = (
-    "trim(regexp_replace(regexp_replace(lower({c}), '[^\\w\\s]', '', 'g'), "
-    "'\\s+', ' ', 'g'))"
 )
 
 
@@ -102,8 +102,8 @@ _add(
     """,
     f"""
     SELECT doc_id,
-           {_NORM_DUCK.format(c='text')} AS norm_text,
-           md5({_NORM_DUCK.format(c='text')}) AS fingerprint
+           {NORMALIZE_SQL.format(col='text')} AS norm_text,
+           md5({NORMALIZE_SQL.format(col='text')}) AS fingerprint
     FROM documents
     """,
     ["documents"],
@@ -124,7 +124,7 @@ _add(
     FROM n WHERE length(norm) > 0
     """,
     f"""
-    WITH n AS (SELECT doc_id, text, {_NORM_DUCK.format(c='text')} AS norm FROM documents)
+    WITH n AS (SELECT doc_id, text, {NORMALIZE_SQL.format(col='text')} AS norm FROM documents)
     SELECT doc_id,
            len(string_split(norm, ' ')) AS n_tokens,
            length(norm) AS n_norm_chars,
@@ -151,7 +151,7 @@ _add(
     FROM n WHERE length(norm) > 0
     """,
     f"""
-    WITH n AS (SELECT doc_id, lang, {_NORM_DUCK.format(c='text')} AS norm FROM documents)
+    WITH n AS (SELECT doc_id, lang, {NORMALIZE_SQL.format(col='text')} AS norm FROM documents)
     SELECT doc_id, lang,
            round(len(list_filter(string_split(norm, ' '), t -> t IN {_STOP})) /
                  cast(len(string_split(norm, ' ')) AS double), 6) AS stop_ratio,
@@ -169,7 +169,7 @@ _EXACT_PAIR_SPARK = f"""
     FROM f a JOIN f b ON a.fp = b.fp AND a.doc_id < b.doc_id
 """
 _EXACT_PAIR_DUCK = f"""
-    WITH f AS (SELECT doc_id, md5({_NORM_DUCK.format(c='text')}) AS fp FROM documents)
+    WITH f AS (SELECT doc_id, md5({NORMALIZE_SQL.format(col='text')}) AS fp FROM documents)
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.fp AS fingerprint
     FROM f a JOIN f b ON a.fp = b.fp AND a.doc_id < b.doc_id
 """
@@ -189,7 +189,7 @@ _EXACT_PLANTED = """
 _add(
     "doc_exact_dup_pairs",
     _EXACT_PLANTED.format(norm=_NORM_SPARK.format(c="text")),
-    _EXACT_PLANTED.format(norm=_NORM_DUCK.format(c="text")),
+    _EXACT_PLANTED.format(norm=NORMALIZE_SQL.format(col="text")),
     ["documents"],
 )
 
@@ -206,7 +206,7 @@ _add(
     FROM r WHERE rn = 1
     """,
     f"""
-    WITH f AS (SELECT doc_id, n_chars, md5({_NORM_DUCK.format(c='text')}) AS fp
+    WITH f AS (SELECT doc_id, n_chars, md5({NORMALIZE_SQL.format(col='text')}) AS fp
                FROM documents),
     r AS (SELECT *, row_number() OVER (PARTITION BY fp ORDER BY n_chars DESC, doc_id ASC) AS rn,
                  count(*) OVER (PARTITION BY fp) AS group_size
@@ -255,7 +255,7 @@ _add(
     WHERE n_inter / cast(sa.n_grams + sb.n_grams - n_inter AS double) >= 0.05
     """,
     f"""
-    WITH n AS (SELECT doc_id, string_split({_NORM_DUCK.format(c='text')}, ' ') AS t FROM documents),
+    WITH n AS (SELECT doc_id, string_split({NORMALIZE_SQL.format(col='text')}, ' ') AS t FROM documents),
     g AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 1),
                  i -> array_to_string(t[i:i+2], ' ')))) AS gram
           FROM n WHERE len(t) >= 3),
@@ -299,7 +299,7 @@ _add(
     WHERE n_inter / cast(se.n_grams + st.n_grams - n_inter AS double) >= 0.05
     """,
     f"""
-    WITH n AS (SELECT doc_id, string_split({_NORM_DUCK.format(c='text')}, ' ') AS t FROM documents),
+    WITH n AS (SELECT doc_id, string_split({NORMALIZE_SQL.format(col='text')}, ' ') AS t FROM documents),
     g AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 1),
                  i -> array_to_string(t[i:i+2], ' ')))) AS gram
           FROM n WHERE len(t) >= 3),
@@ -613,19 +613,18 @@ _NGRAM_SPARK = None  # defined above inside the registry; rebuilt here via WITH
 
 
 def _ngram_with(spark_side: bool) -> str:
-    norm = _NORM_SPARK if spark_side else _NORM_DUCK
     if spark_side:
         g = (
             "SELECT doc_id, explode(array_distinct(transform(sequence(0, size(t) - 3), "
             "i -> concat_ws(' ', slice(t, i + 1, 3))))) AS gram FROM n WHERE size(t) >= 3"
         )
-        t = f"SELECT doc_id, split({norm.format(c='text')}, ' ') AS t FROM documents"
+        t = f"SELECT doc_id, split({_NORM_SPARK.format(c='text')}, ' ') AS t FROM documents"
     else:
         g = (
             "SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 1), "
             "i -> array_to_string(t[i:i+2], ' ')))) AS gram FROM n WHERE len(t) >= 3"
         )
-        t = f"SELECT doc_id, string_split({norm.format(c='text')}, ' ') AS t FROM documents"
+        t = f"SELECT doc_id, string_split({NORMALIZE_SQL.format(col='text')}, ' ') AS t FROM documents"
     return f"""
     WITH n AS ({t}),
     g AS ({g}),
@@ -806,7 +805,7 @@ def _q_doc_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SUBSTR_ORACLE = f"""
-    WITH n AS (SELECT doc_id, {_NORM_DUCK.format(c='text')} AS norm FROM documents)
+    WITH n AS (SELECT doc_id, {NORMALIZE_SQL.format(col='text')} AS norm FROM documents)
     SELECT least(a.doc_id, b.doc_id) AS doc_a, greatest(a.doc_id, b.doc_id) AS doc_b
     FROM n a JOIN n b
       ON length(a.norm) < length(b.norm) AND length(a.norm) > 0
@@ -823,7 +822,7 @@ _SUBSTR_ORACLE = f"""
 # very hash check every round), so the closures — and therefore the
 # min-member cluster ids — agree exactly.
 _COMPONENTS_ORACLE = f"""
-    WITH n AS (SELECT doc_id, {_NORM_DUCK.format(c='text')} AS norm FROM documents),
+    WITH n AS (SELECT doc_id, {NORMALIZE_SQL.format(col='text')} AS norm FROM documents),
     ex AS (SELECT a.doc_id AS src, b.doc_id AS dst FROM n a JOIN n b
            ON a.norm = b.norm AND length(a.norm) > 0 AND a.doc_id <> b.doc_id),
     ss AS (SELECT a.doc_id AS src, b.doc_id AS dst FROM n a JOIN n b
@@ -974,19 +973,18 @@ def _q_doc_metadata_fixer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STOP_DUCK = "('the', 'a', 'of', 'and', 'in', 'to', 'is')"
 _METADATA_FIXER_ORACLE = f"""
     WITH planted AS (
       SELECT doc_id, text,
              CASE WHEN doc_id % 7 = 0 THEN '' ELSE lang END AS lang,
              CASE WHEN doc_id % 11 = 0 THEN NULL ELSE source END AS source
       FROM documents),
-    n AS (SELECT *, {_NORM_DUCK.format(c='text')} AS nm FROM planted),
+    n AS (SELECT *, {NORMALIZE_SQL.format(col='text')} AS nm FROM planted),
     calc AS (
       SELECT doc_id, lang, source,
              (lang IS NULL OR trim(lang) = '') AS miss_lang,
              (source IS NULL OR trim(source) = '') AS miss_source,
-             CASE WHEN len(list_filter(string_split(nm, ' '), t -> t IN {_STOP_DUCK}))
+             CASE WHEN len(list_filter(string_split(nm, ' '), t -> t IN {_STOP}))
                        >= 0.05 * len(string_split(nm, ' '))
                   THEN 'en' END AS inf_lang,
              CASE WHEN length(string_split(nm, ' ')[1]) >= 3
@@ -1497,10 +1495,8 @@ def _ensure_corpus_export() -> str:
     """Export the deterministic seed-42 transcript corpus once so the Spark
     query and the DuckDB oracle read the IDENTICAL parquet bytes."""
     import os
-    import tempfile
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from transcript_dedup.generate import generate_corpus
 
@@ -1508,10 +1504,7 @@ def _ensure_corpus_export() -> str:
         turns, _ = generate_corpus(200, seed=42)
         turns = turns.copy()
         turns["ts"] = turns["ts"].astype("datetime64[us]")  # Spark can't read NANOS
-        fd, tmp = tempfile.mkstemp(suffix=".parquet", dir="/tmp")
-        os.close(fd)
-        pq.write_table(pa.Table.from_pandas(turns, preserve_index=False), tmp)
-        os.replace(tmp, _CORPUS_PARQUET)
+        _pq_write_atomic(pa.Table.from_pandas(turns, preserve_index=False), _CORPUS_PARQUET)
     return _CORPUS_PARQUET
 
 
@@ -1546,7 +1539,7 @@ def _transcript_decisions_es_oracle() -> str:
              string_agg(role, '|' ORDER BY turn_idx) AS role_seq
       FROM t GROUP BY conv_id),
     n AS (SELECT conv_id, total_chars, first_ts, completeness, role_seq,
-                 {_NORM_DUCK.format(c='doc_text')} AS norm
+                 {NORMALIZE_SQL.format(col='doc_text')} AS norm
           FROM conv),
     exg AS (SELECT conv_id, min(conv_id) OVER (PARTITION BY norm) AS rep
             FROM n WHERE length(norm) > 0),
@@ -1665,11 +1658,9 @@ def _ensure_sig_export() -> str:
     est-Jaccard as a position-equality fraction, SimHash Hamming via
     bit_count(xor)) without re-deriving the non-SQL-expressible hashes."""
     import os
-    import tempfile
 
     import numpy as np
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from transcript_dedup.config import DedupConfig
     from transcript_dedup.generate import generate_corpus
@@ -1699,10 +1690,7 @@ def _ensure_sig_export() -> str:
                 ]
             ),
         )
-        fd, tmp = tempfile.mkstemp(suffix=".parquet", dir="/tmp")
-        os.close(fd)
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, path)
+        _pq_write_atomic(tbl, path)
     return path
 
 
@@ -1739,7 +1727,7 @@ def _transcript_decisions_oracle() -> str:
              string_agg(role, '|' ORDER BY turn_idx) AS role_seq
       FROM t GROUP BY conv_id),
     n AS (SELECT conv_id, total_chars, first_ts, completeness, role_seq,
-                 {_NORM_DUCK.format(c='doc_text')} AS norm
+                 {NORMALIZE_SQL.format(col='doc_text')} AS norm
           FROM conv),
     sg AS (SELECT * FROM read_parquet('{sigs}')),
     bnd AS (SELECT conv_id, tb.b AS band,
@@ -1892,7 +1880,7 @@ _WEIGHTED_KEEP_ORACLE = f"""
       SELECT doc_id + 1000000 AS doc_id, text, lang,
              'mirror/archive' AS source, n_chars
       FROM documents WHERE doc_id % 40 = 0),
-    n AS (SELECT *, {_NORM_DUCK.format(c='text')} AS norm FROM d),
+    n AS (SELECT *, {NORMALIZE_SQL.format(col='text')} AS norm FROM d),
     g AS (SELECT *, min(doc_id) OVER (PARTITION BY norm) AS group_id,
                  count(*) OVER (PARTITION BY norm) AS gsz
           FROM n WHERE length(norm) > 0),

@@ -251,22 +251,52 @@ def _warm(corpus: str) -> None:
                 pass
 
 
+def _run_rep(cmd: list[str], cwd: str | None = None) -> str:
+    """Run one rep to completion and return its stdout; a non-zero exit
+    raises CalledProcessError.
+
+    A SIGTERM (handled by _print_partial_on_sigterm) that lands while Popen
+    is still starting the rep would raise before anything holds the child,
+    which then runs on orphaned. So SIGTERM is held back until Popen has
+    returned and delivered inside the block that kills and reaps the rep on
+    any exception. It is held back by swapping the handler, not by
+    ``signal.pthread_sigmask``: a mask covers only the calling thread, and
+    pyarrow's pool threads (started by the corpus write) leave SIGTERM
+    unblocked, so the kernel would hand the signal to one of them and the
+    handler would still run inside Popen; a blocked mask would also be
+    inherited by the rep."""
+    import signal
+    import subprocess
+
+    held: list[int] = []
+    handler = signal.signal(signal.SIGTERM, lambda signum, frame: held.append(signum))
+    try:
+        proc = subprocess.Popen(
+            cmd, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, cwd=cwd
+        )
+    finally:
+        signal.signal(signal.SIGTERM, handler)
+    with proc:  # on exit: close the pipes, reap the rep
+        try:
+            if held:
+                signal.raise_signal(signal.SIGTERM)
+            out, err = proc.communicate()
+        except BaseException:
+            proc.kill()
+            raise
+    if proc.returncode:
+        raise subprocess.CalledProcessError(proc.returncode, cmd, out, err)
+    return out
+
+
 def _run_pipeline_subprocess(cores: int, corpus: str) -> dict:
     """One parallelism level in a fresh process — identical cold start for
     every level (no warm-JIT or leftover-cache asymmetry)."""
-    import subprocess
-
     cmd = [sys.executable, os.path.join("tools", "bench_pipeline.py"), str(cores), corpus]
     if PIN_CPUS:
         cmd = ["taskset", "-c", f"0-{cores - 1}" if cores > 1 else "0"] + cmd
-    out = subprocess.run(
-        cmd,
-        capture_output=True,
-        text=True,
-        check=True,
-        cwd=os.path.dirname(os.path.abspath(__file__)),
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    out = _run_rep(cmd, cwd=os.path.dirname(os.path.abspath(__file__)))
+    return json.loads(out.strip().splitlines()[-1])
 
 
 def _pin_single_thread() -> None:
@@ -324,7 +354,7 @@ def _hardware_ceiling(lo: int, hi: int) -> float:
 def _print_partial_on_sigterm(measured: dict) -> None:
     """On SIGTERM (a harness timeout), print the summary line with the keys
     measured so far plus ``"partial": true`` and exit 143. The exit is
-    raised as SystemExit in the main thread, so a ``subprocess.run`` that is
+    raised as SystemExit in the main thread, so the _run_rep that is
     waiting on a rep kills that rep on the way out."""
     import signal
 

@@ -12,6 +12,8 @@ import sys
 import textwrap
 import time
 
+import pytest
+
 sys.path.insert(0, "/root/repo")
 
 import bench
@@ -189,6 +191,55 @@ def test_sigterm_prints_partial_line_and_kills_rep():
         except ProcessLookupError:
             alive = False
         assert not alive, "the rep in flight outlived the SIGTERM'd bench"
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+        if rep is not None:
+            try:
+                os.kill(rep, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+
+
+@pytest.mark.parametrize("when", ["start_up", "waiting"])
+def test_sigterm_while_a_rep_starts_kills_the_rep(when):
+    """bench._run_rep kills and reaps its rep on a SIGTERM that lands while
+    Popen is still starting it (the child is exec'd, Popen has not returned:
+    the wrapped _execute_child signals there), and on one that lands while
+    it waits on the rep."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = textwrap.dedent(
+        f"""
+        import os, signal, subprocess, sys
+        sys.path.insert(0, {repo!r})
+        import bench
+        bench._print_partial_on_sigterm({{"sf": "0.1"}})
+        start = subprocess.Popen._execute_child
+
+        def execute_child(self, *args, **kwargs):
+            start(self, *args, **kwargs)
+            print(self.pid, flush=True)
+            if {when!r} == "start_up":
+                os.kill(os.getpid(), signal.SIGTERM)
+
+        subprocess.Popen._execute_child = execute_child
+        bench._run_rep(["sleep", "30"])
+        """
+    )
+    proc = subprocess.Popen(
+        [sys.executable, "-c", child], stdout=subprocess.PIPE, text=True, cwd=repo
+    )
+    rep = None
+    try:
+        rep = int(proc.stdout.readline())
+        if when == "waiting":
+            time.sleep(0.3)
+            proc.send_signal(signal.SIGTERM)
+        out, _ = proc.communicate(timeout=10)
+        assert proc.returncode == 143
+        assert json.loads(out.strip().splitlines()[-1]) == {"sf": "0.1", "partial": True}
+        with pytest.raises(ProcessLookupError):
+            os.kill(rep, 0)  # killed and reaped, not left running orphaned
     finally:
         if proc.poll() is None:
             proc.kill()

@@ -15,6 +15,9 @@ import os
 import pytest
 
 SF_0001 = "/root/testdata/sf0.001"
+SF_001 = "/root/testdata/sf0.01"
+#: sha256 of json.dumps(oracle_sql(), sort_keys=True), see the last test
+ORACLE_TEXT_SHA256 = "42838c28a64f94d6a9531ba1661d9f5038e800d4fb9e731fea7cd639f0fb47c5"
 TOOLS = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
 
 
@@ -57,3 +60,24 @@ def test_driver_query_matches_duckdb_oracle(spark, name):
     assert sorted(got.columns) == sorted(want.columns)
     value_hash = _value_hash()
     assert value_hash(got) == value_hash(want)
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_001), reason="driver testdata absent")
+def test_oracle_text_changes_only_on_purpose():
+    """The whole oracle text, pinned by digest. A run whose oracle text
+    differs is graded as a changed harness (``harness_changed``), so the
+    digest moves only with a change declared in CHANGES.md (the ROADMAP
+    guardrail on the oracle SQL); update ORACLE_TEXT_SHA256 in that change.
+
+    Export paths are part of the text. ``_sigs_parquet_path`` keys on the
+    signature config fields and ``KERNEL_VERSION``. ``_mm_export_paths``
+    hashes the bytes of transcript_dedup/multimodal.py, so ANY edit to that
+    file, even to a comment, moves the ``doc_multimodal_features`` oracle.
+    The IVF export reads the sf0.01 embeddings, hence the skip."""
+    import hashlib
+    import json
+
+    import __spark_entry__ as E
+
+    text = json.dumps(E.oracle_sql(), sort_keys=True)
+    assert hashlib.sha256(text.encode()).hexdigest() == ORACLE_TEXT_SHA256

@@ -5,8 +5,8 @@
 # run the full bracketed window-median bench and archive it. Sentinel file
 # guards against concurrent Spark work contaminating the measurement.
 #
-# THRESH defaults to bench.py's derived threshold (rolling min of the
-# recorded clean band x margin — BENCH/canary_band.json), so the gate tracks
+# THRESH defaults to bench.py's derived threshold (median of the recorded
+# clean band x margin — BENCH/canary_band.json), so the gate tracks
 # engine speedups instead of being a hand-recalibrated constant. The
 # threshold is exported as BENCH_CANARY_THRESH alongside BENCH_CANARY_T4 so
 # bench.py labels draw quality against the SAME gate the launcher used.

@@ -299,7 +299,7 @@ def _tiny_pairs(
         def probe(batches):
             import pandas as pd  # worker-side import
 
-            from ..signatures import probe_gram_matches_best
+            from ..signatures import doc_pattern_key, probe_gram_matches_best
 
             (p_arr, g_h1, g_start, g_cnt, n_tix, n_len, n_h2, n_texts) = bc.value
             # bitmap prefilter built once per task from the broadcast
@@ -317,13 +317,8 @@ def _tiny_pairs(
                 out_o: list[int] = []
                 out_t: list[int] = []
                 if idx.size:
-                    # per-doc matched-pattern key set (doc index < 2^40 and
-                    # pattern index < 2^24, as inside probe_gram_matches)
-                    patidx = np.searchsorted(p_arr, gh)
-                    key_set = np.sort(
-                        (idx.astype(np.uint64) << np.uint64(24))
-                        | patidx.astype(np.uint64)
-                    )
+                    # per-doc matched-pattern key set
+                    key_set = np.sort(doc_pattern_key(idx, np.searchsorted(p_arr, gh)))
                     # fan each h1 match out to its needle group (vectorized)
                     g = np.searchsorted(g_h1, gh)
                     np.minimum(g, g_h1.size - 1, out=g)
@@ -345,9 +340,7 @@ def _tiny_pairs(
                     cand_doc, cand_ndl = cand_doc[keep], cand_ndl[keep]
                     # second-anchor membership, one bulk searchsorted
                     h2 = n_h2[cand_ndl]
-                    keys = (cand_doc.astype(np.uint64) << np.uint64(24)) | np.where(
-                        h2 >= 0, h2, 0
-                    ).astype(np.uint64)
+                    keys = doc_pattern_key(cand_doc, np.where(h2 >= 0, h2, 0))
                     pos = np.searchsorted(key_set, keys)
                     np.minimum(pos, key_set.size - 1, out=pos)
                     ok = (h2 < 0) | (key_set[pos] == keys)

@@ -10,17 +10,27 @@ Graft analogue: the reference's per-record black-box extraction
 (``music-metadata.parseFile``, /root/reference/src/metadata.ts:11-13) becomes
 normalize -> k-shingle -> MinHash/SimHash per conversation.
 
-Hashing scheme (all deterministic, seedable, no wall clock):
-  token   -> uint64: polynomial hash of its UTF-8 bytes, length-salted,
-             then splitmix64 (stable across processes, unlike Python's
-             salted hash())
-  shingle -> uint64: polynomial combine of k consecutive token hashes,
-             then splitmix64
+Hashing scheme (all deterministic, seedable, no wall clock). Every hash is
+built from one polynomial pass, ``_prefix`` (prefix sums of x[j] * base^j
+mod 2^64 plus inverse powers), and ``_windows`` (the position-normalized
+hash of every k-window of that pass):
+  token   -> uint64: polynomial hash of its UTF-8 bytes (base P), length-
+             salted, then splitmix64 (stable across processes, unlike
+             Python's salted hash())
+  shingle -> uint64: k-window of the token hashes (base Q), then splitmix64
+  gram    -> uint64: k-byte window of the UTF-8 bytes (base P); the raw
+             value is the tiny-path probe's, splitmix64(raw) % mod == 0
+             selects the substring detector's sampled grams
   MinHash: num_perm universal-ish permutations h_i(x) = a_i*x + b_i mod 2^64
            (multiply-add with natural uint64 wraparound), sig_i = min over
            the doc's shingle hashes.
   SimHash: 64-bit, token unigrams weighted by count; bit votes summed
            vectorized, sign -> bit.
+
+The C kernel (_sigkernel.c) computes the same values over a whole Arrow
+batch per call; ``_pack`` lays the batch out for both of its entry points
+(signatures and the pattern probe), and the numpy per-doc functions here
+are its reference.
 """
 
 from __future__ import annotations
@@ -58,21 +68,17 @@ def minhash_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
 
 _POLY_P = _U64(0x100000001B3)  # FNV-ish odd base (invertible mod 2^64)
 _POLY_Q = _U64(0x9E3779B97F4A7C15)  # golden-ratio odd base for shingle combine
-_POLY_P_INV = _U64(pow(0x100000001B3, -1, 1 << 64))
-_POLY_Q_INV = _U64(pow(0x9E3779B97F4A7C15, -1, 1 << 64))
 
 _PowCache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
 
-def _powers(base_key: int, n: int) -> tuple[np.ndarray, np.ndarray]:
+def _powers(base: np.uint64, n: int) -> tuple[np.ndarray, np.ndarray]:
     """(base^j, base^-j) for j < n — grown on demand, shared across calls
     (the per-call cumprod was the kernel hot spot)."""
-    base, inv = (
-        (_POLY_P, _POLY_P_INV) if base_key == 0 else (_POLY_Q, _POLY_Q_INV)
-    )
-    pw, ipw = _PowCache.get(base_key, (None, None))
+    pw, ipw = _PowCache.get(int(base), (None, None))
     if pw is None or pw.size < n:
         size = max(n, 4096, 0 if pw is None else 2 * pw.size)
+        inv = _U64(pow(int(base), -1, 1 << 64))
         with np.errstate(over="ignore"):
             npw = np.empty(size, dtype=np.uint64)
             npw[0] = _U64(1)
@@ -80,9 +86,36 @@ def _powers(base_key: int, n: int) -> tuple[np.ndarray, np.ndarray]:
             nipw = np.empty(size, dtype=np.uint64)
             nipw[0] = _U64(1)
             np.cumprod(np.full(size - 1, inv, dtype=np.uint64), out=nipw[1:])
-        _PowCache[base_key] = (npw, nipw)
+        _PowCache[int(base)] = (npw, nipw)
         pw, ipw = npw, nipw
     return pw, ipw
+
+
+def _prefix(x: np.ndarray, base: np.uint64) -> tuple[np.ndarray, np.ndarray]:
+    """The one polynomial pass every hash here is built from: prefix sums
+    s[i] = sum_{j<i} x[j] * base^j (mod 2^64, s[0] = 0) of a uint64 array,
+    and the inverse powers ipw[j] = base^-j, so (s[e] - s[b]) * ipw[b] is
+    the hash of x[b:e] as if it started at position 0. _sigkernel.c
+    computes the same values per window with a rolling update."""
+    n = x.size
+    pw, ipw = _powers(base, n)
+    s = np.zeros(n + 1, dtype=np.uint64)
+    np.cumsum(x * pw[:n], out=s[1:])
+    return s, ipw
+
+
+def _windows(s: np.ndarray, ipw: np.ndarray, k: int) -> np.ndarray:
+    """Position-normalized hashes of every k-window of _prefix's input, in
+    order; empty when the input is shorter than k."""
+    n = s.size - 1
+    if n < k:
+        return np.empty(0, dtype=np.uint64)
+    return (s[k:] - s[: n - k + 1]) * ipw[: n - k + 1]
+
+
+def _utf8(text: str) -> np.ndarray:
+    """The UTF-8 bytes of a text as a uint64 array (_prefix's input)."""
+    return np.frombuffer(text.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
 
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:
@@ -96,30 +129,31 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
         return x ^ (x >> _U64(31))
 
 
-def _token_hashes(norm_text: str) -> np.ndarray:
-    """Vectorized per-token hashes of a normalized ('a b c') document.
-
-    One prefix-sum polynomial pass over the UTF-8 bytes; token hash =
-    splitmix64 of (poly hash of token bytes, length-salted). No per-string
-    Python — this replaced a blake2b-per-token loop that dominated the
-    kernel at 60k docs.
-    """
-    data = norm_text.encode("utf-8")
-    n = len(data)
+def _tokens(x: np.ndarray, s: np.ndarray, ipw: np.ndarray) -> np.ndarray:
+    """Token hashes of normalized text from its byte prefix sums: splitmix64
+    of (poly hash of the token's bytes, length-salted). Spaces are single
+    separators in normalized text; empty text has no tokens."""
+    n = x.size
     if n == 0:
         return np.empty(0, dtype=np.uint64)
-    x = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
-    pw, ipw = _powers(0, n)
-    with np.errstate(over="ignore"):
-        s = np.zeros(n + 1, dtype=np.uint64)
-        np.cumsum(x * pw[:n], out=s[1:])
-        # token boundaries: spaces are single separators in normalized text
-        spaces = np.flatnonzero(x == _U64(32))
-        starts = np.concatenate(([0], spaces + 1))
-        ends = np.concatenate((spaces, [n]))
-        h = (s[ends] - s[starts]) * ipw[starts]
-        h = h * _POLY_Q + (ends - starts).astype(np.uint64)  # length salt
-        return _splitmix64(h)
+    spaces = np.flatnonzero(x == _U64(32))
+    starts = np.concatenate(([0], spaces + 1))
+    ends = np.concatenate((spaces, [n]))
+    h = (s[ends] - s[starts]) * ipw[starts]
+    return _splitmix64(h * _POLY_Q + (ends - starts).astype(np.uint64))
+
+
+def _token_hashes(norm_text: str) -> np.ndarray:
+    """Per-token hashes of a normalized ('a b c') document."""
+    x = _utf8(norm_text)
+    return _tokens(x, *_prefix(x, _POLY_P))
+
+
+def _sample(raw: np.ndarray, mod: int) -> np.ndarray:
+    """The unique sampled grams among raw gram hashes: splitmix64, kept iff
+    the mixed hash is 0 mod `mod`."""
+    h = _splitmix64(raw)
+    return np.unique(h[h % _U64(mod) == _U64(0)])
 
 
 def shingle_hashes(norm_text: str, k: int) -> np.ndarray:
@@ -139,16 +173,7 @@ def shingle_hashes_from_tokens(tok: np.ndarray, k: int) -> np.ndarray:
     m = tok.size
     if m == 0:
         return np.empty(0, dtype=np.uint64)
-    kk = min(k, m)
-    # shared power table (bit-identical to the per-call cumprods it
-    # replaced — same cumprod of the same constants; the two per-call
-    # cumprods plus a bigint pow were a measurable slice of the kernel)
-    pw, ipw = _powers(1, m)
-    with np.errstate(over="ignore"):
-        s = np.zeros(m + 1, dtype=np.uint64)
-        np.cumsum(tok * pw[:m], out=s[1:])
-        h = (s[kk:] - s[: m - kk + 1]) * ipw[: m - kk + 1]
-        return np.unique(_splitmix64(h))
+    return np.unique(_splitmix64(_windows(*_prefix(tok, _POLY_Q), min(k, m))))
 
 
 _EMPTY_SIG_FILL = _U64(0xFFFFFFFFFFFFFFFF)
@@ -196,25 +221,13 @@ def sampled_gram_hashes(norm_text: str, k: int, mod: int) -> np.ndarray:
     """Content-defined sampled k-char-gram hashes (substring detector blocking).
 
     Rolling polynomial hash over the UTF-8 bytes of the normalized text; a
-    gram is *sampled* iff ``hash % mod == 0``. Selection is content-defined
-    (position-independent), so if doc A is a contiguous substring of doc B,
-    every sampled gram of A is also a sampled gram of B — the containment
-    candidate guarantee. Returns the unique sampled hashes (uint64).
+    gram is *sampled* iff ``splitmix64(hash) % mod == 0``. Selection is
+    content-defined (position-independent), so if doc A is a contiguous
+    substring of doc B, every sampled gram of A is also a sampled gram of
+    B — the containment candidate guarantee. Returns the unique sampled
+    hashes (uint64).
     """
-    data = norm_text.encode("utf-8")
-    n = len(data)
-    if n < k:
-        return np.empty(0, dtype=np.uint64)
-    x = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
-    # shared power table — bit-identical to the per-call cumprods + bigint
-    # pow it replaced (same cumprod of the same constants)
-    pw, ipw = _powers(0, n)
-    with np.errstate(over="ignore"):
-        s = np.zeros(n + 1, dtype=np.uint64)
-        np.cumsum(x * pw[:n], out=s[1:])
-        h = _splitmix64((s[k:] - s[: n - k + 1]) * ipw[: n - k + 1])
-    sel = h[h % _U64(mod) == _U64(0)]
-    return np.unique(sel)
+    return _sample(raw_gram_hashes(norm_text, k), mod)
 
 
 def raw_gram_hashes(norm_text: str, k: int) -> np.ndarray:
@@ -224,16 +237,7 @@ def raw_gram_hashes(norm_text: str, k: int) -> np.ndarray:
     resistance of the 64-bit polynomial is enough and the avalanche +
     unique-sort passes are skipped). Pattern side and probe side of
     probe_gram_matches both live in this value space."""
-    data = norm_text.encode("utf-8")
-    n = len(data)
-    if n < k:
-        return np.empty(0, dtype=np.uint64)
-    x = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
-    pw, ipw = _powers(0, n)
-    with np.errstate(over="ignore"):
-        s = np.zeros(n + 1, dtype=np.uint64)
-        np.cumsum(x * pw[:n], out=s[1:])
-        return (s[k:] - s[: n - k + 1]) * ipw[: n - k + 1]
+    return _windows(*_prefix(_utf8(norm_text), _POLY_P), k)
 
 
 _PROBE_BITMAP_BITS = 22  # 2^22-slot presence filter on the hash low bits
@@ -250,6 +254,49 @@ def build_pattern_bitmap(pat_arr: np.ndarray) -> np.ndarray:
     mask = _U64((1 << _PROBE_BITMAP_BITS) - 1)
     bm[(pat_arr.view(np.uint64) & mask).astype(np.int64)] = True
     return bm
+
+
+def _pack(texts: list) -> tuple[np.ndarray, np.ndarray]:
+    """The batch layout both C entry points read (and the numpy probe's):
+    the UTF-8 bytes of all texts joined (uint8) and int64 offsets, doc d
+    being bytes[offs[d]:offs[d + 1]]."""
+    enc = [t.encode("utf-8") for t in texts]
+    offs = np.zeros(len(enc) + 1, dtype=np.int64)
+    np.cumsum(np.fromiter(map(len, enc), dtype=np.int64, count=len(enc)), out=offs[1:])
+    data = np.frombuffer(b"".join(enc), dtype=np.uint8)
+    if data.size == 0:
+        data = np.zeros(1, dtype=np.uint8)  # non-null pointer for ctypes
+    return data, offs
+
+
+# A (doc, pattern) match packed into one uint64, so that one np.unique both
+# dedups the matches and sorts them by doc, then pattern index: doc index in
+# the high 40 bits, pattern index in the low 24. The 24 bits hold because
+# DedupConfig.__post_init__ rejects 2 * substring_tiny_cap >= 2**24 (the
+# tiny path's pattern array holds at most two anchors per needle).
+_PAT_BITS = 24
+
+
+def doc_pattern_key(doc: np.ndarray, pat: np.ndarray) -> np.ndarray:
+    """uint64 keys of (doc index, pattern index) pairs."""
+    return (doc.astype(np.uint64) << _U64(_PAT_BITS)) | pat.astype(np.uint64)
+
+
+def split_doc_pattern_key(key: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(doc indices, pattern indices) of doc_pattern_key keys, as int64."""
+    return (
+        (key >> _U64(_PAT_BITS)).astype(np.int64),
+        (key & _U64((1 << _PAT_BITS) - 1)).astype(np.int64),
+    )
+
+
+def _unique_matches(
+    doc: np.ndarray, pat: np.ndarray, pat_arr: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(doc indices, matched hashes) of the distinct (doc, pattern index)
+    hits, sorted by doc, then pattern index — the probe output contract."""
+    d, p = split_doc_pattern_key(np.unique(doc_pattern_key(doc, pat)))
+    return d, pat_arr[p]
 
 
 def probe_gram_matches(
@@ -270,47 +317,28 @@ def probe_gram_matches(
     mask = _U64((1 << _PROBE_BITMAP_BITS) - 1)
     out_idx: list[np.ndarray] = []
     out_gh: list[np.ndarray] = []
-    enc = [t.encode("utf-8") for t in texts]
+    data, offs = _pack(texts)
     i = 0
-    while i < len(enc):
-        j, total = i, 0
-        while j < len(enc) and (total == 0 or total + len(enc[j]) <= _PROBE_CHUNK):
-            total += len(enc[j])
-            j += 1
-        chunk = enc[i:j]
-        lens = np.array([len(e) for e in chunk], dtype=np.int64)
-        buf = b"".join(chunk)
-        n = len(buf)
-        base = i
-        i = j
-        if n < k:
-            continue
-        x = np.frombuffer(buf, dtype=np.uint8).astype(np.uint64)
-        pw, ipw = _powers(0, n)
-        with np.errstate(over="ignore"):
-            s = np.zeros(n + 1, dtype=np.uint64)
-            np.cumsum(x * pw[:n], out=s[1:])
-            h = (s[k:] - s[: n - k + 1]) * ipw[: n - k + 1]
-            cand = np.flatnonzero(bitmap[(h & mask).astype(np.int64)])
+    while i < len(texts):
+        # docs i..j-1: as many as fit in _PROBE_CHUNK bytes, at least one
+        j = int(np.searchsorted(offs, offs[i] + _PROBE_CHUNK, side="right")) - 1
+        j = max(j, i + 1)
+        starts = offs[i : j + 1] - offs[i]
+        h = _windows(*_prefix(data[offs[i] : offs[j]].astype(np.uint64), _POLY_P), k)
+        base, i = i, j
+        cand = np.flatnonzero(bitmap[(h & mask).astype(np.int64)])
         if cand.size == 0:
             continue
         g = h[cand].view(np.int64)
         pos = np.searchsorted(pat_arr, g)
         np.minimum(pos, P - 1, out=pos)
         exact = pat_arr[pos] == g
-        cand, g, pos = cand[exact], g[exact], pos[exact]
-        if cand.size == 0:
-            continue
-        starts = np.concatenate(([0], np.cumsum(lens)))
+        cand, pos = cand[exact], pos[exact]
         d = np.searchsorted(starts, cand, side="right") - 1
         inside = cand + k <= starts[d + 1]  # window fits within its doc
-        d, g, pos = d[inside], g[inside], pos[inside]
-        if d.size == 0:
-            continue
-        # dedup (doc, pattern) pairs: doc index < 2^40, pattern index < 2^24
-        key = np.unique((d.astype(np.uint64) << _U64(24)) | pos.astype(np.uint64))
-        out_idx.append((key >> _U64(24)).astype(np.int64) + base)
-        out_gh.append(pat_arr[(key & _U64((1 << 24) - 1)).astype(np.int64)])
+        idx, gh = _unique_matches(d[inside], pos[inside], pat_arr)
+        out_idx.append(idx + base)
+        out_gh.append(gh)
     if not out_idx:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
     return np.concatenate(out_idx), np.concatenate(out_gh)
@@ -324,19 +352,13 @@ def _probe_native(
     window hash per doc (the numpy chunked pass discards cross-doc windows,
     the per-doc loop never creates them), consults the same low-bits
     bitmap, and binary-searches the same signed-ascending pattern array;
-    raw (doc, pattern) hits are deduped here with the numpy path's exact
-    key encoding. ~10x less compute: one streaming pass, no 8x-expanded
-    uint64 temporaries through DRAM."""
+    raw (doc, pattern) hits are deduped by the same _unique_matches. ~10x
+    less compute: one streaming pass, no 8x-expanded uint64 temporaries
+    through DRAM."""
     ndocs = len(texts)
     if ndocs == 0 or pat_arr.size == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    enc = [t.encode("utf-8") for t in texts]
-    offs = np.zeros(ndocs + 1, dtype=np.int64)
-    np.cumsum(np.fromiter((len(e) for e in enc), dtype=np.int64, count=ndocs),
-              out=offs[1:])
-    data = np.frombuffer(b"".join(enc), dtype=np.uint8)
-    if data.size == 0:
-        data = np.zeros(1, dtype=np.uint8)  # non-null pointer for ctypes
+    data, offs = _pack(texts)
     pat = np.ascontiguousarray(pat_arr, dtype=np.int64)
     bm = np.ascontiguousarray(bitmap, dtype=np.uint8)
     cap = 4096
@@ -360,15 +382,7 @@ def _probe_native(
         cap = int(n)
     if n == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    out_d, out_p = out_d[:n], out_p[:n]
-    # dedup (doc, pattern) with the numpy path's key encoding — identical
-    # (idx, gh) arrays, identical (doc, pattern-index) sort order
-    key = np.unique(
-        (out_d.astype(np.uint64) << _U64(24)) | out_p.astype(np.uint64)
-    )
-    idx = (key >> _U64(24)).astype(np.int64)
-    gh = pat[(key & _U64((1 << 24) - 1)).astype(np.int64)]
-    return idx, gh
+    return _unique_matches(out_d[:n], out_p[:n], pat)
 
 
 def probe_gram_matches_best(
@@ -397,42 +411,19 @@ def band_tuples(sig: np.ndarray, bands: int, rows: int) -> list[tuple]:
 
 
 def compute_signature_row(norm_text: str, cfg: DedupConfig, a: np.ndarray, b: np.ndarray):
-    """(minhash int list, simhash int64, n_shingles int) for one doc.
+    """(minhash int list, simhash int64, n_shingles int, sampled gram int
+    list) for one doc — the numpy fallback and the native kernel's reference.
 
-    Round-8 shape: ONE byte-level polynomial prefix-sum pass feeds both the
-    token hashes and the sampled substring grams (they were computed as two
-    independent passes over the same bytes — the per-doc encode + cumsum
-    paid twice), and ONE ``np.errstate`` context wraps the whole row (the
-    kernel's six per-call contexts were ~15%% of kernel time in cProfile —
-    seterr/geterr are surprisingly expensive per small-array call). All
-    values are bit-identical to the previous per-function path: same
-    polynomial, same constants, same order of operations
-    (tests/test_signatures.py pins Spark==Python parity either way).
+    One _prefix pass over the bytes feeds both the token hashes and the
+    sampled substring grams, and one ``np.errstate`` context wraps the whole
+    row (per-call contexts were ~15%% of kernel time in cProfile —
+    seterr/geterr are surprisingly expensive per small-array call).
     """
-    data = norm_text.encode("utf-8")
-    n = len(data)
+    x = _utf8(norm_text)
     with np.errstate(over="ignore"):
-        if n == 0:
-            th = np.empty(0, dtype=np.uint64)
-            grams = np.empty(0, dtype=np.uint64)
-        else:
-            x = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
-            pw, ipw = _powers(0, n)
-            s = np.zeros(n + 1, dtype=np.uint64)
-            np.cumsum(x * pw[:n], out=s[1:])
-            # tokens: spaces are single separators in normalized text
-            spaces = np.flatnonzero(x == _U64(32))
-            starts = np.concatenate(([0], spaces + 1))
-            ends = np.concatenate((spaces, [n]))
-            th = (s[ends] - s[starts]) * ipw[starts]
-            th = _splitmix64(th * _POLY_Q + (ends - starts).astype(np.uint64))
-            # sampled substring grams from the SAME prefix sums
-            k2 = cfg.substring_gram_k
-            if n >= k2:
-                h = _splitmix64((s[k2:] - s[: n - k2 + 1]) * ipw[: n - k2 + 1])
-                grams = np.unique(h[h % _U64(cfg.substring_mod) == _U64(0)])
-            else:
-                grams = np.empty(0, dtype=np.uint64)
+        s, ipw = _prefix(x, _POLY_P)
+        th = _tokens(x, s, ipw)
+        grams = _sample(_windows(s, ipw, cfg.substring_gram_k), cfg.substring_mod)
         sh = shingle_hashes_from_tokens(th, cfg.shingle_k)
         sig = minhash_signature(sh, a, b)
         sim = int(simhash64_from_tokens(th))
@@ -537,8 +528,8 @@ def _native_lib():
         a, b = minhash_params(cfg)
         sigs, sims, nshs, grams = _native_batch(_NATIVE_PROBE_DOCS, cfg, a, b, lib)
         for i, t in enumerate(_NATIVE_PROBE_DOCS):
-            rs, rm, rn, rg = compute_signature_row(t, cfg, a, b)
-            if (sigs[i], sims[i], nshs[i], grams[i]) != (rs, rm, rn, rg):
+            native = (sigs[i].tolist(), sims[i], nshs[i], grams[i].tolist())
+            if native != compute_signature_row(t, cfg, a, b):
                 raise AssertionError(f"native parity probe failed on doc {i!r}")
         # pattern-probe parity: both paths over edge-case docs (sub-gram
         # short doc, multi-byte UTF-8, shared pattern across docs) with
@@ -569,25 +560,16 @@ def _native_lib():
     return _NATIVE_LIB
 
 
-def _native_batch(texts, cfg: DedupConfig, a: np.ndarray, b: np.ndarray, lib,
-                  as_arrays: bool = False):
-    """(sig lists, simhash list, n_shingles list, gram lists) via the C
-    kernel — same return contract as mapping compute_signature_row.
-
-    as_arrays=True returns the minhash rows and gram rows as int ndarray
-    views instead of Python lists (identical values; pyarrow converts both
-    to the same list<int> arrays, the ndarray form ~8x cheaper — the
-    .tolist() boxing measured ~10 us/doc, a third of the native path)."""
+def _native_batch(texts, cfg: DedupConfig, a: np.ndarray, b: np.ndarray, lib):
+    """(minhash rows, simhash list, n_shingles list, gram rows) via the C
+    kernel: compute_signature_row's values for every doc, with the minhash
+    and gram rows as int64 ndarray views, not lists (pyarrow converts both
+    to the same list<int> arrays, the ndarray form ~8x cheaper — .tolist()
+    boxing measured ~10 us/doc, a third of the native path)."""
     ndocs = len(texts)
     if ndocs == 0:
         return [], [], [], []
-    enc = [t.encode("utf-8") for t in texts]
-    offs = np.zeros(ndocs + 1, dtype=np.int64)
-    np.cumsum(np.fromiter((len(e) for e in enc), dtype=np.int64, count=ndocs),
-              out=offs[1:])
-    data = np.frombuffer(b"".join(enc), dtype=np.uint8)
-    if data.size == 0:
-        data = np.zeros(1, dtype=np.uint8)  # non-null pointer for ctypes
+    data, offs = _pack(texts)
     sig = np.empty((ndocs, cfg.num_perm), dtype=np.uint64)
     sim = np.empty(ndocs, dtype=np.int64)
     nsh = np.empty(ndocs, dtype=np.int32)
@@ -617,16 +599,10 @@ def _native_batch(texts, cfg: DedupConfig, a: np.ndarray, b: np.ndarray, lib,
         if total <= cap:
             break
         cap = int(total)
-    sig_v = sig.view(np.int64)
     bounds = np.zeros(ndocs + 1, dtype=np.int64)
     np.cumsum(gcnt, out=bounds[1:])
-    if as_arrays:
-        out_sig = list(sig_v)
-        out_grams = [grams[bounds[d]:bounds[d + 1]] for d in range(ndocs)]
-    else:
-        out_sig = sig_v.tolist()
-        out_grams = [grams[bounds[d]:bounds[d + 1]].tolist() for d in range(ndocs)]
-    return out_sig, sim.tolist(), nsh.astype(int).tolist(), out_grams
+    out_grams = [grams[bounds[d]:bounds[d + 1]] for d in range(ndocs)]
+    return list(sig.view(np.int64)), sim.tolist(), nsh.astype(int).tolist(), out_grams
 
 
 # --------------------------------------------------------------------------
@@ -665,9 +641,7 @@ def add_signatures(conv_df, cfg: DedupConfig):
                 # native batch kernel (~6x the per-row numpy path, values
                 # bit-identical — see _sigkernel.c and the parity probe)
                 texts = pdf["norm_text"].astype(str).tolist()
-                sigs, sims, counts, grams = _native_batch(
-                    texts, k, a, b, lib, as_arrays=True
-                )
+                sigs, sims, counts, grams = _native_batch(texts, k, a, b, lib)
             else:
                 # per-row numpy fallback (the native kernel's reference)
                 sigs, sims, counts, grams = [], [], [], []
